@@ -92,8 +92,10 @@ object CorpusJob {
               threshold: Double = 0.8, maxBucket: Int = 4096): DataFrame = {
     import spark.implicits._
     def label[T](stage: String)(body: => T): T = {
-      spark.sparkContext.setJobDescription(s"funnel: $stage")
-      try body finally spark.sparkContext.setJobDescription(null)
+      val sc = spark.sparkContext
+      val outer = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"funnel: $stage")
+      try body finally sc.setJobDescription(outer)
     }
     val docs = Extraction.extractAll(pages)
       .join(pages.select(col("url"), col("warc_ts")), Seq("url"))

@@ -59,15 +59,11 @@ object StreamingRun {
         // other batch's output is untouched; the level doubles as commit
         // lineage. Re-crawled urls landing in later waves coexist as new
         // versions — collapsing them is the dedup/compaction layer's job.
-        // cluster rows by their target directory before the write (the
-        // Checkpoint.writePages discipline, salt included so one hot
-        // (ts_day, url_bucket) partition still spreads over a few tasks):
-        // without it every scan task writes a fragment into every
-        // directory it touches and the table accretes tasks × dirs tiny
-        // files batch over batch — the §6 small-file failure mode
-        docs.drop("extract_ns").withColumn("batch_id", lit(batchId))
-          .repartition(col("ts_day"), col("url_bucket"),
-            pmod(hash(col("url"), lit(1)), lit(4)))
+        // cluster rows by their target directory before the write, or the
+        // table accretes tasks × dirs tiny files batch over batch — the §6
+        // small-file failure mode
+        Checkpoint.clusterByDir(
+          docs.drop("extract_ns").withColumn("batch_id", lit(batchId)))
           .write.mode("overwrite").partitionBy("batch_id", "ts_day", "url_bucket")
           .option("partitionOverwriteMode", "dynamic") // scoped to this writer
           .parquet(outDir)
@@ -213,14 +209,6 @@ object StreamingRun {
     commitNovel(spark, sessions, outDir, checkpointDir)
   }
 
-  /** Exactly-once commit for the dedup streams: `foreachBatch` has no
-    * sink batch log, so a crash between the write and the checkpoint
-    * commit replays the micro-batch — a plain append would then duplicate
-    * its rows. Leading the partition spec with `batch_id` + dynamic
-    * partition overwrite makes the replay overwrite exactly its own
-    * directory instead (the same idempotent-sink shape as
-    * [[runAvailableNow]]). Returns the number of novel rows committed.
-    */
   /** Streaming NEAR-dup corpus dedup — the continuous rendition of the
     * incremental cross-corpus MinHash dedup: every micro-batch
     * (a) self-dedups ([[graft.ops.Dedup.nearDupFilter]] — in-batch
@@ -410,6 +398,14 @@ object StreamingRun {
     byBytes.min(BigInt(batch.rdd.getNumPartitions)).toInt
   }
 
+  /** Exactly-once commit for the dedup streams: `foreachBatch` has no
+    * sink batch log, so a crash between the write and the checkpoint
+    * commit replays the micro-batch — a plain append would then duplicate
+    * its rows. Leading the partition spec with `batch_id` + dynamic
+    * partition overwrite makes the replay overwrite exactly its own
+    * directory instead (the same idempotent-sink shape as
+    * [[runAvailableNow]]). Returns the number of novel rows committed.
+    */
   private def commitNovel(spark: SparkSession, novel: DataFrame,
                           outDir: String, checkpointDir: String): Long = {
     var emitted = 0L

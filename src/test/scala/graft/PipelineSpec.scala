@@ -185,6 +185,10 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(m.where($"wall_ms" <= 0 || $"docs_per_sec" <= 0).count() === 0)
     // the instrumentation column stays out of the document sink
     assert(!spark.read.parquet(outDir).columns.contains("extract_ns"))
+    // directory clustering bounds the files every partition receives
+    val filesPerDir = parquetFilesPerDir(outDir, "ts_day=*/url_bucket=*")
+    assert(filesPerDir.nonEmpty)
+    filesPerDir.foreach { case (d, n) => assert(n >= 1 && n <= 4, s"$n files in $d") }
 
     // partial-failure resume: drop the manifest rows of half the partitions
     // and re-run — exactly the complement is re-processed
@@ -247,6 +251,39 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     intercept[IllegalArgumentException](Checkpoint.readAsOf(spark, outDir, maniDir, t1))
     // idempotent: a second expiry finds nothing
     assert(Checkpoint.expireSnapshots(spark, maniDir, t2) === 0L)
+  }
+
+  test("snapshots: a reused run id fails and leaves snapshot, manifest and metrics unchanged") {
+    val tmp = Files.createTempDirectory("graft-snap-reuse").toString
+    val (pagesDir, outDir, maniDir, metDir) =
+      (s"$tmp/pages", s"$tmp/docs", s"$tmp/manifest", s"$tmp/metrics")
+    val pages = PageGen.pages(60)
+    Checkpoint.writePages(spark.createDataset(pages).toDF(), pagesDir)
+    val t1 = new Timestamp(PageGen.EpochMs)
+    val t2 = new Timestamp(PageGen.EpochMs + 3600L * 1000)
+    assert(Checkpoint.runVersioned(spark, pagesDir, outDir, maniDir, metDir, "v1", t1) ===
+      pages.size)
+
+    val snapDir = java.nio.file.Paths.get(s"$outDir/run_id=v1")
+    def snapFiles(): Set[(String, Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(snapDir)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => (snapDir.relativize(f).toString, Files.size(f),
+          Files.getLastModifiedTime(f).toMillis))
+        .toSet
+      finally walk.close()
+    }
+    val (files0, mani0, met0) =
+      (snapFiles(), spark.read.parquet(maniDir).count(), spark.read.parquet(metDir).count())
+    assert(files0.exists(_._1.endsWith(".parquet")))
+
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Checkpoint.runVersioned(spark, pagesDir, outDir, maniDir, metDir, "v1", t2, force = true)
+    }
+    assert(snapFiles() === files0)
+    assert(spark.read.parquet(maniDir).count() === mani0)
+    assert(spark.read.parquet(metDir).count() === met0)
   }
 
   test("compaction: fragmented partitions rewrite to few files, content byte-identical") {
@@ -391,9 +428,15 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     val evalDf = evalTexts.zipWithIndex.map { case (t, i) => (s"eval$i", t) }
       .toDF("id", "text")
     val emptyBl = Seq.empty[String].toDF("blocked")
-    val funnel = CorpusJob.runFull(spark, pagesDs.toDF(), s"$tmp/wet",
-        evalDf, emptyBl, domainCap = 3, maxBucket = 64)
-      .orderBy($"ord").as[(Int, String, Long)].collect()
+    // the stage labels restore the caller's job description
+    val sc = spark.sparkContext
+    sc.setJobDescription("outer job")
+    val funnel = try {
+      val f = CorpusJob.runFull(spark, pagesDs.toDF(), s"$tmp/wet",
+          evalDf, emptyBl, domainCap = 3, maxBucket = 64)
+      assert(sc.getLocalProperty("spark.job.description") === "outer job")
+      f.orderBy($"ord").as[(Int, String, Long)].collect()
+    } finally sc.setJobDescription(null)
     assert(funnel.map(_._2).toSeq === Seq("extracted", "unblocked",
       "quality_kept", "decontaminated", "exact_unique", "neardup_survivors",
       "pii_redacted_docs", "domain_capped", "wet_records_written"))

@@ -17,4 +17,16 @@ trait SparkSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Parquet file count of every directory matching the glob `dirs`
+    * relative to `root`.
+    */
+  def parquetFilesPerDir(root: String, dirs: String): Map[String, Int] = {
+    val base = new org.apache.hadoop.fs.Path(root)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.globStatus(new org.apache.hadoop.fs.Path(base, dirs)).map { d =>
+      d.getPath.toString ->
+        fs.listStatus(d.getPath).count(_.getPath.getName.endsWith(".parquet"))
+    }.toMap
+  }
 }

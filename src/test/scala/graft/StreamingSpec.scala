@@ -46,6 +46,10 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(m.agg(sum($"docs")).as[Long].head() === fixture.size.toLong)
     assert(m.where($"wall_ms" <= 0 || $"docs_per_sec" <= 0).count() === 0)
     assert(m.columns.contains("batch_id"))
+    // directory clustering bounds the files every partition receives
+    val filesPerDir = parquetFilesPerDir(outDir, "batch_id=*/ts_day=*/url_bucket=*")
+    assert(filesPerDir.nonEmpty)
+    filesPerDir.foreach { case (d, n) => assert(n >= 1 && n <= 4, s"$n files in $d") }
   }
 
   test("stateful streaming dedup suppresses duplicates across micro-batches and runs") {
