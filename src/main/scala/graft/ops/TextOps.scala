@@ -171,7 +171,7 @@ object TextOps {
     // two actions cost an extra driver barrier per call (r06)
     val (total, nCand) = summary.agg(
         coalesce(sum(when($"token".isNull, $"cnt")), lit(0L)),
-        count_distinct(when($"token".isNotNull, $"token")))
+        count_distinct($"token"))
       .as[(Long, Long)].head()
     val cand = summary.where($"token".isNotNull).select($"token").distinct()
     // candidate cardinality is bounded by capacity × numPartitions — at

@@ -53,16 +53,21 @@ object Checkpoint {
       pmod(hash(col("url"), lit(1)), lit(FilesPerDir)))
 
   /** C8: resume anti-join — keep only pages whose partition has no
-    * committed manifest row. Partition-pruned at the Parquet scan when
-    * `pages` is read from the partitioned layout.
+    * committed manifest row. NOT partition-pruned: the join keys are
+    * recomputed from `warc_ts`/`url` ([[withPartitionCols]]) rather than
+    * taken from the stored `ts_day=`/`url_bucket=` directories, so the
+    * scan reads every page row and the anti-join drops the committed ones
+    * afterwards (perfbench's `crawl_resume` workload reads all 3048 page
+    * rows to keep 14.3 % of them).
     */
   def resume(pages: DataFrame, manifest: DataFrame): DataFrame =
     withPartitionCols(pages).join(
       manifest.select(col("ts_day"), col("url_bucket")).distinct(),
       Seq("ts_day", "url_bucket"), "left_anti")
 
-  /** Lineage manifest rows for a completed run over `pagesPart`
-    * (must carry ts_day/url_bucket). `committed_ts` is injected, never
+  /** Lineage manifest rows for a completed run over `pagesPart`, one
+    * row per page — the pages themselves or their extracted docs (must
+    * carry ts_day/url_bucket). `committed_ts` is injected, never
     * wall-clock — determinism contract (reference timestamps are
     * nondeterministic and excluded from identity, `ocr.py:68`).
     */
@@ -77,10 +82,13 @@ object Checkpoint {
 
   /** Fused per-row extraction that threads the partition columns through
     * the typed stage (no post-extraction rejoin on url) and measures each
-    * document's extraction nanos task-side — the `extract_ns` column feeds
-    * the B6 wall-clock/docs-per-sec metrics and is dropped before the
-    * document sink (instrumentation, not data; nondeterministic by nature
-    * and excluded from the byte-identity contract like all timestamps).
+    * document task-side: `extract_ns` is its extraction nanos and
+    * `bytes_in` its payload's byte length (null for a null payload, like
+    * `octet_length`). Both feed the B6 metrics ([[metricsParted]]), so the
+    * rollup never re-reads the raw pages, and both are dropped before the
+    * document sink (instrumentation, not data; `extract_ns` is
+    * nondeterministic by nature and excluded from the byte-identity
+    * contract like all timestamps).
     */
   def extractParted(pagesPart: DataFrame): DataFrame = {
     val spark = pagesPart.sparkSession
@@ -91,44 +99,47 @@ object Checkpoint {
       .mapPartitions(_.map { case (url, html, day, bucket) =>
         val t0 = System.nanoTime()
         val d = Extraction.extractDoc(RawDoc(url, html))
-        (d, day, bucket, System.nanoTime() - t0)
+        (d, day, bucket, System.nanoTime() - t0, Option(html).map(_.length.toLong))
       })
       .select(col("_1.*"), col("_2").as("ts_day"), col("_3").as("url_bucket"),
-        col("_4").as("extract_ns"))
+        col("_4").as("extract_ns"), col("_5").as("bytes_in"))
       .withColumn("document_type", Extraction.documentType(col("labels")))
   }
 
-  /** B6: per-partition extraction metrics for a run's input `pagesPart`
-    * and its extracted `docsParted`, both carrying the partition columns.
-    * `octet_length` gives exact byte counts (UTF-8 for text, raw for
-    * binary). Both sides aggregate to per-partition rows FIRST and join
-    * those (tens of rows) — never every document on url, which at corpus
-    * scale would be a full shuffle of the extracted text. `docsParted`
-    * must carry `extract_ns` ([[extractParted]]); `wall_ms` is the
-    * partition's summed extraction time and `docs_per_sec = docs /
-    * wall_seconds` — the per-partition "docs/sec" the north rule names in
-    * its metrics-table wording.
+  /** B6: per-partition extraction metrics of a run's extracted
+    * `docsParted` ([[extractParted]] output: one row per input page,
+    * carrying the partition columns, `extract_ns` and `bytes_in`). ONE
+    * `groupBy(ts_day, url_bucket)` over the docs alone — the input side
+    * (`docs`, `bytes_in`) was measured task-side during extraction, so the
+    * rollup reads no page column and joins nothing. `octet_length` gives
+    * exact UTF-8 byte counts of the text; `wall_ms` is the partition's
+    * summed extraction time and `docs_per_sec = docs / wall_seconds` — the
+    * per-partition "docs/sec" the north rule names in its metrics-table
+    * wording.
     */
-  def metricsParted(pagesPart: DataFrame, docsParted: DataFrame,
-                    runId: String): DataFrame = {
-    val keys = Seq("ts_day", "url_bucket")
-    val inAgg = pagesPart.groupBy(keys.map(col): _*)
+  def metricsParted(docsParted: DataFrame, runId: String): DataFrame =
+    docsParted.groupBy(col("ts_day"), col("url_bucket"))
       .agg(count(lit(1)).as("docs"),
-        sum(octet_length(col("html")).cast("long")).as("bytes_in"))
-    val outAgg = docsParted.groupBy(keys.map(col): _*)
-      .agg(sum(octet_length(col("extracted_text")).cast("long")).as("bytes_out"),
+        sum(col("bytes_in")).as("bytes_in"),
+        sum(octet_length(col("extracted_text")).cast("long")).as("bytes_out"),
         sum(col("content_blocks")).as("content_blocks"),
         sum(col("boiler_blocks")).as("boiler_blocks"),
         sum((!col("ok")).cast("long")).as("failed"),
         sum(col("extract_ns")).as("extract_ns"))
-    inAgg.join(outAgg, keys)
       .select(col("ts_day"), col("url_bucket"), col("docs"), col("bytes_in"),
         col("bytes_out"), col("content_blocks"), col("boiler_blocks"), col("failed"),
         round(col("extract_ns") / 1e6, 3).as("wall_ms"),
         round(col("docs") / greatest(col("extract_ns"), lit(1L)).cast("double") * 1e9, 1)
           .as("docs_per_sec"))
       .withColumn("run_id", lit(runId))
-  }
+
+  /** [[metricsParted]] for callers that still pass the input pages too:
+    * the frozen `pipe06_metrics` query of `SparkEntry` calls this form.
+    * `pagesPart` is ignored — `docsParted` already carries every input
+    * measure, so there is one rollup body, not two.
+    */
+  def metricsParted(pagesPart: DataFrame, docsParted: DataFrame,
+                    runId: String): DataFrame = metricsParted(docsParted, runId)
 
   /** A7/F2: the manifest listing — newest commit first (the reference's
     * mtime-desc file listing, `routes.py:44-60`).
@@ -150,7 +161,9 @@ object Checkpoint {
     * (dynamic partition overwrite = Iceberg-style atomic-per-partition
     * commit), then append metrics + manifest. Crash before the manifest
     * append → the partition is re-processed next run and its output
-    * partition is overwritten, not duplicated — idempotent.
+    * partition is overwritten, not duplicated — idempotent. Raw payloads
+    * are read once, by the extraction; no page column is cached (see
+    * [[commit]]).
     */
   def run(spark: SparkSession, pagesDir: String, outDir: String,
           manifestDir: String, metricsDir: String,
@@ -184,10 +197,18 @@ object Checkpoint {
   }
 
   /** The one commit sequence of [[run]] and [[runVersioned]]: probe the
-    * manifest, select the pages to do (`todoOf(pages, manifest)`),
-    * extract, write the docs to `target` with the save mode `saveMode`
-    * sets, then append the metrics and, last, the manifest rows. Returns
-    * the number of pages processed.
+    * manifest, select the pages to do (`todoOf(pages, manifest)`), count
+    * them, extract, write the docs to `target` with the save mode
+    * `saveMode` sets, then append the metrics and, last, the manifest
+    * rows. Returns the number of pages processed.
+    *
+    * Raw payloads are read once. The pages to do are NOT cached: the
+    * count is its own scan, which column pruning narrows to at most
+    * `url`/`warc_ts`, and only the extraction reads `html`. The extracted
+    * docs are persisted once and feed the docs write, the metrics rollup
+    * and the manifest aggregate — every input measure the metrics need
+    * rides on them ([[extractParted]]). Each step's jobs carry a
+    * `checkpoint: …` description ([[JobLabel]]).
     */
   private def commit(spark: SparkSession, pagesDir: String,
                      manifestDir: String, metricsDir: String,
@@ -196,8 +217,10 @@ object Checkpoint {
                      saveMode: DataFrameWriter[Row] => DataFrameWriter[Row]): Long = {
     val pages = spark.read.parquet(pagesDir)
     val manifest = readManifest(spark, manifestDir)
-    val todo = todoOf(pages, manifest).cache()
-    val nTodo = todo.count()
+    val todo = todoOf(pages, manifest)
+    def step[T](name: String)(body: => T): T =
+      JobLabel(spark.sparkContext, s"checkpoint: $name")(body)
+    val nTodo = step("todo count")(todo.count())
     if (nTodo > 0) {
       // thread ts_day/url_bucket THROUGH the fused per-row extraction —
       // re-joining extractAll's output on url would shuffle every
@@ -205,17 +228,19 @@ object Checkpoint {
       // of the write path at corpus scale; this plan has none before the
       // partitioned write
       val docs = extractParted(todo)
-        .persist() // consumed twice: partitioned write + metrics rollup
+        .persist() // consumed three times: docs write, metrics, manifest
       // the clustering shuffle moves the EXTRACTED text (already
       // persisted), not the raw payloads
-      saveMode(clusterByDir(docs.drop("extract_ns"))
-        .write.partitionBy("ts_day", "url_bucket"))
-        .parquet(target)
-      metricsParted(todo, docs, runId).write.mode("append").parquet(metricsDir)
-      manifestRows(todo, runId, runTs, target).write.mode("append").parquet(manifestDir)
+      step("extract+write")(saveMode(
+        clusterByDir(docs.drop("extract_ns", "bytes_in"))
+          .write.partitionBy("ts_day", "url_bucket"))
+        .parquet(target))
+      step("metrics")(
+        metricsParted(docs, runId).write.mode("append").parquet(metricsDir))
+      step("manifest")(
+        manifestRows(docs, runId, runTs, target).write.mode("append").parquet(manifestDir))
       docs.unpersist()
     }
-    todo.unpersist()
     nTodo
   }
 
@@ -424,10 +449,12 @@ object Checkpoint {
         if (files.length > maxFilesPerPartition) {
           val bytes = files.map(_.getLen).sum
           val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-          spark.sparkContext.setJobDescription(s"compact $dir")
-          val df = spark.read.parquet(dir.toString)
           val tmp = new org.apache.hadoop.fs.Path(dir.getParent, dir.getName + ".compact")
-          df.coalesce(nOut).write.mode("overwrite").parquet(tmp.toString)
+          // labelled on this pool thread and restored after, so no later
+          // rewrite (or job) on the thread inherits another dir's label
+          JobLabel(spark.sparkContext, s"compact $dir")(
+            spark.read.parquet(dir.toString)
+              .coalesce(nOut).write.mode("overwrite").parquet(tmp.toString))
           require(fs.delete(dir, true), s"could not remove $dir")
           require(fs.rename(tmp, dir), s"swap failed for $dir")
           rewritten.incrementAndGet()

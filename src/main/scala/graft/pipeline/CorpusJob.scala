@@ -91,12 +91,8 @@ object CorpusJob {
               shingleK: Int = 3, numHashes: Int = 32, numBands: Int = 8,
               threshold: Double = 0.8, maxBucket: Int = 4096): DataFrame = {
     import spark.implicits._
-    def label[T](stage: String)(body: => T): T = {
-      val sc = spark.sparkContext
-      val outer = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"funnel: $stage")
-      try body finally sc.setJobDescription(outer)
-    }
+    def label[T](stage: String)(body: => T): T =
+      JobLabel(spark.sparkContext, s"funnel: $stage")(body)
     val docs = Extraction.extractAll(pages)
       .join(pages.select(col("url"), col("warc_ts")), Seq("url"))
       .withColumn("host", callUDF("parse_url", col("url"), lit("HOST")))

@@ -63,11 +63,12 @@ object StreamingRun {
         // table accretes tasks × dirs tiny files batch over batch — the §6
         // small-file failure mode
         Checkpoint.clusterByDir(
-          docs.drop("extract_ns").withColumn("batch_id", lit(batchId)))
+          docs.drop("extract_ns", "bytes_in").withColumn("batch_id", lit(batchId)))
           .write.mode("overwrite").partitionBy("batch_id", "ts_day", "url_bucket")
           .option("partitionOverwriteMode", "dynamic") // scoped to this writer
           .parquet(outDir)
-        Checkpoint.metricsParted(batch, docs, runId)
+        // docs-only rollup: the batch's source files are not re-scanned
+        Checkpoint.metricsParted(docs, runId)
           .withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(metricsDir)
         docs.unpersist()

@@ -183,8 +183,20 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(m.agg(sum($"failed")).as[Long].head() === 0L)
     assert(m.where($"bytes_in" <= 0 || $"bytes_out" <= 0).count() === 0)
     assert(m.where($"wall_ms" <= 0 || $"docs_per_sec" <= 0).count() === 0)
-    // the instrumentation column stays out of the document sink
-    assert(!spark.read.parquet(outDir).columns.contains("extract_ns"))
+    // per partition, run1's input measures equal an independent rollup of
+    // the page table and its output bytes the docs table's text bytes
+    val keys = Seq("ts_day", "url_bucket").map(col)
+    def byPart(df: org.apache.spark.sql.DataFrame): Map[(Any, Any), Seq[Any]] =
+      df.collect().map(r => (r.get(0), r.get(1)) -> r.toSeq.drop(2)).toMap
+    val run1 = m.where($"run_id" === "run1")
+    assert(byPart(run1.select($"ts_day", $"url_bucket", $"docs", $"bytes_in")) ===
+      byPart(Checkpoint.withPartitionCols(pagesDs.toDF()).groupBy(keys: _*)
+        .agg(count(lit(1)), sum(octet_length($"html")).cast("long"))))
+    assert(byPart(run1.select($"ts_day", $"url_bucket", $"bytes_out")) ===
+      byPart(spark.read.parquet(outDir).groupBy(keys: _*)
+        .agg(sum(octet_length($"extracted_text")).cast("long"))))
+    // the instrumentation columns stay out of the document sink
+    assert(!spark.read.parquet(outDir).columns.exists(Set("extract_ns", "bytes_in")))
     // directory clustering bounds the files every partition receives
     val filesPerDir = parquetFilesPerDir(outDir, "ts_day=*/url_bucket=*")
     assert(filesPerDir.nonEmpty)
@@ -200,6 +212,95 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     val expected = Checkpoint.withPartitionCols(pagesDs.toDF())
       .where(pmod($"url_bucket", lit(2)) === 1).count()
     assert(todo.count() === expected)
+  }
+
+  test("checkpointed run: raw payloads read once, steps labelled, caller label kept") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val tmp = Files.createTempDirectory("graft-onepass").toString
+    val (pagesDir, outDir, maniDir, metDir) =
+      (s"$tmp/pages", s"$tmp/docs", s"$tmp/manifest", s"$tmp/metrics")
+    Checkpoint.writePages(pagesDs.toDF(), pagesDir)
+
+    object Plans extends AdaptiveSparkPlanHelper {
+      // every node of an executed plan (adaptive stages and subqueries
+      // included); `intoCaches` also walks the plans that built the
+      // cached relations it reads
+      def nodes(p: SparkPlan, intoCaches: Boolean): Seq[SparkPlan] =
+        collectWithSubqueries(p) { case n => n }.flatMap {
+          case m: InMemoryTableScanExec if intoCaches => m +: nodes(m.relation.cachedPlan, true)
+          case n => Seq(n)
+        }
+      def pageScans(p: SparkPlan, intoCaches: Boolean): Seq[FileSourceScanExec] =
+        nodes(p, intoCaches).collect {
+          case s: FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString.endsWith(pagesDir)) => s
+        }
+      def writes(p: SparkPlan): Seq[String] = nodes(p, false).collect {
+        case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) => c.outputPath.toString
+      }
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val qeListener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { plans.add(qe.executedPlan); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val jobListener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(labels.add)
+    }
+    val sc = spark.sparkContext
+    spark.listenerManager.register(qeListener)
+    sc.addSparkListener(jobListener)
+    sc.setJobDescription("outer job")
+    try {
+      assert(Checkpoint.run(spark, pagesDir, outDir, maniDir, metDir, "run1",
+        new Timestamp(PageGen.EpochMs)) === fixture.size)
+      assert(sc.getLocalProperty("spark.job.description") === "outer job")
+      // listener events arrive asynchronously; the manifest write is last
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while ((!plans.asScala.exists(Plans.writes(_).exists(_.endsWith(maniDir))) ||
+              !labels.contains("checkpoint: manifest")) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(qeListener)
+    }
+
+    // this run's plans: those reading the page table, directly or through a cache
+    val mine = plans.asScala.toSeq.filter(Plans.pageScans(_, intoCaches = true).nonEmpty)
+    val described = mine.map(p => s"${p.nodeName} writes=${Plans.writes(p)} scans=" +
+      Plans.pageScans(p, intoCaches = false).map(_.requiredSchema.simpleString)).mkString("\n")
+    assert(mine.exists(Plans.writes(_).exists(_.endsWith(maniDir))), described)
+    // no raw-page cache: no executed plan reads a cached relation carrying html
+    val cachedHtml = mine.flatMap(Plans.nodes(_, intoCaches = true)).collect {
+      case m: InMemoryTableScanExec if m.relation.output.exists(_.name == "html") => m
+    }
+    assert(cachedHtml.isEmpty, described)
+    // exactly one scan of the pages reads the payloads: the extraction's,
+    // which fills the docs cache the docs write, metrics and manifest share
+    val scans = mine.flatMap(Plans.pageScans(_, intoCaches = true)).distinct
+    assert(scans.count(_.requiredSchema.fieldNames.contains("html")) === 1, described)
+    // the todo count is a pruned scan of its own, reading no page payload
+    val countScans = mine.filter(Plans.writes(_).isEmpty)
+      .flatMap(Plans.pageScans(_, intoCaches = false))
+    assert(countScans.nonEmpty, described)
+    countScans.foreach(s => assert(
+      s.requiredSchema.fieldNames.toSet.intersect(Set("html", "text", "lang")).isEmpty,
+      s.requiredSchema.simpleString))
+    // every commit step ran under its own label
+    val seen = labels.asScala.toSet
+    Seq("todo count", "extract+write", "metrics", "manifest").foreach(step =>
+      assert(seen.contains(s"checkpoint: $step"), seen))
   }
 
   test("snapshots: versioned runs time-travel via readAsOf; expire removes the horizon") {

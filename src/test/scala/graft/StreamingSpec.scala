@@ -44,6 +44,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // with per-partition timing and batch lineage
     val m = spark.read.parquet(metDir)
     assert(m.agg(sum($"docs")).as[Long].head() === fixture.size.toLong)
+    assert(m.agg(sum($"bytes_in")).as[Long].head() ===
+      spark.read.parquet(pagesDir).agg(sum(octet_length($"html")).cast("long")).as[Long].head())
     assert(m.where($"wall_ms" <= 0 || $"docs_per_sec" <= 0).count() === 0)
     assert(m.columns.contains("batch_id"))
     // directory clustering bounds the files every partition receives
