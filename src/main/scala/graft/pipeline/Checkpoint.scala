@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iceberg-emulating layout + checkpoint/lineage/metrics tables
@@ -262,33 +262,46 @@ object Checkpoint {
   /** C6 second half: the cache expiry sweep (`cache_manager.py:95-116`
     * actively deletes expired per-hash files; here the memoization table
     * is compacted to live rows so dead entries stop accumulating at
-    * scale). Write-temp-then-swap keeps the read and the overwrite off
-    * the same files; the swap runs through the Hadoop `FileSystem` API
-    * (delete + rename), so the same code works on HDFS and local FS
-    * alike — never `java.io.File`, which silently no-ops on a remote
-    * filesystem. Returns removed-row count.
+    * scale), a [[rewriteKeeping]] of the live rows. Returns removed-row
+    * count.
     */
   def sweepExpired(spark: SparkSession, cacheDir: String,
-                   asOf: Timestamp): Long = {
-    val cache = spark.read.parquet(cacheDir)
-    val liveCond = col("committed_ts") + expr("INTERVAL 24 HOURS") > lit(asOf)
-    val live = cache.where(liveCond)
-    // one census scan for both counts (two count() actions scanned the
-    // table twice, r06); the rewrite below re-reads only when compacting
-    val counts = cache.agg(
-      count(lit(1)).as("total"),
-      count(when(liveCond, lit(1))).as("keep")).head()
-    val (total, keep) = (counts.getLong(0), counts.getLong(1))
-    if (keep < total) {
-      val tmp = cacheDir + ".compact"
-      live.write.mode("overwrite").parquet(tmp)
-      val target = new org.apache.hadoop.fs.Path(cacheDir)
-      val side = new org.apache.hadoop.fs.Path(tmp)
-      val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(fs.delete(target, true), s"could not remove old cache at $cacheDir")
-      require(fs.rename(side, target), s"swap failed for $cacheDir")
+                   asOf: Timestamp): Long =
+    rewriteKeeping(spark, cacheDir,
+      col("committed_ts") + expr("INTERVAL 24 HOURS") > lit(asOf), ".compact")
+
+  /** Filtered rewrite of the table at `dir` down to the rows where `keep`
+    * is true: one census scan counts both sides (two count() actions
+    * scanned the table twice, r06), and only when rows go is the table
+    * re-read, written to `dir + suffix` and swapped in ([[swapIn]]).
+    * Write-temp-then-swap keeps the read and the overwrite off the same
+    * files. Returns the removed-row count.
+    */
+  private def rewriteKeeping(spark: SparkSession, dir: String, keep: Column,
+                             suffix: String): Long = {
+    val table = spark.read.parquet(dir)
+    val counts = table.agg(count(lit(1)), count(when(keep, lit(1)))).head()
+    val (total, kept) = (counts.getLong(0), counts.getLong(1))
+    if (kept < total) {
+      val tmp = dir + suffix
+      table.where(keep).write.mode("overwrite").parquet(tmp)
+      val target = new org.apache.hadoop.fs.Path(dir)
+      swapIn(target.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        new org.apache.hadoop.fs.Path(tmp), target)
     }
-    total - keep
+    total - kept
+  }
+
+  /** Replace `dir` by the fully written `side` (delete + rename). It runs
+    * through the Hadoop `FileSystem` API, so the same code works on HDFS
+    * and local FS alike — never `java.io.File`, which silently no-ops on
+    * a remote filesystem.
+    */
+  private def swapIn(fs: org.apache.hadoop.fs.FileSystem,
+                     side: org.apache.hadoop.fs.Path,
+                     dir: org.apache.hadoop.fs.Path): Unit = {
+    require(fs.delete(dir, true), s"could not remove old $dir")
+    require(fs.rename(side, dir), s"swap failed for $dir")
   }
 
   // --------------------------------------- snapshots / time travel
@@ -369,9 +382,9 @@ object Checkpoint {
   /** Iceberg `expire_snapshots`: keep every partition version still
     * reachable from a time travel AT OR AFTER `olderThan` (the newest
     * commit <= olderThan, plus everything after it); delete the rest's
-    * data directories and drop their manifest rows (temp-write + swap,
-    * like [[sweepExpired]]). Returns the number of expired partition
-    * versions. Idempotent.
+    * data directories and drop their manifest rows (temp-write +
+    * [[swapIn]]). Returns the number of expired partition versions.
+    * Idempotent.
     */
   def expireSnapshots(spark: SparkSession, manifestDir: String,
                       olderThan: Timestamp): Long = {
@@ -395,10 +408,7 @@ object Checkpoint {
       val tmp = manifestDir + ".expire"
       keepRows.write.mode("overwrite").parquet(tmp)
       val target = new org.apache.hadoop.fs.Path(manifestDir)
-      val side = new org.apache.hadoop.fs.Path(tmp)
-      val fs = target.getFileSystem(conf)
-      require(fs.delete(target, true), s"could not remove old manifest at $manifestDir")
-      require(fs.rename(side, target), s"swap failed for $manifestDir")
+      swapIn(target.getFileSystem(conf), new org.apache.hadoop.fs.Path(tmp), target)
     }
     dead.length.toLong
   }
@@ -409,10 +419,10 @@ object Checkpoint {
     * until scans drown in open-file overhead. Rewrites each partition
     * whose file count exceeds `maxFilesPerPartition` into
     * `ceil(bytes / targetBytes)` files (coalesce inside the partition
-    * — no shuffle of other partitions' data), via the temp-write +
-    * FS-swap idiom of [[sweepExpired]]. Content-preserving by
-    * construction and asserted in PipelineSpec (byte-identical rows
-    * before/after). Returns the number of partitions rewritten.
+    * — no shuffle of other partitions' data), via temp-write +
+    * [[swapIn]]. Content-preserving by construction and asserted in
+    * PipelineSpec (byte-identical rows before/after). Returns the number
+    * of partitions rewritten.
     *
     * Scale shape: the partition census is a driver listing bounded by
     * partition count (Iceberg-manifest-class work); each rewrite reads
@@ -455,8 +465,7 @@ object Checkpoint {
           JobLabel(spark.sparkContext, s"compact $dir")(
             spark.read.parquet(dir.toString)
               .coalesce(nOut).write.mode("overwrite").parquet(tmp.toString))
-          require(fs.delete(dir, true), s"could not remove $dir")
-          require(fs.rename(tmp, dir), s"swap failed for $dir")
+          swapIn(fs, tmp, dir)
           rewritten.incrementAndGet()
           ()
         }
@@ -473,7 +482,7 @@ object Checkpoint {
   /** A10 last gap: single-key cache invalidation — the reference's
     * `CacheManager.invalidate(key)` (`cache_manager.py:81-93` deletes one
     * per-hash file) as an idempotent filtered rewrite of the memoization
-    * table. Same temp-write + Hadoop-FS atomic swap as [[sweepExpired]];
+    * table, the same [[rewriteKeeping]] as [[sweepExpired]];
     * invalidating a hash that is not present is a no-op (returns 0), so
     * retries are safe. The next `extractChunks(cache)` run recomputes
     * exactly the invalidated hashes and cache-hits everything else.
@@ -482,27 +491,10 @@ object Checkpoint {
   def invalidate(spark: SparkSession, cacheDir: String,
                  hashes: Seq[String]): Long = {
     require(hashes.nonEmpty, "no hashes to invalidate")
-    val cache = spark.read.parquet(cacheDir)
     // NULL-hash rows (however they got there) are NOT targeted by any
     // invalidation: a bare !isin() evaluates to NULL for them and would
     // silently delete them with every call (three-valued logic)
-    val keepCond =
-      col("content_hash").isNull || !col("content_hash").isin(hashes: _*)
-    val keepRows = cache.where(keepCond)
-    // one census scan for both counts (see sweepExpired)
-    val counts = cache.agg(
-      count(lit(1)).as("total"),
-      count(when(keepCond, lit(1))).as("keep")).head()
-    val (total, keep) = (counts.getLong(0), counts.getLong(1))
-    if (keep < total) {
-      val tmp = cacheDir + ".invalidate"
-      keepRows.write.mode("overwrite").parquet(tmp)
-      val target = new org.apache.hadoop.fs.Path(cacheDir)
-      val side = new org.apache.hadoop.fs.Path(tmp)
-      val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(fs.delete(target, true), s"could not remove old cache at $cacheDir")
-      require(fs.rename(side, target), s"swap failed for $cacheDir")
-    }
-    total - keep
+    rewriteKeeping(spark, cacheDir,
+      col("content_hash").isNull || !col("content_hash").isin(hashes: _*), ".invalidate")
   }
 }

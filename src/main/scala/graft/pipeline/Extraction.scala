@@ -10,25 +10,38 @@ import graft.kernel.{Html, Lang, Pdf}
   * DataFrame/Dataset plan:
   *
   * {{{
-  * read pages → branch by payload sniff
-  *   ├─ HTML: mapPartitions(tokenize → DOM → density-classify)    [J2]
-  *   └─ PDF:  flatMap 10-page split [D1] → sha2 dedup [B5]
-  *            → mapPartitions(layout parse) [J1] → rejoin on hash
-  *            → groupBy(url) ordered merge [B1/F1]
-  * → unionByName → label/keyword classification columns [C3]
+  * read pages (url, html) → mapPartitions(extractDoc), per row:
+  *   payload sniff `%PDF-`
+  *     ├─ HTML: tokenize → DOM → density-classify                    [J2]
+  *     └─ PDF:  one parse → ≤10-page chunks [D1] → layout parse [J1]
+  *              → ordered merge [B1/F1]
+  * → label/keyword classification column [C3]
   * }}}
   *
-  * All relational steps are Catalyst built-ins (filters push to the Parquet
-  * scan, the dedup-rejoin broadcasts when small, AQE resizes the merge
-  * shuffle); the only typed stages are the two extraction kernels, kept
-  * iterator-based inside `mapPartitions` to preserve the reference's
-  * streaming memory profile (`pdf_splitter.py:72-107`).
+  * That per-row stage is the pipeline: [[extractAll]] and the checkpointed
+  * write path ([[Checkpoint.extractParted]]) both run it, one scan of
+  * `url` + `html` and no shuffle. The chunk-level dataflow is the
+  * content-hash memoization path and the differential oracle of the fused
+  * PDF branch:
+  *
+  * {{{
+  * pdfChunks: flatMap 10-page split [D1]
+  * → extractChunks: sha2 dedup [B5] (+ 24 h result cache [C6])
+  *   → mapPartitions(layout parse) [J1] → rejoin on hash
+  * → mergePdfDocs: groupBy(url) ordered merge [B1/F1]
+  * }}}
+  *
+  * The typed stages stay iterator-based inside `mapPartitions` to preserve
+  * the reference's streaming memory profile (`pdf_splitter.py:72-107`); the
+  * relational steps are Catalyst built-ins (the dedup-rejoin broadcasts
+  * when small, AQE resizes the merge shuffle).
   */
 object Extraction {
 
   /** Payload-sniff branch predicate: the reference accepts only `.pdf`
     * uploads (`routes.py:25-26`); at web scale the equivalent is a
-    * magic-bytes test on the binary column (pushable, no kernel needed).
+    * magic-bytes test on the binary column (no kernel needed; [[extractDoc]]
+    * makes the same test per row).
     */
   def isPdf(payload: Column): Column =
     substring(payload, 1, 5) === lit("%PDF-".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
@@ -43,15 +56,7 @@ object Extraction {
     */
   def htmlDocs(pages: Dataset[Page]): Dataset[HtmlDoc] = {
     import pages.sparkSession.implicits._
-    htmlDocsRaw(pages.map(p => RawDoc(p.url, p.html)))
-  }
-
-  /** Slim-projection HTML branch: input carries url + payload only, so a
-    * Parquet-backed plan prunes every other column out of the scan.
-    */
-  def htmlDocsRaw(pages: Dataset[RawDoc]): Dataset[HtmlDoc] = {
-    import pages.sparkSession.implicits._
-    pages.mapPartitions(_.map(htmlDocOne))
+    pages.mapPartitions(_.map(p => htmlDocOne(RawDoc(p.url, p.html))))
   }
 
   /** Rows whose payload exceeds this fail in isolation (C5) instead of
@@ -92,11 +97,6 @@ object Extraction {
     * extraction then fails in isolation (C5).
     */
   def pdfChunks(pages: Dataset[Page]): Dataset[Chunk] = {
-    import pages.sparkSession.implicits._
-    pdfChunksRaw(pages.map(p => RawDoc(p.url, p.html)))
-  }
-
-  def pdfChunksRaw(pages: Dataset[RawDoc]): Dataset[Chunk] = {
     import pages.sparkSession.implicits._
     pages.flatMap { p =>
       val cs =
@@ -210,13 +210,13 @@ object Extraction {
     * originates from a single input row, the chunk-level dataflow's two
     * payload shuffles (dedup-by-hash) and the merge shuffle (groupBy url)
     * move data that was already co-located — at 10^12-document scale those
-    * exchanges dominate the job, so the default path eliminates them and
-    * keeps the plan scan → mapPartitions → union, which scales linearly.
+    * exchanges dominate the job, so the pipeline ([[extractDoc]]) runs this
+    * instead and keeps the plan scan → mapPartitions, which scales linearly.
     * Produces rows identical to `mergePdfDocs(extractChunks(pdfChunks(…)))`
     * (extraction is deterministic, so skipping within-run dedup changes
-    * cost, never bytes); the dataflow path remains for runs with a
-    * cross-run memoization cache or corpora where duplicate payloads are
-    * frequent enough that dedup beats re-extraction.
+    * cost, never bytes); [[extractChunks]] is the path for a cross-run
+    * memoization cache or corpora where duplicate payloads are frequent
+    * enough that dedup beats re-extraction, and the oracle for this one.
     */
   def pdfDocFused(p: RawDoc): PdfDoc = pdfDocFused(p, MaxPayloadBytes)
 
@@ -238,22 +238,13 @@ object Extraction {
       okEx.length, ex.length, okEx.nonEmpty)
   }
 
-  def pdfDocsFused(pages: Dataset[Page]): Dataset[PdfDoc] = {
-    import pages.sparkSession.implicits._
-    pdfDocsFusedRaw(pages.map(p => RawDoc(p.url, p.html)))
-  }
-
-  def pdfDocsFusedRaw(pages: Dataset[RawDoc]): Dataset[PdfDoc] = {
-    import pages.sparkSession.implicits._
-    pages.mapPartitions(_.map(pdfDocFused))
-  }
-
   /** Per-document fused extraction (both branches, one row in → one row
-    * out): the row-level twin of [[extractAll]] — used where extra columns
-    * must ride along with the extraction (e.g. [[Checkpoint.run]] threads
-    * partition columns through instead of re-joining the extracted text on
-    * url, which would shuffle the whole output). `document_type` is a
-    * columnar post-step ([[documentType]]), same as extractAll.
+    * out): the one extraction stage. [[extractAll]] maps it over
+    * `url` + payload rows; [[Checkpoint.extractParted]] threads partition
+    * columns through it instead of re-joining the extracted text on url,
+    * which would shuffle the whole output. A null payload sniffs as HTML
+    * and fails its row (`ok = false`). `document_type` is a columnar
+    * post-step ([[documentType]]) in both.
     */
   def extractDoc(p: RawDoc): DocRow = {
     val isPdfRow = p.html != null && p.html.length >= 5 &&
@@ -270,38 +261,14 @@ object Extraction {
     }
   }
 
-  private val emptyPages = typedLit(Seq.empty[PageMeta])
-
-  /** Full pipeline: branch → extract → merge → union → classify (C3).
-    * Input must have at least the `Page` columns; output one row per url.
+  /** Full pipeline: one scan of `url` + `html` → [[extractDoc]] per row →
+    * classify (C3). Input must carry at least `url` and `html`; output is
+    * one [[DocRow]] plus `document_type` per input row.
     */
-  def extractAll(pagesDf: DataFrame,
-                 cache: Option[DataFrame] = None,
-                 asOf: Option[java.sql.Timestamp] = None): DataFrame = {
-    val spark = pagesDf.sparkSession
-    import spark.implicits._
-    val slim = pagesDf.select($"url", $"html").as[RawDoc]
-
-    val html = htmlDocsRaw(slim.where(!isPdf($"html"))).toDF()
-      .select($"url", $"extracted_text", $"title", $"labels", $"language",
-        emptyPages.as("pages"),
-        lit(1).as("chunks_processed"), lit(1).as("total_chunks"),
-        $"content_blocks", $"boiler_blocks", lit("html").as("source_type"), $"ok")
-
-    // With a memoization cache the chunk-level dataflow (dedup → extract
-    // misses only → rejoin) is required; without one the fused per-row
-    // path is plan-equivalent and shuffle-free.
-    val pdfPages = slim.where(isPdf($"html"))
-    val pdfDocs: DataFrame =
-      if (cache.isDefined) mergePdfDocs(extractChunks(pdfChunksRaw(pdfPages), cache, asOf))
-      else pdfDocsFusedRaw(pdfPages).toDF()
-    val pdfMerged = pdfDocs
-      .select($"url", $"extracted_text", lit("").as("title"), $"labels", $"language",
-        $"pages", $"chunks_processed", $"total_chunks",
-        lit(0L).as("content_blocks"), lit(0L).as("boiler_blocks"),
-        lit("pdf").as("source_type"), $"ok")
-
-    html.unionByName(pdfMerged)
+  def extractAll(pagesDf: DataFrame): DataFrame = {
+    import pagesDf.sparkSession.implicits._
+    pagesDf.select($"url", $"html").as[RawDoc]
+      .mapPartitions(_.map(extractDoc))
       .withColumn("document_type", documentType(col("labels")))
   }
 

@@ -69,13 +69,51 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     val pdfPages = pagesDs.where(Extraction.isPdf($"html")).as[Page]
     val cols = Seq("url", "extracted_text", "pages", "labels", "language",
       "chunks_processed", "total_chunks", "ok").map(col)
-    val fused = Extraction.pdfDocsFused(pdfPages).toDF()
+    val fused = Extraction.extractAll(pdfPages.toDF())
       .select(cols: _*).toJSON.collect().toSet
     val flow = Extraction.mergePdfDocs(
         Extraction.extractChunks(Extraction.pdfChunks(pdfPages)))
       .select(cols: _*).toJSON.collect().toSet
     assert(fused === flow)
     assert(fused.nonEmpty)
+  }
+
+  test("extractAll plans one Parquet scan of url + html and no union") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val dir = Files.createTempDirectory("graft-plan").toString + "/pages"
+    Checkpoint.writePages(pagesDs.toDF(), dir)
+    val out = Extraction.extractAll(spark.read.parquet(dir))
+    assert(out.collect().length === fixture.size)
+    object Plans extends AdaptiveSparkPlanHelper
+    val nodes = Plans.collectWithSubqueries(out.queryExecution.executedPlan) { case n => n }
+    val scans = nodes.collect { case s: FileSourceScanExec => s }
+    val plan = out.queryExecution.executedPlan.treeString
+    assert(scans.size === 1, plan)
+    assert(scans.head.requiredSchema.fieldNames.toSet === Set("url", "html"), plan)
+    assert(!nodes.exists(_.isInstanceOf[UnionExec]), plan)
+  }
+
+  test("null payload: one failed html row from extractAll and from the checkpointed run") {
+    val nullPage = Page("https://null.example.com/a", new Timestamp(PageGen.EpochMs),
+      null, "", "en")
+    val pages = spark.createDataset(fixture.take(20) :+ nullPage).toDF()
+    val extracted = Extraction.extractAll(pages)
+    assert(extracted.count() === 21)
+    assert(extracted.where($"url" === nullPage.url).select($"ok", $"source_type")
+      .as[(Boolean, String)].collect().toSeq === Seq((false, "html")))
+
+    val tmp = Files.createTempDirectory("graft-null").toString
+    val (pagesDir, outDir, maniDir, metDir) =
+      (s"$tmp/pages", s"$tmp/docs", s"$tmp/manifest", s"$tmp/metrics")
+    Checkpoint.writePages(pages, pagesDir)
+    assert(Checkpoint.run(spark, pagesDir, outDir, maniDir, metDir, "run1",
+      new Timestamp(PageGen.EpochMs)) === 21)
+    assert(spark.read.parquet(outDir).where($"url" === nullPage.url)
+      .select($"ok", $"source_type").as[(Boolean, String)].collect().toSeq ===
+      Seq((false, "html")))
+    val m = spark.read.parquet(metDir)
+    assert(m.agg(sum($"docs"), sum($"failed")).as[(Long, Long)].head() === ((21L, 1L)))
   }
 
   test("language prefix rule and html language detection") {
