@@ -25,7 +25,9 @@ object Checkpoint {
   val NumBuckets = 8
 
   /** Upper bound on the Parquet files [[clusterByDir]] lets one partition
-    * directory receive per write.
+    * directory receive per write, and so the file count above which
+    * [[compactPartitions]] rewrites a directory by default: a run never
+    * leaves a directory that needs compaction.
     */
   private[graft] val FilesPerDir = 4
 
@@ -38,19 +40,53 @@ object Checkpoint {
       .withColumn("ts_day", to_date(col("warc_ts")))
       .withColumn("url_bucket", pmod(hash(col("url")), lit(NumBuckets)))
 
-  /** The directory-clustering rule of every partitioned write: shuffle
-    * rows to their target (ts_day, url_bucket) directory, salted by url so
-    * one hot partition still spreads over a few tasks. Each directory then
-    * receives at most [[FilesPerDir]] files (hash repartitioning can
-    * collide salt values, so it is an upper bound) — without it every
-    * upstream task writes a fragment into every directory it touches and
-    * the table explodes into tasks × dirs tiny files, run over run (a real
-    * small-file failure mode at scale: file-open cost then dominates the
-    * scan and Hadoop FS locking serializes high-thread readers).
+  /** A row's target directory as one string key, `<ts_day>/<url_bucket>`
+    * (a null day drops out of the key, which stays non-null): the key of a
+    * write's census and of the salt widths [[clusterByDir]] looks up.
     */
-  private[graft] def clusterByDir(df: DataFrame): DataFrame =
+  private def dirKey: Column =
+    concat_ws("/", col("ts_day").cast("string"), col("url_bucket").cast("string"))
+
+  /** Salt width per directory from a write's census (rows per [[dirKey]]):
+    * `clamp(ceil(rows(dir) * partitions / total), 1, FilesPerDir)`, with
+    * `partitions` the shuffle width the clustering repartition hashes into
+    * (`spark.sql.shuffle.partitions`).
+    * A directory gets more than one writer only when it alone holds more
+    * than one writer's fair share of the rows (`total / partitions`) —
+    * exactly when one task writing it would straggle behind the others.
+    * Every other directory gets one writer, so one file.
+    */
+  private[graft] def saltWidths(census: Map[String, Long],
+                                partitions: Int): Map[String, Int] = {
+    val total = census.values.sum
+    census.map { case (dir, rows) =>
+      dir -> math.min(FilesPerDir.toLong,
+        math.max(1L, (rows * partitions + total - 1) / total)).toInt
+    }
+  }
+
+  /** The directory-clustering rule of every partitioned write: shuffle
+    * rows to their target (ts_day, url_bucket) directory, salted by url
+    * over that directory's width from the write's `census`
+    * ([[saltWidths]]). A directory that would straggle spreads over up to
+    * [[FilesPerDir]] tasks; every other one lands whole in one task and is
+    * written as one file, since each file costs fixed write time. A
+    * directory without a census entry keeps the full [[FilesPerDir]]
+    * width — every directory, for the callers with no census
+    * ([[writePages]], the streaming sink). Hash repartitioning can collide
+    * salt values, so the width is an upper bound on a directory's files.
+    * Without the clustering every upstream task writes a fragment into
+    * every directory it touches and the table explodes into tasks × dirs
+    * tiny files, run over run (a real small-file failure mode at scale:
+    * file-open cost then dominates the scan and Hadoop FS locking
+    * serializes high-thread readers).
+    */
+  private[graft] def clusterByDir(df: DataFrame,
+                                  census: Map[String, Long] = Map.empty): DataFrame = {
+    val widths = saltWidths(census, df.sparkSession.sessionState.conf.numShufflePartitions)
     df.repartition(col("ts_day"), col("url_bucket"),
-      pmod(hash(col("url"), lit(1)), lit(FilesPerDir)))
+      pmod(hash(col("url"), lit(1)), coalesce(element_at(typedLit(widths), dirKey), lit(FilesPerDir))))
+  }
 
   /** C8: resume anti-join — keep only pages whose partition has no
     * committed manifest row. NOT partition-pruned: the join keys are
@@ -156,14 +192,18 @@ object Checkpoint {
       .partitionBy("ts_day", "url_bucket")
       .parquet(dir)
 
-  /** One idempotent, resumable run: read partitioned pages, skip committed
+  /** One resumable run: read partitioned pages, skip committed
     * partitions, extract, overwrite exactly the touched output partitions
     * (dynamic partition overwrite = Iceberg-style atomic-per-partition
-    * commit), then append metrics + manifest. Crash before the manifest
-    * append → the partition is re-processed next run and its output
-    * partition is overwritten, not duplicated — idempotent. Raw payloads
-    * are read once, by the extraction; no page column is cached (see
-    * [[commit]]).
+    * commit), then append metrics, then the manifest. A crash before the
+    * manifest append leaves the partitions uncommitted: the next run
+    * re-processes them and overwrites their output, not duplicating the
+    * docs. It is NOT idempotent for the metrics: a crash after the metrics
+    * append and before the manifest append leaves that run's metrics rows
+    * behind, and the retry appends them again, so the metrics table counts
+    * those partitions twice (ROADMAP direction 3, one commit record per
+    * run). Raw payloads are read once, by the extraction; no page column
+    * is cached (see [[commit]]).
     */
   def run(spark: SparkSession, pagesDir: String, outDir: String,
           manifestDir: String, metricsDir: String,
@@ -197,18 +237,21 @@ object Checkpoint {
   }
 
   /** The one commit sequence of [[run]] and [[runVersioned]]: probe the
-    * manifest, select the pages to do (`todoOf(pages, manifest)`), count
-    * them, extract, write the docs to `target` with the save mode
-    * `saveMode` sets, then append the metrics and, last, the manifest
-    * rows. Returns the number of pages processed.
+    * manifest, select the pages to do (`todoOf(pages, manifest)`), take
+    * their census (rows per target directory), extract, write the docs to
+    * `target` with the save mode `saveMode` sets, then append the metrics
+    * and, last, the manifest rows. Returns the number of pages processed,
+    * the census total.
     *
     * Raw payloads are read once. The pages to do are NOT cached: the
-    * count is its own scan, which column pruning narrows to at most
-    * `url`/`warc_ts`, and only the extraction reads `html`. The extracted
-    * docs are persisted once and feed the docs write, the metrics rollup
-    * and the manifest aggregate — every input measure the metrics need
-    * rides on them ([[extractParted]]). Each step's jobs carry a
-    * `checkpoint: …` description ([[JobLabel]]).
+    * census is its own scan, which column pruning narrows to at most
+    * `url`/`warc_ts`, and returns at most one row per directory; only the
+    * extraction reads `html`. The census sizes the docs write: each
+    * directory's salt width comes from its share of the rows
+    * ([[clusterByDir]]). The extracted docs are persisted once and feed the
+    * docs write, the metrics rollup and the manifest aggregate — every
+    * input measure the metrics need rides on them ([[extractParted]]).
+    * Each step's jobs carry a `checkpoint: …` description ([[JobLabel]]).
     */
   private def commit(spark: SparkSession, pagesDir: String,
                      manifestDir: String, metricsDir: String,
@@ -220,7 +263,9 @@ object Checkpoint {
     val todo = todoOf(pages, manifest)
     def step[T](name: String)(body: => T): T =
       JobLabel(spark.sparkContext, s"checkpoint: $name")(body)
-    val nTodo = step("todo count")(todo.count())
+    val census = step("todo count")(
+      todo.groupBy(dirKey).count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+    val nTodo = census.values.sum
     if (nTodo > 0) {
       // thread ts_day/url_bucket THROUGH the fused per-row extraction —
       // re-joining extractAll's output on url would shuffle every
@@ -232,7 +277,7 @@ object Checkpoint {
       // the clustering shuffle moves the EXTRACTED text (already
       // persisted), not the raw payloads
       step("extract+write")(saveMode(
-        clusterByDir(docs.drop("extract_ns", "bytes_in"))
+        clusterByDir(docs.drop("extract_ns", "bytes_in"), census)
           .write.partitionBy("ts_day", "url_bucket"))
         .parquet(target))
       step("metrics")(
@@ -431,7 +476,7 @@ object Checkpoint {
     */
   def compactPartitions(spark: SparkSession, outDir: String,
                         targetBytes: Long = 128L << 20,
-                        maxFilesPerPartition: Int = 4): Long = {
+                        maxFilesPerPartition: Int = FilesPerDir): Long = {
     val root = new org.apache.hadoop.fs.Path(outDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(root), s"no table at $outDir")

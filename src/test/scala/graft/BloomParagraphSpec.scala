@@ -9,7 +9,7 @@ class BloomParagraphSpec extends AnyFunSuite with SparkSuite {
   private def doc(id: Long, paras: String*): (Long, String) = (id, paras.mkString("\n"))
 
   test("within-batch: duplicate paragraphs keep first occurrence, docs reassemble in order") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom1").toString
+    val dir = scratchDir("bloom1")
     val batch = Seq(
       doc(1, "alpha one", "shared paragraph", "alpha two"),
       doc(2, "beta one", "shared paragraph", "beta two"),   // shared drops here
@@ -28,7 +28,7 @@ class BloomParagraphSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("cross-run: paragraphs seen in earlier batches drop via the at-rest filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom2").toString
+    val dir = scratchDir("bloom2")
     val run1 = Seq(doc(1, "first run para A", "first run para B"))
     Dedup.paragraphBloomDedup(run1.toDF("doc_id", "text"),
       "doc_id", "text", s"$dir/bloom").collect()
@@ -48,8 +48,8 @@ class BloomParagraphSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("decisions are deterministic and parallelism-invariant; filter bytes stable") {
-    val dirA = java.nio.file.Files.createTempDirectory("graft-bloom3a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft-bloom3b").toString
+    val dirA = scratchDir("bloom3a")
+    val dirB = scratchDir("bloom3b")
     val batch = (0L until 200L).map { i =>
       doc(i, (0 until 8).map(p => s"para ${(i * 3 + p) % 97} body $p"): _*)
     }

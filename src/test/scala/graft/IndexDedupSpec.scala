@@ -29,7 +29,7 @@ class IndexDedupSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("index probe: every returned pair is a true near-dup (exact verify)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mh-idx").toString
+    val dir = scratchDir("mh-idx")
     Dedup.writeMinhashIndex(refDocs.toDF("id", "text"), "id", "text", dir)
     val pairs = Dedup.minhashPairsAgainstIndex(
         newDocs.toDF("id", "text"), "id", "text", dir, threshold = 0.7)
@@ -45,7 +45,7 @@ class IndexDedupSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("recall: every planted mutation is caught; dedup filter drops exactly the caught docs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mh-idx2").toString
+    val dir = scratchDir("mh-idx2")
     Dedup.writeMinhashIndex(refDocs.toDF("id", "text"), "id", "text", dir)
     val newDf = newDocs.toDF("id", "text")
     val pairs = Dedup.minhashPairsAgainstIndex(newDf, "id", "text", dir, threshold = 0.7)
@@ -58,7 +58,7 @@ class IndexDedupSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("meta row pins signature params: a k=5 index probes with k=5 automatically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mh-idx3").toString
+    val dir = scratchDir("mh-idx3")
     Dedup.writeMinhashIndex(refDocs.toDF("id", "text"), "id", "text", dir,
       shingleK = 5, numHashes = 16, numBands = 4)
     val pairs = Dedup.minhashPairsAgainstIndex(
@@ -75,7 +75,7 @@ class IndexDedupSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("maxBucket cap: exact duplicates still dropped when the bucket saturates") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mh-idx4").toString
+    val dir = scratchDir("mh-idx4")
     // reference: 30 copies of the same text → every band bucket is hot
     val sameText = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val ref = (0L until 30L).map(i => (i, sameText))
@@ -89,7 +89,7 @@ class IndexDedupSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("null-text new rows survive; empty new batch returns empty") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mh-idx5").toString
+    val dir = scratchDir("mh-idx5")
     Dedup.writeMinhashIndex(refDocs.toDF("id", "text"), "id", "text", dir)
     val withNull = Seq((1L, null.asInstanceOf[String]), (2L, refDocs.head._2))
       .toDF("id", "text")
@@ -101,7 +101,7 @@ class IndexDedupSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("appendMinhashSigs: refuses an unpartitioned index, refuses mismatched params") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mh-idx6").toString
+    val dir = scratchDir("mh-idx6")
     Dedup.writeMinhashIndex(refDocs.toDF("id", "text"), "id", "text", dir)
     val more = Seq((500L, "fresh doc words entirely new")).toDF("id", "text")
     val e1 = intercept[IllegalArgumentException] {
@@ -109,7 +109,7 @@ class IndexDedupSpec extends AnyFunSuite with SparkSuite {
     }
     assert(e1.getMessage.contains("unpartitioned"), e1.getMessage)
 
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-mh-idx7").toString
+    val dir2 = scratchDir("mh-idx7")
     Dedup.appendMinhashSigs(more, "id", "text", dir2, batchId = 0L, shingleK = 3)
     val e2 = intercept[IllegalArgumentException] {
       Dedup.appendMinhashSigs(more, "id", "text", dir2, batchId = 1L, shingleK = 5)

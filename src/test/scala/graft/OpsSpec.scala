@@ -278,7 +278,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("ivf at-rest index: probe equals in-memory twin and scans only nprobe cells") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString
+    val dir = scratchDir("ivf-idx")
     Similarity.ivfBuildIndex(emb, "vec_id", "embedding", dir, nlist = 16)
     val qv = emb.where($"vec_id" === 7L)
       .select(expr("transform(embedding, x -> cast(x as double))"))
@@ -411,7 +411,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("ivf batch probe at rest: equals in-memory twin, scans only the probed-cell union") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-batch").toString
+    val dir = scratchDir("ivf-batch")
     Similarity.ivfBuildIndex(emb, "vec_id", "embedding", dir, nlist = 16)
     val queries = emb.where($"vec_id".isin(3L, 7L))
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
@@ -651,7 +651,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // paragraph Bloom dedup: the paragraph text rides ONE hash exchange
     // (the _ph window) into the doc_id aggregation — no second shuffle of
     // the text, and the Bloom probe is a stateless filter, not a join
-    val dir = java.nio.file.Files.createTempDirectory("graft-planpb").toString
+    val dir = scratchDir("planpb")
     val docs = (0L until 50L).map(i => (i, s"alpha $i\nbeta $i")).toDF("doc_id", "text")
     val planPb = Dedup.paragraphBloomDedup(docs, "doc_id", "text", s"$dir/bloom")
       .queryExecution.executedPlan.toString
@@ -709,7 +709,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("bucketed join: co-located buckets join with zero exchanges and zero sorts") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bk-test").toString
+    val tmp = scratchDir("bk-test")
     val db = "graft_bk_spec"
     spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
     spark.sql(s"CREATE DATABASE $db LOCATION '$tmp'")

@@ -81,7 +81,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   test("extractAll plans one Parquet scan of url + html and no union") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    val dir = Files.createTempDirectory("graft-plan").toString + "/pages"
+    val dir = scratchDir("plan") + "/pages"
     Checkpoint.writePages(pagesDs.toDF(), dir)
     val out = Extraction.extractAll(spark.read.parquet(dir))
     assert(out.collect().length === fixture.size)
@@ -103,7 +103,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(extracted.where($"url" === nullPage.url).select($"ok", $"source_type")
       .as[(Boolean, String)].collect().toSeq === Seq((false, "html")))
 
-    val tmp = Files.createTempDirectory("graft-null").toString
+    val tmp = scratchDir("null")
     val (pagesDir, outDir, maniDir, metDir) =
       (s"$tmp/pages", s"$tmp/docs", s"$tmp/manifest", s"$tmp/metrics")
     Checkpoint.writePages(pages, pagesDir)
@@ -196,7 +196,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("checkpointed run: idempotent resume via manifest anti-join") {
-    val tmp = Files.createTempDirectory("graft-run").toString
+    val tmp = scratchDir("run")
     val (pagesDir, outDir, maniDir, metDir) =
       (s"$tmp/pages", s"$tmp/docs", s"$tmp/manifest", s"$tmp/metrics")
     Checkpoint.writePages(pagesDs.toDF(), pagesDir)
@@ -261,7 +261,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.util.QueryExecutionListener
     import scala.jdk.CollectionConverters._
-    val tmp = Files.createTempDirectory("graft-onepass").toString
+    val tmp = scratchDir("onepass")
     val (pagesDir, outDir, maniDir, metDir) =
       (s"$tmp/pages", s"$tmp/docs", s"$tmp/manifest", s"$tmp/metrics")
     Checkpoint.writePages(pagesDs.toDF(), pagesDir)
@@ -341,8 +341,73 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
       assert(seen.contains(s"checkpoint: $step"), seen))
   }
 
+  test("salt widths: one writer per fair share of the census, clamped to 1..FilesPerDir") {
+    import Checkpoint.{saltWidths, FilesPerDir}
+    assert(saltWidths(Map.empty, 4) === Map.empty)
+    // uniform: 56 directories of 1/56 each, well under a writer's 1/4 share
+    val uniform = (0 until 56).map(i => s"d$i" -> 36L).toMap
+    assert(saltWidths(uniform, 4) === uniform.map { case (d, _) => d -> 1 })
+    // exactly one fair share → one writer; just over it → a second one
+    assert(saltWidths(Map("a" -> 250L, "b" -> 750L), 4) === Map("a" -> 1, "b" -> 3))
+    assert(saltWidths(Map("a" -> 251L, "b" -> 749L), 4) === Map("a" -> 2, "b" -> 3))
+    // one hot directory among small ones
+    assert(saltWidths(Map("hot" -> 800L, "x" -> 100L, "y" -> 100L), 4) ===
+      Map("hot" -> 4, "x" -> 1, "y" -> 1))
+    // everything in one directory → the bound, however wide the shuffle
+    assert(saltWidths(Map("all" -> 1000L), 4) === Map("all" -> FilesPerDir))
+    assert(saltWidths(Map("all" -> 1000L), 200) === Map("all" -> FilesPerDir))
+    // the clamp at 1: a sliver of the rows still gets one writer
+    assert(saltWidths(Map("big" -> 1000000L, "tiny" -> 1L), 4) ===
+      Map("big" -> FilesPerDir, "tiny" -> 1))
+  }
+
+  test("checkpointed run: only a hot directory is salted, every other one is one file") {
+    val spread = PageGen.pages(120)
+    // 360 more pages on 2024-01-01 whose urls fall in url_bucket 0 (the
+    // partition spec's own hash picks them), so that one directory holds
+    // more than 3/4 of the rows
+    val hotTs = new Timestamp(PageGen.EpochMs + 3600L * 1000)
+    val hotUrls = (0 until 4000).map(i => s"https://hot.example.com/p$i").toDF("url")
+      .where(pmod(hash($"url"), lit(Checkpoint.NumBuckets)) === 0)
+      .as[String].collect().take(360)
+    assert(hotUrls.length === 360)
+    val hot = hotUrls.zipWithIndex.map { case (u, i) =>
+      spread(i % spread.size).copy(url = u, warc_ts = hotTs)
+    }
+    val pages = spark.createDataset(spread ++ hot).toDF()
+    val n = spread.size + hot.size
+
+    val tmp = scratchDir("hotdir")
+    val (pagesDir, outDir, maniDir, metDir) =
+      (s"$tmp/pages", s"$tmp/docs", s"$tmp/manifest", s"$tmp/metrics")
+    Checkpoint.writePages(pages, pagesDir)
+    // AQE merges a shuffle this small (< 1 MB a partition) into one task,
+    // which would write the hot directory as one file too; with coalescing
+    // off, the run's layout shows the salt's spread over writers
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try assert(Checkpoint.run(spark, pagesDir, outDir, maniDir, metDir, "run1",
+      new Timestamp(PageGen.EpochMs)) === n)
+    finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+
+    val files = parquetFilesPerDir(outDir, "ts_day=*/url_bucket=*")
+    val (hotDir, others) = files.partition(_._1.endsWith("/ts_day=2024-01-01/url_bucket=0"))
+    assert(hotDir.size === 1, files)
+    hotDir.foreach { case (d, k) =>
+      assert(k >= 2 && k <= Checkpoint.FilesPerDir, s"$k files in hot $d") }
+    assert(others.size > 1)
+    others.foreach { case (d, k) => assert(k === 1, s"$k files in $d") }
+
+    // the docs equal direct extraction, full rows
+    val direct = Extraction.extractAll(pages)
+    val persisted = spark.read.parquet(outDir).select(direct.columns.map(col): _*)
+    assert(persisted.toJSON.collect().toSet === direct.toJSON.collect().toSet)
+    assert(persisted.count() === n)
+    assert(spark.read.parquet(metDir).agg(sum($"docs")).as[Long].head() === n.toLong)
+    assert(spark.read.parquet(maniDir).agg(sum($"docs")).as[Long].head() === n.toLong)
+  }
+
   test("snapshots: versioned runs time-travel via readAsOf; expire removes the horizon") {
-    val tmp = Files.createTempDirectory("graft-snap").toString
+    val tmp = scratchDir("snap")
     val (outDir, maniDir, metDir) = (s"$tmp/docs", s"$tmp/manifest", s"$tmp/metrics")
     val pagesV1 = PageGen.pages(120)
     val pagesDirV1 = s"$tmp/pagesV1"
@@ -393,7 +458,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("snapshots: a reused run id fails and leaves snapshot, manifest and metrics unchanged") {
-    val tmp = Files.createTempDirectory("graft-snap-reuse").toString
+    val tmp = scratchDir("snap-reuse")
     val (pagesDir, outDir, maniDir, metDir) =
       (s"$tmp/pages", s"$tmp/docs", s"$tmp/manifest", s"$tmp/metrics")
     val pages = PageGen.pages(60)
@@ -426,7 +491,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("compaction: fragmented partitions rewrite to few files, content byte-identical") {
-    val tmp = Files.createTempDirectory("graft-compact").toString
+    val tmp = scratchDir("compact")
     val out = s"$tmp/docs"
     // fragment every partition: 6 separate appends of disjoint slices
     val parted = Checkpoint.withPartitionCols(pagesDs.toDF()).cache()
@@ -452,7 +517,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("json results sink round-trips every document (document_saver.py:84-85 analog)") {
-    val dir = Files.createTempDirectory("graft-json").toString + "/results"
+    val dir = scratchDir("json") + "/results"
     Checkpoint.writeJsonResults(docs, dir)
     val back = spark.read.json(dir)
     assert(back.count() === fixture.size)
@@ -461,7 +526,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("cache expiry sweep compacts to live rows (cache_manager.py:95-116 analog)") {
-    val dir = Files.createTempDirectory("graft-cache").toString + "/cache"
+    val dir = scratchDir("cache") + "/cache"
     val asOf = new Timestamp(PageGen.EpochMs)
     val fresh = new Timestamp(PageGen.EpochMs - 3600 * 1000)
     val stale = new Timestamp(PageGen.EpochMs - 25L * 3600 * 1000)
@@ -478,7 +543,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("invalidate(hash): exactly that hash recomputes, everything else cache-hits") {
-    val dir = Files.createTempDirectory("graft-cache-inv").toString + "/cache"
+    val dir = scratchDir("cache-inv") + "/cache"
     val pdfPages = pagesDs.where(Extraction.isPdf($"html")).as[Page]
     val chunks = Extraction.pdfChunks(pdfPages)
     val hashes = chunks.withColumn("content_hash", sha2($"payload", 256))
@@ -539,7 +604,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("corpus job funnel: monotone stages, WET output matches dedup survivors byte-exactly") {
-    val tmp = Files.createTempDirectory("graft-corpusjob").toString
+    val tmp = scratchDir("corpusjob")
     val funnel = CorpusJob.run(spark, pagesDs.toDF(), s"$tmp/wet", maxBucket = 64)
       .orderBy($"ord").as[(Int, String, Long)].collect()
     assert(funnel.map(_._2).toSeq ===
@@ -560,7 +625,7 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("full funnel: blocklist, decontamination, redaction and domain cap compose") {
-    val tmp = Files.createTempDirectory("graft-fullfunnel").toString
+    val tmp = scratchDir("fullfunnel")
     // eval set = verbatim copies of two fixture docs' truth text → the
     // decontamination stage must drop exactly their extracted twins
     val evalTexts = fixture.take(2).map(_.text)

@@ -95,7 +95,7 @@ class PqSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     val data = corpus(8, 10, 4)
     val df = data.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
+    val dir = scratchDir("pq")
     Similarity.pqBuildIndex(df, "vec_id", "embedding", dir, m = 8, ksub = 16)
     // index stores CODES only — 8 bytes/vector, no raw floats
     val codeRows = spark.read.parquet(s"$dir/codes")

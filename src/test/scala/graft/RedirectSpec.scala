@@ -80,7 +80,7 @@ class RedirectSpec extends AnyFunSuite with SparkSuite {
       ("https://a.example/mid", ts, 302, "https://a.example/end", Array.empty[Byte]),
       ("https://a.example/end", ts, 200, "", html),
       ("https://a.example/gone", ts, 404, "", "<h1>404</h1>".getBytes("UTF-8")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-redir").toString
+    val dir = scratchDir("redir")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/r.warc.gz"),
       MediaGen.warcGzStatus(entries))
     val resp = Warc.readResponses(spark, s"$dir/*.warc.gz")

@@ -46,7 +46,7 @@ class SearchSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("bm25TopK equals the plain-Scala reference; duplicate docs tiebreak by id") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25").toString
+    val dir = scratchDir("bm25")
     Search.buildIndex(docs.toDF("doc_id", "text"), "doc_id", "text", dir, buckets = 16)
     val query = "stream window hash"
     val got = Search.bm25TopK(spark, dir, query, k = 10, buckets = 16)
@@ -62,7 +62,7 @@ class SearchSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("probe scans only the query tokens' bucket partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25p").toString
+    val dir = scratchDir("bm25p")
     Search.buildIndex(docs.toDF("doc_id", "text"), "doc_id", "text", dir, buckets = 16)
     val query = "hash merge"
     val qBuckets = Search.queryTokens(query).toDF("token")
@@ -100,7 +100,7 @@ class SearchSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("empty-token query refused; unseen-token query returns empty, not error") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25e").toString
+    val dir = scratchDir("bm25e")
     Search.buildIndex(docs.toDF("doc_id", "text"), "doc_id", "text", dir, buckets = 16)
     intercept[IllegalArgumentException](Search.bm25TopK(spark, dir, "42 !!", 5))
     assert(Search.bm25TopK(spark, dir, "zzzunseen", 5, buckets = 16).count() === 0L)

@@ -5,13 +5,12 @@ import org.apache.spark.sql.functions._
 import graft.fixtures.PageGen
 import graft.pipeline.Checkpoint
 import graft.streaming.StreamingRun
-import java.nio.file.Files
 
 class StreamingSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("streaming ingestion: drains existing files, then processes only new arrivals") {
-    val tmp = Files.createTempDirectory("graft-stream").toString
+    val tmp = scratchDir("stream")
     val (pagesDir, outDir, metDir, ckptDir) =
       (s"$tmp/pages", s"$tmp/docs", s"$tmp/metrics", s"$tmp/ckpt")
     val fixture = PageGen.pages(250)
@@ -55,7 +54,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("stateful streaming dedup suppresses duplicates across micro-batches and runs") {
-    val tmp = Files.createTempDirectory("graft-sdedup").toString
+    val tmp = scratchDir("sdedup")
     val (pagesDir, outDir, ckptDir) = (s"$tmp/pages", s"$tmp/novel", s"$tmp/ckpt")
     val wave1 = PageGen.pages(150)
     Checkpoint.writePages(spark.createDataset(wave1).toDF(), pagesDir)
@@ -92,7 +91,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   test("TTL'd streaming dedup: suppressed within TTL, re-admitted after expiry") {
     // Phase A — within-TTL suppression, with a TTL far wider than any
     // startup/scheduling jitter (state timers are wall-clock)
-    val tmpA = Files.createTempDirectory("graft-sttl-a").toString
+    val tmpA = scratchDir("sttl-a")
     val wave1 = PageGen.pages(60)
     Checkpoint.writePages(spark.createDataset(wave1).toDF(), s"$tmpA/pages")
     val uniq1 = wave1.map(_.html.toSeq).distinct.size
@@ -115,7 +114,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // Phase B — expiry: a short TTL, a sleep past it, and the same hashes
     // re-admit, exactly like the batch isFresh predicate re-admitting an
     // expired cache row (C6)
-    val tmpB = Files.createTempDirectory("graft-sttl-b").toString
+    val tmpB = scratchDir("sttl-b")
     val ttlMs = 1500L
     Checkpoint.writePages(spark.createDataset(wave1).toDF(), s"$tmpB/pages")
     val m1 = StreamingRun.dedupStreamTtl(spark, s"$tmpB/pages", s"$tmpB/novel",
@@ -141,7 +140,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   test("event-time sessionization: watermark-finalized sessions equal the batch operator") {
     import org.apache.spark.sql.functions._
-    val tmp = Files.createTempDirectory("graft-ssess").toString
+    val tmp = scratchDir("ssess")
     val (eventsDir, outDir, ckptDir) = (s"$tmp/events", s"$tmp/sessions", s"$tmp/ckpt")
     val base = java.sql.Timestamp.valueOf("2024-01-05 00:00:00").getTime
     // 3 users × bursts separated by > gap → multiple sessions each
@@ -188,7 +187,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("streaming output matches the batch run byte-for-byte") {
-    val tmp = Files.createTempDirectory("graft-stream-eq").toString
+    val tmp = scratchDir("stream-eq")
     val fixture = PageGen.pages(120)
     val pagesDir = s"$tmp/pages"
     Checkpoint.writePages(spark.createDataset(fixture).toDF(), pagesDir)
@@ -207,7 +206,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("streaming near-dup dedup: in-batch, cross-drain via the growing index, replay-idempotent") {
-    val tmp = Files.createTempDirectory("graft-snear").toString
+    val tmp = scratchDir("snear")
     val (pagesDir, outDir, ckptDir, idxDir) =
       (s"$tmp/pages", s"$tmp/kept", s"$tmp/ckpt", s"$tmp/idx")
     val ts = java.sql.Timestamp.valueOf("2024-01-05 00:00:00")
@@ -252,7 +251,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("stream-stream interval join equals the batch join; later drains emit only new matches") {
-    val tmp = Files.createTempDirectory("graft-ssjoin").toString
+    val tmp = scratchDir("ssjoin")
     val base = java.sql.Timestamp.valueOf("2024-02-01 00:00:00").getTime
     def ev(id: Long, offMs: Long, user: Long) =
       (id, new java.sql.Timestamp(base + offMs), user, 1.0)
@@ -309,7 +308,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("stream-static enrichment: per-batch broadcast dim, slowly-changing between drains") {
-    val tmp = Files.createTempDirectory("graft-senrich").toString
+    val tmp = scratchDir("senrich")
     val base = java.sql.Timestamp.valueOf("2024-02-01 00:00:00").getTime
     def ev(id: Long, user: Long) =
       (id, new java.sql.Timestamp(base + id * 1000), user, 1.0)
@@ -340,7 +339,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("dropDuplicatesWithinWatermark: duplicates inside the window suppressed, state bounded by watermark") {
-    val tmp = Files.createTempDirectory("graft-swmdedup").toString
+    val tmp = scratchDir("swmdedup")
     val base = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
     def page(url: String, html: String, offSec: Long) = (url,
       new java.sql.Timestamp(base.getTime + offSec * 1000),

@@ -49,7 +49,7 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
 
   test("wet sink: conversion archives round-trip text byte-exactly, valid grammar, per-record members") {
     val pages = PageGen.pages(50, seed = 79L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-wet").toString
+    val dir = scratchDir("wet")
     val pagesDf = spark.createDataset(pages).toDF()
     val docs = graft.pipeline.Extraction.extractAll(pagesDf)
       .join(pagesDf.select($"url", $"warc_ts"), Seq("url"))
@@ -81,7 +81,7 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
 
   test("warc: Spark read path feeds extraction to byte-identical truth") {
     val pages = PageGen.pages(60, seed = 78L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc").toString
+    val dir = scratchDir("warc")
     pages.grouped(20).zipWithIndex.foreach { case (grp, i) =>
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$dir/crawl-$i.warc.gz"),
@@ -146,7 +146,7 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
 
   test("cdx: index rows address every record; ranged reads return byte-identical bodies") {
     val pages = PageGen.pages(40, seed = 81L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdx").toString
+    val dir = scratchDir("cdx")
     val pagesDf = spark.createDataset(pages).toDF()
     val docs = graft.pipeline.Extraction.extractAll(pagesDf)
       .join(pagesDf.select($"url", $"warc_ts"), Seq("url"))
@@ -182,7 +182,7 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("cdx: whole-file-gzip archives address records via rec_idx; corrupt files isolate") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdx2").toString
+    val dir = scratchDir("cdx2")
     // one gzip MEMBER holding 5 records (the wild non-convention layout)
     val recs = (0 until 5).map(i =>
       (s"https://m.example/doc$i", 1700000000000L + i * 1000, s"body text $i"))
@@ -256,7 +256,7 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("warc: Spark read unions mixed .warc.gz and .warc.zst archives") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zst").toString
+    val dir = scratchDir("zst")
     val pg = PageGen.pages(30, seed = 85L)
     val (a, b) = pg.splitAt(15)
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/crawl-0.warc.gz"),
@@ -272,7 +272,7 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("cdx over .warc.zst: ranged reads recover the shared dictionary; zstd WET sink round-trips") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zstcdx").toString
+    val dir = scratchDir("zstcdx")
     val pages = fixture(20, seed = 86L)
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/crawl.warc.zst"),
       MediaGen.warcZst(pages, dict = Some(zstDict), compressDict = true))
@@ -287,7 +287,7 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
         s"ranged zstd read diverged for ${rec.url}")
     }
     // WET sink, zstd codec: write → parse back → byte-identical text
-    val wetDir = java.nio.file.Files.createTempDirectory("graft-zstwet").toString
+    val wetDir = scratchDir("zstwet")
     val pagesDf = spark.createDataset(PageGen.pages(25, seed = 87L)).toDF()
     val docs = graft.pipeline.Extraction.extractAll(pagesDf)
       .join(pagesDf.select($"url", $"warc_ts"), Seq("url"))
@@ -313,8 +313,8 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
     assert(dict.length > 256, "trained dictionary implausibly small")
     // deterministic: same corpus, same dictionary bytes
     assert(Warc.trainZstdDict(docs, 16 * 1024, 128).toSeq === dict.toSeq)
-    val dirD = java.nio.file.Files.createTempDirectory("graft-wetdict").toString
-    val dirP = java.nio.file.Files.createTempDirectory("graft-wetplain").toString
+    val dirD = scratchDir("wetdict")
+    val dirP = scratchDir("wetplain")
     assert(Warc.writeConversions(docs, dirD, codec = "zstd", dict = Some(dict)) === 200L)
     assert(Warc.writeConversions(docs, dirP, codec = "zstd") === 200L)
     def totalSize(d: String) = new java.io.File(d).listFiles()
@@ -351,7 +351,7 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
     val revisits = pages.zipWithIndex.collect {
       case ((url, _, _), i) if i % 4 == 0 => (s"$url?retry=1", ts2, url)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-revisit").toString
+    val dir = scratchDir("revisit")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.warc.gz"),
       MediaGen.warcGzWithRevisits(pages, revisits))
     // revisits parse with stripped digests; responses unaffected
@@ -398,7 +398,7 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
       assert(r.body.toSeq === html.toSeq, s"body drift under '$enc' for $url")
     }
     // and through the Spark read path: encoded archive == plain archive
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-http").toString
+    val dir = scratchDir("warc-http")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/enc.warc.gz"),
       MediaGen.warcGzHttp(pages, encs))
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/plain.warc.gz"),

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.ZoneMap
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class ZoneMapSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
@@ -15,7 +14,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkSuite {
   private def norm(f: String) = new java.net.URI(f).getPath
 
   test("sidecar stats equal the true per-file min/max/rows") {
-    val dir = Files.createTempDirectory("graft-zm1").toString
+    val dir = scratchDir("zm1")
     ZoneMap.write(table(5000), dir, "k", files = 10)
     val stats = ZoneMap.stats(spark, dir).collect()
       .map(r => (norm(r.getString(0)), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -37,7 +36,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("point probe touches exactly one file; range probe prunes, results exact") {
-    val dir = Files.createTempDirectory("graft-zm2").toString
+    val dir = scratchDir("zm2")
     ZoneMap.write(table(5000), dir, "k", files = 10)
     val pt = ZoneMap.readPoint(spark, dir, "k", 4242L)
     assert(pt.inputFiles.length === 1, s"point read touched ${pt.inputFiles.length} files")
@@ -59,10 +58,10 @@ class ZoneMapSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("plain spark.read still works (sidecar invisible) and non-integral keys refuse") {
-    val dir = Files.createTempDirectory("graft-zm3").toString
+    val dir = scratchDir("zm3")
     ZoneMap.write(table(500), dir, "k", files = 4)
     assert(spark.read.parquet(dir).count() === 500L)
-    val dir2 = Files.createTempDirectory("graft-zm4").toString
+    val dir2 = scratchDir("zm4")
     val e = intercept[Exception] {
       ZoneMap.write(table(100), dir2, "payload", files = 2)
     }
