@@ -6,6 +6,13 @@ import graft.fixtures.PageGen
 import graft.pipeline._
 import java.sql.Timestamp
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.util.QueryExecutionListener
 
 final case class CacheResult(text: String, pages: Seq[PageMeta],
                              labels: Seq[Label], language: String)
@@ -18,6 +25,40 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   private lazy val fixture = PageGen.pages(300)
   private lazy val pagesDs = spark.createDataset(fixture)
   private lazy val docs = Extraction.extractAll(pagesDs.toDF()).cache()
+
+  /** Walks of executed plans, adaptive stages and subqueries included. */
+  private object Plans extends AdaptiveSparkPlanHelper {
+    // `intoCaches` also walks the plans that built the cached relations
+    // a plan reads
+    def nodes(p: SparkPlan, intoCaches: Boolean): Seq[SparkPlan] =
+      collectWithSubqueries(p) { case n => n }.flatMap {
+        case m: InMemoryTableScanExec if intoCaches => m +: nodes(m.relation.cachedPlan, true)
+        case n => Seq(n)
+      }
+    def scansOf(root: String, p: SparkPlan, intoCaches: Boolean): Seq[FileSourceScanExec] =
+      nodes(p, intoCaches).collect {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.endsWith(root)) => s
+      }
+    def writes(p: SparkPlan): Seq[String] = nodes(p, false).collect {
+      case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) => c.outputPath.toString
+    }
+  }
+
+  /** The executed plans of the queries `body` runs, and its jobs
+    * ([[jobsDuring]]). Query listeners sit on the listener bus queue that
+    * `jobsDuring` drains, so every plan has arrived once the jobs have.
+    */
+  private def plansAndJobs(body: => Any): (Seq[SparkPlan], Seq[SparkSuite.Job]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { plans.add(qe.executedPlan); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val jobs = try jobsDuring(body) finally spark.listenerManager.unregister(listener)
+    (plans.asScala.toSeq, jobs)
+  }
 
   test("byte-identity: extracted text matches ground truth for every url") {
     val got = docs.select($"url", $"extracted_text").as[(String, String)].collect().toMap
@@ -79,14 +120,12 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("extractAll plans one Parquet scan of url + html and no union") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.UnionExec
     val dir = scratchDir("plan") + "/pages"
     Checkpoint.writePages(pagesDs.toDF(), dir)
     val out = Extraction.extractAll(spark.read.parquet(dir))
     assert(out.collect().length === fixture.size)
-    object Plans extends AdaptiveSparkPlanHelper
-    val nodes = Plans.collectWithSubqueries(out.queryExecution.executedPlan) { case n => n }
+    val nodes = Plans.nodes(out.queryExecution.executedPlan, intoCaches = false)
     val scans = nodes.collect { case s: FileSourceScanExec => s }
     val plan = out.queryExecution.executedPlan.treeString
     assert(scans.size === 1, plan)
@@ -253,71 +292,29 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("checkpointed run: raw payloads read once, steps labelled, caller label kept") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.util.QueryExecutionListener
-    import scala.jdk.CollectionConverters._
     val tmp = scratchDir("onepass")
     val (pagesDir, outDir, maniDir, metDir) =
       (s"$tmp/pages", s"$tmp/docs", s"$tmp/manifest", s"$tmp/metrics")
     Checkpoint.writePages(pagesDs.toDF(), pagesDir)
+    // a manifest from an earlier crawl, committing a day this table lacks:
+    // the run plans from it and still takes every page
+    Checkpoint.manifestRows(Seq((java.sql.Date.valueOf("2023-12-31"), 0))
+        .toDF("ts_day", "url_bucket"), "run0", new Timestamp(PageGen.EpochMs), outDir)
+      .write.parquet(maniDir)
 
-    object Plans extends AdaptiveSparkPlanHelper {
-      // every node of an executed plan (adaptive stages and subqueries
-      // included); `intoCaches` also walks the plans that built the
-      // cached relations it reads
-      def nodes(p: SparkPlan, intoCaches: Boolean): Seq[SparkPlan] =
-        collectWithSubqueries(p) { case n => n }.flatMap {
-          case m: InMemoryTableScanExec if intoCaches => m +: nodes(m.relation.cachedPlan, true)
-          case n => Seq(n)
-        }
-      def pageScans(p: SparkPlan, intoCaches: Boolean): Seq[FileSourceScanExec] =
-        nodes(p, intoCaches).collect {
-          case s: FileSourceScanExec
-              if s.relation.location.rootPaths.exists(_.toString.endsWith(pagesDir)) => s
-        }
-      def writes(p: SparkPlan): Seq[String] = nodes(p, false).collect {
-        case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) => c.outputPath.toString
-      }
-    }
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val qeListener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { plans.add(qe.executedPlan); () }
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    val jobListener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(labels.add)
-    }
     val sc = spark.sparkContext
-    spark.listenerManager.register(qeListener)
-    sc.addSparkListener(jobListener)
     sc.setJobDescription("outer job")
-    try {
+    val (plans, jobs) = try plansAndJobs {
       assert(Checkpoint.run(spark, pagesDir, outDir, maniDir, metDir, "run1",
         new Timestamp(PageGen.EpochMs)) === fixture.size)
       assert(sc.getLocalProperty("spark.job.description") === "outer job")
-      // listener events arrive asynchronously; the manifest write is last
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while ((!plans.asScala.exists(Plans.writes(_).exists(_.endsWith(maniDir))) ||
-              !labels.contains("checkpoint: manifest")) && System.nanoTime() < deadline)
-        Thread.sleep(50)
-    } finally {
-      sc.setJobDescription(null)
-      sc.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(qeListener)
-    }
+    } finally sc.setJobDescription(null)
 
     // this run's plans: those reading the page table, directly or through a cache
-    val mine = plans.asScala.toSeq.filter(Plans.pageScans(_, intoCaches = true).nonEmpty)
+    val mine = plans.filter(Plans.scansOf(pagesDir, _, intoCaches = true).nonEmpty)
     val described = mine.map(p => s"${p.nodeName} writes=${Plans.writes(p)} scans=" +
-      Plans.pageScans(p, intoCaches = false).map(_.requiredSchema.simpleString)).mkString("\n")
+      Plans.scansOf(pagesDir, p, intoCaches = false).map(_.requiredSchema.simpleString))
+      .mkString("\n")
     assert(mine.exists(Plans.writes(_).exists(_.endsWith(maniDir))), described)
     // no raw-page cache: no executed plan reads a cached relation carrying html
     val cachedHtml = mine.flatMap(Plans.nodes(_, intoCaches = true)).collect {
@@ -326,19 +323,103 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(cachedHtml.isEmpty, described)
     // exactly one scan of the pages reads the payloads: the extraction's,
     // which fills the docs cache the docs write, metrics and manifest share
-    val scans = mine.flatMap(Plans.pageScans(_, intoCaches = true)).distinct
+    val scans = mine.flatMap(Plans.scansOf(pagesDir, _, intoCaches = true)).distinct
     assert(scans.count(_.requiredSchema.fieldNames.contains("html")) === 1, described)
     // the todo count is a pruned scan of its own, reading no page payload
     val countScans = mine.filter(Plans.writes(_).isEmpty)
-      .flatMap(Plans.pageScans(_, intoCaches = false))
+      .flatMap(Plans.scansOf(pagesDir, _, intoCaches = false))
     assert(countScans.nonEmpty, described)
     countScans.foreach(s => assert(
       s.requiredSchema.fieldNames.toSet.intersect(Set("html", "text", "lang")).isEmpty,
       s.requiredSchema.simpleString))
     // every commit step ran under its own label
-    val seen = labels.asScala.toSet
-    Seq("todo count", "extract+write", "metrics", "manifest").foreach(step =>
+    val seen = jobs.map(_.description).toSet
+    Seq("plan", "todo count", "extract+write", "metrics", "manifest").foreach(step =>
       assert(seen.contains(s"checkpoint: $step"), seen))
+  }
+
+  test("checkpointed run: committed directories are pruned out of every page scan") {
+    val tmp = scratchDir("pruned")
+    val (pagesDir, outDir, maniDir, metDir) =
+      (s"$tmp/pages", s"$tmp/docs", s"$tmp/manifest", s"$tmp/metrics")
+    Checkpoint.writePages(pagesDs.toDF(), pagesDir)
+    val t0 = new Timestamp(PageGen.EpochMs)
+    Checkpoint.run(spark, pagesDir, outDir, s"$tmp/manifest0", metDir, "run0", t0)
+    // half the directories committed: the manifest keeps the even buckets
+    spark.read.parquet(s"$tmp/manifest0").where(pmod($"url_bucket", lit(2)) === 0)
+      .write.parquet(maniDir)
+    val parted = Checkpoint.withPartitionCols(pagesDs.toDF())
+    val odd = parted.where(pmod($"url_bucket", lit(2)) === 1)
+    val pendingDirs = odd.select($"ts_day", $"url_bucket").distinct().count()
+    assert(pendingDirs > 0 && pendingDirs < parted.select($"ts_day", $"url_bucket").distinct().count())
+
+    def pageScans(plans: Seq[SparkPlan]) =
+      plans.flatMap(Plans.scansOf(pagesDir, _, intoCaches = true)).distinct
+    val (resumed, _) = plansAndJobs(assert(
+      Checkpoint.run(spark, pagesDir, outDir, maniDir, metDir, "run1", t0) === odd.count()))
+    val scans = pageScans(resumed)
+    assert(scans.nonEmpty)
+    scans.foreach(s => assert(s.metrics("numPartitions").value === pendingDirs, s.treeString))
+    // everything committed now: the no-op run's scans open no page file
+    val (noop, _) = plansAndJobs(assert(
+      Checkpoint.run(spark, pagesDir, outDir, maniDir, metDir, "run2", t0) === 0))
+    pageScans(noop).foreach(s => assert(s.metrics("numFiles").value === 0, s.treeString))
+  }
+
+  test("checkpointed run: no distributed file listing on the write path") {
+    val tmp = scratchDir("listing")
+    val (pagesDir, outDir, maniDir, metDir) =
+      (s"$tmp/pages", s"$tmp/docs", s"$tmp/manifest", s"$tmp/metrics")
+    Checkpoint.writePages(pagesDs.toDF(), pagesDir)
+    // more leaf directories than Spark lists on the driver (32 paths): a
+    // read of them as explicit paths would start a listing job
+    assert(parquetFilesPerDir(pagesDir, "ts_day=*/url_bucket=*").size >= 33)
+    val t0 = new Timestamp(PageGen.EpochMs)
+    val jobs = jobsDuring {
+      assert(Checkpoint.run(spark, pagesDir, outDir, maniDir, metDir, "run1", t0) === fixture.size)
+      assert(Checkpoint.run(spark, pagesDir, outDir, maniDir, metDir, "run2", t0) === 0)
+    }
+    assert(jobs.exists(_.description == "checkpoint: manifest"), jobs)
+    val listings = jobs.filter(_.description.startsWith("Listing leaf files and directories"))
+    assert(listings.isEmpty, listings)
+  }
+
+  test("pending pages equal the resume anti-join, null days and foreign directories included") {
+    val tmp = scratchDir("pending")
+    // pages without a warc_ts have no day: the anti-join never matches
+    // them, so they stay pending on every run, committed or not
+    val dayless = fixture.take(6).map(p => p.copy(url = p.url + "?dayless", warc_ts = null))
+    val pages = spark.createDataset(fixture ++ dayless).toDF()
+    val (pagesDir, flatDir) = (s"$tmp/pages", s"$tmp/flat")
+    Checkpoint.writePages(pages, pagesDir)
+    pages.write.parquet(flatDir)
+    val t0 = new Timestamp(PageGen.EpochMs)
+    Checkpoint.run(spark, pagesDir, s"$tmp/docs", s"$tmp/manifest0", s"$tmp/metrics", "run0", t0)
+    val full = spark.read.parquet(s"$tmp/manifest0")
+    assert(full.where($"ts_day".isNull).count() > 0)
+    // a partial manifest (the dayless directories' rows included), and one
+    // that also commits a directory neither page table has
+    val partial = full.where(pmod($"url_bucket", lit(2)) === 0)
+    val foreign = partial.unionByName(Checkpoint.manifestRows(
+      Seq((java.sql.Date.valueOf("1999-01-01"), 3)).toDF("ts_day", "url_bucket"),
+      "run9", t0, s"$tmp/docs"))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select($"url", $"warc_ts", $"ts_day", $"url_bucket", sha2($"html", 256))
+        .collect().map(_.toString).sorted.toSeq
+    for ((name, manifest) <- Seq("full" -> full, "partial" -> partial, "foreign" -> foreign)) {
+      val dir = s"$tmp/manifest-$name"
+      manifest.write.parquet(dir)
+      val committed = Checkpoint.committedDirs(spark, dir)
+      for (table <- Seq(pagesDir, flatDir)) {
+        val got = rows(Checkpoint.pending(spark.read.parquet(table), committed))
+        assert(got === rows(Checkpoint.resume(spark.read.parquet(table), spark.read.parquet(dir))),
+          s"$name manifest, $table")
+        assert(got.count(_.contains("?dayless")) === dayless.size, s"$name manifest, $table")
+      }
+    }
+    // the dayless pages are re-extracted on every run
+    assert(Checkpoint.run(spark, pagesDir, s"$tmp/docs", s"$tmp/manifest0", s"$tmp/metrics",
+      "run1", t0) === dayless.size)
   }
 
   test("salt widths: one writer per fair share of the census, clamped to 1..FilesPerDir") {
