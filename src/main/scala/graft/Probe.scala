@@ -1,12 +1,8 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Semaphore, TimeUnit}
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import graft.pipeline.{Extraction, JobLabel}
+import graft.pipeline.{Extraction, JobLabel, JobLog}
 
 /** Dev probe: times named [[SparkEntry.queries]] entries rep by rep with
   * [[Bench]]'s timed action (`.count()`; a query that throws is still
@@ -21,11 +17,11 @@ import graft.pipeline.{Extraction, JobLabel}
   */
 object Probe {
 
-  /** A job's wall seconds and label (innermost [[JobLabel]], else the rep's). */
+  /** A [[JobLog]] job's wall seconds and label (innermost [[JobLabel]], else the rep's). */
   final case class Job(id: Int, seconds: Double, label: String)
 
   /** Every rep's wall seconds, the last rep's jobs by id, the last error a
-    * rep threw. All seconds come from the scheduler's millisecond clock.
+    * rep threw. Job seconds come from the scheduler's millisecond clock.
     */
   final case class Report(query: String, reps: Seq[Double], jobs: Seq[Job], error: Option[String])
 
@@ -34,21 +30,20 @@ object Probe {
     val fns = names.map(n => n -> SparkEntry.queries.getOrElse(n,
       throw new IllegalArgumentException(s"unknown query $n")))
     val sc = spark.sparkContext
-    val log = new JobLog
-    sc.addSparkListener(log)
-    try fns.map { case (name, fn) =>
+    fns.map { case (name, fn) =>
       var error = Option.empty[String]
-      var lastStart = 0L
-      val times = (1 to reps).map { i =>
-        lastStart = System.currentTimeMillis()
+      def rep(i: Int): Double = {
+        val start = System.currentTimeMillis()
         JobLabel(sc, s"$name rep $i") {
           try fn(spark, sfDir).count()
           catch { case NonFatal(e) => error = Some(String.valueOf(e.getMessage)) }
         }
-        (System.currentTimeMillis() - lastStart) / 1e3
+        (System.currentTimeMillis() - start) / 1e3
       }
-      Report(name, times, log.startedSince(sc, lastStart), error)
-    } finally sc.removeSparkListener(log)
+      val times = (1 until reps).map(rep)
+      val (last, jobs) = JobLog(sc)(rep(reps))
+      Report(name, times :+ last, jobs.map(j => Job(j.id, j.ms / 1e3, j.description)), error)
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -67,38 +62,5 @@ object Probe {
       r.jobs.foreach(j => println(f"PROBE ${r.query} job=${j.id}%4d ${j.seconds}%7.3fs  ${j.label}"))
       println(f"PROBE ${r.query} jobs=${r.jobs.size} sum=${r.jobs.map(_.seconds).sum}%.3fs")
     } finally spark.stop()
-  }
-
-  private val DrainLabel = "probe: drain"
-
-  /** Job start and end events paired by job id, timed by the scheduler. */
-  private final class JobLog extends SparkListener {
-    private val open = new ConcurrentHashMap[Int, (Long, String)]()
-    private val ended = new ConcurrentLinkedQueue[(Long, Job)]()
-    private val drained = new Semaphore(0)
-
-    override def onJobStart(j: SparkListenerJobStart): Unit = {
-      val label = Option(j.properties).flatMap(p =>
-        Option(p.getProperty("spark.job.description"))
-          .orElse(Option(p.getProperty("callSite.short")))).getOrElse("?")
-        .replaceAll("\\s+", " ").trim // streaming batches label over several lines
-      open.put(j.jobId, (j.time, label))
-    }
-
-    override def onJobEnd(j: SparkListenerJobEnd): Unit =
-      Option(open.remove(j.jobId)).foreach { case (start, label) =>
-        if (label == DrainLabel) drained.release()
-        else ended.add((start, Job(j.jobId, (j.time - start) / 1e3, label)))
-      }
-
-    /** The ended jobs that started at or after `fromMs`, once a marker
-      * job's end has arrived: events reach a listener in posting order.
-      */
-    def startedSince(sc: SparkContext, fromMs: Long): Seq[Job] = {
-      JobLabel(sc, DrainLabel)(sc.parallelize(Seq(0), 1).count())
-      require(drained.tryAcquire(60, TimeUnit.SECONDS), "listener bus did not drain in 60 s")
-      try ended.asScala.collect { case (start, job) if start >= fromMs => job }.toSeq.sortBy(_.id)
-      finally ended.clear()
-    }
   }
 }

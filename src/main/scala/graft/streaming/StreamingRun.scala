@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.pipeline.Checkpoint
@@ -18,16 +18,21 @@ import graft.pipeline.Checkpoint
   * through `foreachBatch` with dynamic partition overwrite — so a batch
   * replayed after a crash overwrites its own output partitions instead
   * of duplicating rows (at-least-once delivery × idempotent sink =
-  * exactly-once table state, the streaming rendition of the batch
-  * manifest/anti-join resume). Progress tracking is the streaming
-  * checkpoint (file-source log) instead of the manifest table; metrics
-  * rows carry `batch_id` for replay dedup.
+  * exactly-once table state). Progress tracking is the streaming
+  * checkpoint (file-source log and commit log) where the batch run plans
+  * from its manifest table; metrics rows carry `batch_id` for replay
+  * dedup.
+  *
+  * Every entry point is one source, one drain and one sink:
+  * [[fileStream]] opens the table, [[drain]] runs it to completion, and
+  * the sink is either [[commitNovel]] (a stream's rows, written by
+  * [[writeBatch]]) or a `foreachBatch` body of its own.
   *
   * `Trigger.AvailableNow` drains everything present and stops —
   * incremental catch-up runs (the scheduled-job mode); a `Trigger
   * .ProcessingTime` interval turns the same query into a continuous
-  * tailer. No watermarks/windows: extraction is per-row stateless, so
-  * state never accumulates regardless of stream length.
+  * tailer. The extraction stream needs no watermark: extraction is
+  * per-row stateless, so state never accumulates regardless of length.
   */
 object StreamingRun {
 
@@ -37,48 +42,32 @@ object StreamingRun {
   def runAvailableNow(spark: SparkSession, pagesDir: String, outDir: String,
                       metricsDir: String, checkpointDir: String,
                       runId: String,
-                      maxFilesPerBatch: Int = 1000): Long = {
-    // file stream sources need an explicit schema: one driver-side
-    // metadata read of the existing layout (partition columns included)
-    val schema = spark.read.parquet(pagesDir).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerBatch)
-      .parquet(pagesDir)
-    var batches = 0L
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val docs = Checkpoint.extractParted(batch).persist()
-        // batch_id leads the partition spec: micro-batches split at FILE
-        // granularity, so one (ts_day, url_bucket) partition can span
-        // batches — overwriting at that granularity would wipe earlier
-        // batches' rows. With batch_id outermost, a replayed batch
-        // overwrites exactly its own directories (idempotent) and every
-        // other batch's output is untouched; the level doubles as commit
-        // lineage. Re-crawled urls landing in later waves coexist as new
-        // versions — collapsing them is the dedup/compaction layer's job.
-        // cluster rows by their target directory before the write, or the
-        // table accretes tasks × dirs tiny files batch over batch — the §6
-        // small-file failure mode
-        Checkpoint.clusterByDir(
-          docs.drop("extract_ns", "bytes_in").withColumn("batch_id", lit(batchId)))
-          .write.mode("overwrite").partitionBy("batch_id", "ts_day", "url_bucket")
-          .option("partitionOverwriteMode", "dynamic") // scoped to this writer
-          .parquet(outDir)
-        // docs-only rollup: the batch's source files are not re-scanned
-        Checkpoint.metricsParted(docs, runId)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(metricsDir)
-        docs.unpersist()
-        batches += 1
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches
-  }
+                      maxFilesPerBatch: Int = 1000): Long =
+    drain(fileStream(spark, pagesDir, maxFilesPerBatch), checkpointDir) { (batch, batchId) =>
+      val docs = Checkpoint.extractParted(batch).persist()
+      // batch_id leads the partition spec: micro-batches split at FILE
+      // granularity, so one (ts_day, url_bucket) partition can span
+      // batches — overwriting at that granularity would wipe earlier
+      // batches' rows. With batch_id outermost, a replayed batch
+      // overwrites exactly its own directories (idempotent) and every
+      // other batch's output is untouched; the level doubles as commit
+      // lineage. Re-crawled urls landing in later waves coexist as new
+      // versions — collapsing them is the dedup/compaction layer's job.
+      // cluster rows by their target directory before the write, or the
+      // table accretes tasks × dirs tiny files batch over batch — the §6
+      // small-file failure mode
+      Checkpoint.clusterByDir(
+        docs.drop("extract_ns", "bytes_in").withColumn("batch_id", lit(batchId)))
+        .write.mode("overwrite").partitionBy("batch_id", "ts_day", "url_bucket")
+        .option("partitionOverwriteMode", "dynamic") // scoped to this writer
+        .parquet(outDir)
+      // docs-only rollup: the batch's source files are not re-scanned
+      Checkpoint.metricsParted(docs, runId)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(metricsDir)
+      docs.unpersist()
+      1L
+    }
 
   /** Streaming exact dedup with keyed custom state: the reference's
     * content-hash memoization (`ocr.py:34-37`, §2-B5) as a CONTINUOUS
@@ -93,22 +82,14 @@ object StreamingRun {
     *
     * Within one batch the surviving row is the minimum url of the hash
     * group (deterministic, not arrival-order). Emits `(content_hash,
-    * url)` rows to a Parquet sink (append — rows are novel by
-    * construction). Returns the number of NEW distinct hashes committed
-    * by this call.
+    * url)` rows through [[commitNovel]] (rows are novel by construction).
+    * Returns the number of NEW distinct hashes committed by this call.
     */
   def dedupStreamAvailableNow(spark: SparkSession, pagesDir: String,
                               outDir: String, checkpointDir: String,
                               maxFilesPerBatch: Int = 1000): Long = {
     import spark.implicits._
-    val schema = spark.read.parquet(pagesDir).schema
-    val hashed = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerBatch)
-      .parquet(pagesDir)
-      .select(col("url"), sha2(col("html"), 256).as("content_hash"))
-      .as[(String, String)]
-    val novel = hashed
+    val novel = hashedPages(spark, pagesDir, maxFilesPerBatch)
       .groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (hash: String, rows: Iterator[(String, String)], state: GroupState[Boolean]) =>
@@ -118,7 +99,7 @@ object StreamingRun {
             Iterator.single((hash, rows.map(_._1).min))
           })
       .toDF("content_hash", "url")
-    commitNovel(spark, novel, outDir, checkpointDir)
+    commitNovel(novel, outDir, checkpointDir)
   }
 
   /** TTL'd variant of [[dedupStreamAvailableNow]] — the streaming
@@ -150,14 +131,7 @@ object StreamingRun {
                      ttlMs: Long,
                      maxFilesPerBatch: Int = 1000): Long = {
     import spark.implicits._
-    val schema = spark.read.parquet(pagesDir).schema
-    val hashed = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerBatch)
-      .parquet(pagesDir)
-      .select(col("url"), sha2(col("html"), 256).as("content_hash"))
-      .as[(String, String)]
-    val novel = hashed
+    val novel = hashedPages(spark, pagesDir, maxFilesPerBatch)
       .groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (hash: String, rows: Iterator[(String, String)], state: GroupState[Long]) => {
@@ -168,7 +142,7 @@ object StreamingRun {
           } else Iterator.empty
         })
       .toDF("content_hash", "url")
-    commitNovel(spark, novel, outDir, checkpointDir)
+    commitNovel(novel, outDir, checkpointDir)
   }
 
   /** Event-time sessionization over a file-source event stream: the
@@ -191,11 +165,7 @@ object StreamingRun {
                              outDir: String, checkpointDir: String,
                              gapSeconds: Int, watermarkDelaySeconds: Int,
                              maxFilesPerBatch: Int = 1000): Long = {
-    val schema = spark.read.parquet(eventsDir).schema
-    val sessions = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerBatch)
-      .parquet(eventsDir)
+    val sessions = fileStream(spark, eventsDir, maxFilesPerBatch)
       // event time must be an instant: NTZ event columns cast through LTZ
       // (session timezone is UTC, so the instant is unchanged)
       .withColumn("ts_ltz", col("ts").cast("timestamp_ltz"))
@@ -207,7 +177,7 @@ object StreamingRun {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("events"), round(col("value_sum"), 2).as("value_sum"))
-    commitNovel(spark, sessions, outDir, checkpointDir)
+    commitNovel(sessions, outDir, checkpointDir)
   }
 
   /** Streaming NEAR-dup corpus dedup — the continuous rendition of the
@@ -239,47 +209,29 @@ object StreamingRun {
                                 threshold: Double = 0.8,
                                 shingleK: Int = 3, numHashes: Int = 32,
                                 numBands: Int = 8,
-                                maxFilesPerBatch: Int = 1000): Long = {
-    val schema = spark.read.parquet(pagesDir).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerBatch)
-      .parquet(pagesDir)
-    var emitted = 0L
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // deterministic numeric doc key (cluster canonicals are min-key)
-        val docs = batch.select(xxhash64(col("url")).as("doc_key"),
-          col("url"), col("text"))
-        val self = graft.ops.Dedup.nearDupFilter(docs, "doc_key", "text",
-          shingleK, numHashes, numBands, threshold)
-        val sigsPath = new org.apache.hadoop.fs.Path(s"$indexDir/sigs")
-        val fs = sigsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasIndex = fs.exists(sigsPath) && fs.listStatus(sigsPath)
-          .exists(st => st.isDirectory || st.getPath.getName.endsWith(".parquet"))
-        val survivors =
-          (if (hasIndex)
-            graft.ops.Dedup.dedupAgainstIndex(self, "doc_key", "text",
-              indexDir, threshold)
-          else self).persist()
-        val n = survivors.count()
-        survivors.coalesce(sinkPartitions(survivors))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(outDir)
-        graft.ops.Dedup.appendMinhashSigs(survivors, "doc_key", "text",
-          indexDir, batchId, shingleK, numHashes, numBands)
-        survivors.unpersist()
-        emitted += n
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    emitted
-  }
+                                maxFilesPerBatch: Int = 1000): Long =
+    drain(fileStream(spark, pagesDir, maxFilesPerBatch), checkpointDir) { (batch, batchId) =>
+      // deterministic numeric doc key (cluster canonicals are min-key)
+      val docs = batch.select(xxhash64(col("url")).as("doc_key"),
+        col("url"), col("text"))
+      val self = graft.ops.Dedup.nearDupFilter(docs, "doc_key", "text",
+        shingleK, numHashes, numBands, threshold)
+      val sigsPath = new org.apache.hadoop.fs.Path(s"$indexDir/sigs")
+      val fs = sigsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val hasIndex = fs.exists(sigsPath) && fs.listStatus(sigsPath)
+        .exists(st => st.isDirectory || st.getPath.getName.endsWith(".parquet"))
+      val survivors =
+        (if (hasIndex)
+          graft.ops.Dedup.dedupAgainstIndex(self, "doc_key", "text",
+            indexDir, threshold)
+        else self).persist()
+      val n = survivors.count()
+      writeBatch(survivors, batchId, outDir)
+      graft.ops.Dedup.appendMinhashSigs(survivors, "doc_key", "text",
+        indexDir, batchId, shingleK, numHashes, numBands)
+      survivors.unpersist()
+      n
+    }
 
   /** Stream-stream event-time INTERVAL join (§2-I): left rows match
     * right rows with the same `user_id` whose event time falls in
@@ -310,25 +262,20 @@ object StreamingRun {
                                joinWindowSeconds: Int,
                                watermarkDelaySeconds: Int,
                                maxFilesPerBatch: Int = 1000): Long = {
-    def side(dir: String, p: String): DataFrame = {
-      val schema = spark.read.parquet(dir).schema
-      spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", maxFilesPerBatch)
-        .parquet(dir)
+    def side(dir: String, p: String): DataFrame =
+      fileStream(spark, dir, maxFilesPerBatch)
         .select(col("user_id").as(s"${p}_user"),
           col("event_id").as(s"${p}_event"),
           // event time as an instant, same cast discipline as sessionize
           col("ts").cast("timestamp_ltz").as(s"${p}_ts"))
         .withWatermark(s"${p}_ts", s"$watermarkDelaySeconds seconds")
-    }
     val joined = side(leftDir, "l").join(side(rightDir, "r"),
       expr(s"""l_user = r_user AND
                r_ts >= l_ts AND
                r_ts <= l_ts + interval $joinWindowSeconds seconds"""))
       .select(col("l_user").as("user_id"), col("l_event"), col("r_event"),
         col("l_ts"), col("r_ts"))
-    commitNovel(spark, joined, outDir, checkpointDir)
+    commitNovel(joined, outDir, checkpointDir)
   }
 
   /** Stream-STATIC enrichment — the dimension-join shape every event
@@ -344,14 +291,9 @@ object StreamingRun {
                                dimDir: String, keyCol: String,
                                outDir: String, checkpointDir: String,
                                maxFilesPerBatch: Int = 1000): Long = {
-    val schema = spark.read.parquet(eventsDir).schema
-    val events = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerBatch)
-      .parquet(eventsDir)
     val dim = broadcast(spark.read.parquet(dimDir))
-    val joined = events.join(dim, Seq(keyCol))
-    commitNovel(spark, joined, outDir, checkpointDir)
+    val joined = fileStream(spark, eventsDir, maxFilesPerBatch).join(dim, Seq(keyCol))
+    commitNovel(joined, outDir, checkpointDir)
   }
 
   /** The engine-NATIVE dedup twin of [[dedupStreamTtl]]:
@@ -367,17 +309,13 @@ object StreamingRun {
                                        outDir: String, checkpointDir: String,
                                        delaySeconds: Int,
                                        maxFilesPerBatch: Int = 1000): Long = {
-    val schema = spark.read.parquet(pagesDir).schema
-    val pages = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerBatch)
-      .parquet(pagesDir)
+    val pages = fileStream(spark, pagesDir, maxFilesPerBatch)
       .withColumn("content_hash", sha2(col("html"), 256))
       .withColumn("event_ts", col("warc_ts").cast("timestamp_ltz"))
       .withWatermark("event_ts", s"$delaySeconds seconds")
       .dropDuplicatesWithinWatermark("content_hash")
       .select(col("url"), col("content_hash"), col("event_ts"))
-    commitNovel(spark, pages, outDir, checkpointDir)
+    commitNovel(pages, outDir, checkpointDir)
   }
 
   /** Target bytes per micro-batch sink file. */
@@ -400,36 +338,65 @@ object StreamingRun {
     byBytes.min(BigInt(batch.rdd.getNumPartitions)).toInt
   }
 
-  /** Exactly-once commit for the dedup streams: `foreachBatch` has no
+  /** Exactly-once commit of a stream's rows, for every entry point but
+    * [[runAvailableNow]] and the near-dup stream: `foreachBatch` has no
     * sink batch log, so a crash between the write and the checkpoint
-    * commit replays the micro-batch — a plain append would then duplicate
-    * its rows. Leading the partition spec with `batch_id` + dynamic
-    * partition overwrite makes the replay overwrite exactly its own
-    * directory instead (the same idempotent-sink shape as
-    * [[runAvailableNow]]). Returns the number of novel rows committed.
+    * commit replays the micro-batch, and a plain append would duplicate
+    * its rows; [[writeBatch]] overwrites the batch's own directory
+    * instead. Returns the number of rows committed.
     */
-  private def commitNovel(spark: SparkSession, novel: DataFrame,
-                          outDir: String, checkpointDir: String): Long = {
-    var emitted = 0L
-    val q = novel.writeStream
+  private def commitNovel(novel: DataFrame, outDir: String, checkpointDir: String): Long =
+    drain(novel, checkpointDir) { (batch, batchId) =>
+      val n = batch.persist().count()
+      writeBatch(batch, batchId, outDir)
+      batch.unpersist()
+      n
+    }
+
+  /** The Parquet table under `dir` as a file stream, `maxFiles` new files
+    * per micro-batch at most. The explicit schema file sources need is one
+    * driver-side metadata read of the layout (partition columns included).
+    */
+  private def fileStream(spark: SparkSession, dir: String, maxFiles: Int): DataFrame =
+    spark.readStream
+      .schema(spark.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", maxFiles)
+      .parquet(dir)
+
+  /** Arriving pages as `(url, content_hash)`, both exact-dedup sources. */
+  private def hashedPages(spark: SparkSession, pagesDir: String,
+                          maxFiles: Int): Dataset[(String, String)] = {
+    import spark.implicits._
+    fileStream(spark, pagesDir, maxFiles)
+      .select(col("url"), sha2(col("html"), 256).as("content_hash"))
+      .as[(String, String)]
+  }
+
+  /** Runs `stream` under `Trigger.AvailableNow` until everything present
+    * is processed, `sink` committing each micro-batch by its id; progress
+    * lives under `checkpointDir`. Returns the sum of what `sink` returned.
+    */
+  private def drain(stream: DataFrame, checkpointDir: String)(
+      sink: (DataFrame, Long) => Long): Long = {
+    var total = 0L
+    stream.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val n = batch.persist().count()
-        // partitionOverwriteMode scoped to THIS writer — a session-wide
-        // conf.set would silently turn every later overwrite in the same
-        // SparkSession dynamic (leaving stale partitions in place)
-        batch.coalesce(sinkPartitions(batch))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(outDir)
-        batch.unpersist()
-        emitted += n
-        ()
-      }
+      .foreachBatch { (batch: DataFrame, batchId: Long) => total += sink(batch, batchId) }
       .start()
-    q.awaitTermination()
-    emitted
+      .awaitTermination()
+    total
   }
+
+  /** Writes a micro-batch, sized by [[sinkPartitions]], to
+    * `outDir/batch_id=<batchId>` by dynamic partition overwrite, scoped to
+    * THIS writer: a session-wide conf.set would silently turn every later
+    * overwrite in the SparkSession dynamic (leaving stale partitions).
+    */
+  private def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit =
+    batch.coalesce(sinkPartitions(batch))
+      .withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite").partitionBy("batch_id")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(outDir)
 }

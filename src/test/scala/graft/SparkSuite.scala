@@ -11,11 +11,8 @@ object SparkSuite {
     SparkSession.builder().master("local[4]").appName("graft-test"), 4)
     .getOrCreate()
 
-  /** One job [[SparkSuite.jobsDuring]] saw: its description (the innermost
-    * job description, else its call site), the tasks that ended in its
-    * stages, and its wall milliseconds on the scheduler's clock.
-    */
-  final case class Job(description: String, tasks: Int, ms: Long)
+  /** One job [[SparkSuite.jobsDuring]] saw. */
+  type Job = graft.pipeline.JobLog.Job
 }
 
 trait SparkSuite extends BeforeAndAfterAll { this: Suite =>
@@ -36,63 +33,19 @@ trait SparkSuite extends BeforeAndAfterAll { this: Suite =>
     dir.toString
   }
 
-  override def afterAll(): Unit =
-    try scratchDirs.forEach(d => org.apache.commons.io.FileUtils.deleteDirectory(d))
-    finally super.afterAll()
-
-  /** Every job `body` starts, in job id order. Jobs are told apart from
-    * other suites' by a local property `body`'s thread (and any thread it
-    * starts) carries; the list is complete when this returns, since a
-    * marker job's end is awaited and a listener queue delivers events in
-    * posting order.
+  /** Stops the state stores first: their background maintenance would
+    * otherwise keep writing snapshots into a streaming spec's checkpoint
+    * while it is deleted. A later suite's query starts it again.
     */
-  def jobsDuring(body: => Any): Seq[SparkSuite.Job] = {
-    import org.apache.spark.scheduler._
-    import scala.collection.concurrent.TrieMap
-    val sc = spark.sparkContext
-    val key = "graft.test.jobsDuring"
-    val tag = java.util.UUID.randomUUID().toString
-    val marker = s"$tag marker"
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val started = TrieMap.empty[Int, (String, Long)]
-    val stageJob = TrieMap.empty[Int, Int]
-    val tasks = TrieMap.empty[Int, Int]
-    val ended = TrieMap.empty[Int, SparkSuite.Job]
-    @volatile var markerId = -1
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val props = Option(j.properties)
-        props.map(_.getProperty(key)) match {
-          case Some(`tag`) =>
-            started(j.jobId) = (props.flatMap(p => Option(p.getProperty("spark.job.description"))
-              .orElse(Option(p.getProperty("callSite.short")))).getOrElse(""), j.time)
-            j.stageIds.foreach(stageJob(_) = j.jobId)
-          case Some(`marker`) => markerId = j.jobId
-          case _ =>
-        }
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        stageJob.get(t.stageId).foreach(id => tasks(id) = tasks.getOrElse(id, 0) + 1)
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        if (j.jobId == markerId) drained.countDown()
-        else started.get(j.jobId).foreach { case (description, t0) =>
-          ended(j.jobId) = SparkSuite.Job(description, tasks.getOrElse(j.jobId, 0), j.time - t0)
-        }
-    }
-    def tagged(value: String)(run: => Any): Unit = {
-      val outer = sc.getLocalProperty(key)
-      sc.setLocalProperty(key, value)
-      try run finally sc.setLocalProperty(key, outer)
-    }
-    sc.addSparkListener(listener)
+  override def afterAll(): Unit =
     try {
-      tagged(tag)(body)
-      tagged(marker)(sc.parallelize(Seq(0), 1).count())
-      require(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not drain in 60 s")
-    } finally sc.removeSparkListener(listener)
-    ended.toSeq.sortBy(_._1).map(_._2)
-  }
+      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+      scratchDirs.forEach(d => org.apache.commons.io.FileUtils.deleteDirectory(d))
+    } finally super.afterAll()
+
+  /** Every job `body` starts, in job id order ([[graft.pipeline.JobLog]]). */
+  def jobsDuring(body: => Any): Seq[SparkSuite.Job] =
+    graft.pipeline.JobLog(spark.sparkContext)(body)._2
 
   /** Parquet file count of every directory matching the glob `dirs`
     * relative to `root`.

@@ -9,6 +9,74 @@ import graft.streaming.StreamingRun
 class StreamingSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
+  /** Forgets the newest micro-batch's commit, as a crash between its sink
+    * write and its checkpoint commit would: the next drain replays that
+    * batch from its logged offsets. Returns the replayed batch id.
+    */
+  private def uncommitNewest(ckptDir: String): Long = {
+    val commits = new java.io.File(s"$ckptDir/commits")
+    val newest = commits.list().filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).max
+    java.nio.file.Files.delete(new java.io.File(commits, s"$newest").toPath)
+    java.nio.file.Files.deleteIfExists(new java.io.File(commits, s".$newest.crc").toPath)
+    newest
+  }
+
+  /** Every row of the Parquet table under `dir` as JSON, sorted: a row
+    * multiset.
+    */
+  private def rowsOf(dir: String, drop: String*): Seq[String] =
+    spark.read.parquet(dir).drop(drop: _*).toJSON.collect().sorted.toSeq
+
+  test("a replayed micro-batch rewrites its own output: extraction and exact dedup") {
+    val tmp = scratchDir("sreplay")
+    val fixture = PageGen.pages(150)
+    val pagesDir = s"$tmp/pages"
+    Checkpoint.writePages(spark.createDataset(fixture).toDF(), pagesDir)
+    def noDuplicateRows(dir: String) = {
+      val out = spark.read.parquet(dir)
+      assert(out.select($"batch_id", $"url").distinct().count() === out.count(),
+        s"a (batch_id, url) row written twice under $dir")
+    }
+
+    // the extraction stream: docs and metrics, several micro-batches
+    val (docsDir, metDir, ckpt) = (s"$tmp/docs", s"$tmp/metrics", s"$tmp/ckpt")
+    val drain = () => StreamingRun.runAvailableNow(spark, pagesDir, docsDir, metDir, ckpt,
+      "s-replay", maxFilesPerBatch = 8)
+    assert(drain() >= 2)
+    val docs1 = rowsOf(docsDir)
+    // wall_ms and docs_per_sec time the extraction, so only they differ
+    // between a batch and its replay
+    val timing = Seq("wall_ms", "docs_per_sec")
+    val metrics1 = rowsOf(metDir, timing: _*)
+    val replayed = uncommitNewest(ckpt)
+    assert(drain() === 1L, "exactly the uncommitted batch runs again")
+    assert(rowsOf(docsDir) === docs1, "the replay must overwrite its own docs")
+    noDuplicateRows(docsDir)
+    // metrics are appended: the replayed batch's rows come back as exact
+    // copies under the same batch_id, and the distinct rows still count
+    // every document once
+    val copies = spark.read.parquet(metDir).where($"batch_id" === replayed)
+      .drop(timing: _*).toJSON.collect().distinct
+    assert(copies.nonEmpty)
+    assert(rowsOf(metDir, timing: _*) === (metrics1 ++ copies).sorted,
+      "the replay appends one exact copy of each of its metrics rows")
+    assert(spark.read.parquet(metDir).drop(timing: _*).distinct()
+      .agg(sum($"docs")).as[Long].head() === fixture.size.toLong)
+
+    // the exact-dedup stream through the shared sink
+    val (novelDir, dedupCkpt) = (s"$tmp/novel", s"$tmp/dedup-ckpt")
+    val dedup = () => StreamingRun.dedupStreamAvailableNow(spark, pagesDir, novelDir, dedupCkpt,
+      maxFilesPerBatch = 8)
+    val n1 = dedup()
+    assert(n1 === fixture.map(_.html.toSeq).distinct.size.toLong)
+    val novel1 = rowsOf(novelDir)
+    val last = uncommitNewest(dedupCkpt)
+    val lastRows = spark.read.parquet(novelDir).where($"batch_id" === last).count()
+    assert(dedup() === lastRows, "the replay re-emits exactly the batch's own rows")
+    assert(rowsOf(novelDir) === novel1, "the replay must overwrite its own rows")
+    noDuplicateRows(novelDir)
+  }
+
   test("streaming ingestion: drains existing files, then processes only new arrivals") {
     val tmp = scratchDir("stream")
     val (pagesDir, outDir, metDir, ckptDir) =
@@ -248,6 +316,28 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       ckptDir, idxDir, threshold = 0.7, maxFilesPerBatch = 4)
     assert(n3 === 0L)
     assert(spark.read.parquet(outDir).count() === 12L)
+
+    // replay: the newest batch's commit is lost, so the next drain runs it
+    // again; the table keeps exactly its rows. Then the same with the
+    // batch's signatures lost too (a crash between the sink write and the
+    // index append): the replay recomputes the batch's survivors and
+    // overwrites its own directory with them
+    val before = rowsOf(outDir)
+    def replay(): Long = {
+      val n = StreamingRun.nearDupStreamAvailableNow(spark, pagesDir, outDir,
+        ckptDir, idxDir, threshold = 0.7, maxFilesPerBatch = 4)
+      assert(rowsOf(outDir) === before, "a replayed batch must leave the table as it was")
+      val out = spark.read.parquet(outDir)
+      assert(out.select($"batch_id", $"url").distinct().count() === out.count())
+      n
+    }
+    uncommitNewest(ckptDir)
+    replay()
+    val last = uncommitNewest(ckptDir)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$idxDir/sigs/batch_id=$last"))
+    val lastRows = spark.read.parquet(outDir).where($"batch_id" === last).count()
+    assert(lastRows > 0, s"batch $last kept no document: the replay shows nothing")
+    assert(replay() === lastRows)
   }
 
   test("stream-stream interval join equals the batch join; later drains emit only new matches") {
