@@ -2502,15 +2502,23 @@ object MediaGen {
   /** `ref` selects the prediction reference (0=LAST 1=GOLDEN 2=ALTREF);
     * `refreshGolden`/`refreshAltref` update those buffers from this
     * frame's reconstruction (§9.7) — LAST always refreshes in fixtures.
+    *
+    * `intraOf`: per MB, `Some(yMode)` (0=DC 1=V 2=H 3=TM) encodes an
+    * INTRA macroblock inside the interframe — chroma DC, residual
+    * skipped, predicted from this frame's reconstructed neighbors with
+    * the 127 (above) / 129 (left) frame-edge values. It takes precedence
+    * over `splitOf`/`mvOf` for that MB and is not combined with `target`.
     */
   final case class Vp8Move(dx8: Int, dy8: Int, target: Option[Array[Int]] = None,
                            mvOf: Option[(Int, Int) => (Int, Int)] = None,
                            splitOf: Option[(Int, Int) => Option[(Int, Seq[(Int, Int)])]] = None,
                            ref: Int = 0, refreshGolden: Boolean = false,
-                           refreshAltref: Boolean = false)
+                           refreshAltref: Boolean = false,
+                           intraOf: Option[(Int, Int) => Option[Int]] = None)
 
   /** Encode a raw VP8 frame SEQUENCE: a keyframe from `luma0`, then one
-    * interframe per [[Vp8Move]] — every MB inter/LAST with the move's
+    * interframe per [[Vp8Move]] — every MB `intraOf` leaves out is inter
+    * with the move's reference and
     * MV (ZERO/NEAREST/NEAR/NEW chosen against the same `find_near_mvs`
     * contexts the decoder computes, via the SHARED
     * [[graft.kernel.Vp8Video.findNearMvs]] so the two can never drift),
@@ -2600,6 +2608,33 @@ object MediaGen {
         mv.splitOf.flatMap(f => f(mbX, mbY))
       require(mv.target.isEmpty || mv.splitOf.isEmpty,
         "fixture does not combine residuals with SPLITMV")
+      require(mv.target.isEmpty || mv.intraOf.isEmpty,
+        "fixture does not combine residuals with intra MBs")
+      def intraAt(mbX: Int, mbY: Int): Option[Int] = {
+        val m = mv.intraOf.flatMap(f => f(mbX, mbY))
+        require(m.forall(y => y >= 0 && y <= 3), s"intra MB mode $m is not DC/V/H/TM")
+        m
+      }
+      /** 16x16 intra prediction of MB (mbX, mbY) into `curY` from its
+        * reconstructed neighbors, mirroring the decoder's edge values.
+        */
+      def predictIntra(mbX: Int, mbY: Int, mode: Int): Unit = {
+        val x0 = mbX * 16; val y0 = mbY * 16
+        def above(i: Int): Int = if (mbY > 0) curY((y0 - 1) * w16 + x0 + i) else 127
+        def left(j: Int): Int = if (mbX > 0) curY((y0 + j) * w16 + x0 - 1) else 129
+        val corner = if (mbY == 0) 127 else if (mbX == 0) 129 else curY((y0 - 1) * w16 + x0 - 1)
+        val n = (if (mbY > 0) 16 else 0) + (if (mbX > 0) 16 else 0)
+        val sum = (0 until 16).map(i =>
+          (if (mbY > 0) above(i) else 0) + (if (mbX > 0) left(i) else 0)).sum
+        val dc = if (n == 0) 128 else (sum + n / 2) / n
+        for (j <- 0 until 16; i <- 0 until 16)
+          curY((y0 + j) * w16 + x0 + i) = mode match {
+            case 0 => dc
+            case 1 => above(i)
+            case 2 => left(j)
+            case _ => math.max(0, math.min(255, left(j) + above(i) - corner))
+          }
+      }
       /** Per-subblock MVs of an MB (all 16 equal for whole-MB modes). */
       def subMvsOf(mbX: Int, mbY: Int): (Array[Int], Array[Int]) =
         splitAt(mbX, mbY) match {
@@ -2625,7 +2660,8 @@ object MediaGen {
       while (mbY < mbH) {
         var mbX = 0
         while (mbX < mbW) {
-          if (splitAt(mbX, mbY).isEmpty) {
+          if (intraAt(mbX, mbY).isDefined) () // predicted after the inter MBs
+          else if (splitAt(mbX, mbY).isEmpty) {
             val (dx8, dy8) = mvAt(mbX, mbY)
             require((dx8 & 1) == 0 && (dy8 & 1) == 0, "MV must be even (quarter-pel)")
             Vp8Video.mcBlock(ref.y, w16, h16,
@@ -2722,6 +2758,10 @@ object MediaGen {
             my += 1
           }
       }
+      // intra MBs, in raster order: their inter neighbors are final, and
+      // an intra neighbor above or to the left is predicted first
+      for (my <- 0 until mbH; mx <- 0 until mbW; mode <- intraAt(mx, my))
+        predictIntra(mx, my, mode)
 
       // ---- part 0: interframe header + modes
       val e0 = new Vp8BoolEnc
@@ -2769,71 +2809,83 @@ object MediaGen {
         var mbX = 0
         while (mbX < mbW) {
           e0.put(128, if (skips(mbY * mbW + mbX)) 1 else 0) // skip
-          e0.put(128, 1) // is_inter
-          if (mv.ref == 0) e0.put(128, 0) // LAST
-          else {
-            e0.put(128, 1)
-            e0.put(128, if (mv.ref == 1) 0 else 1) // GOLDEN / ALTREF
-          }
-          val (bestX0, bestY0, nearestX0, nearestY0, nearX0, nearY0, cnt) =
-            Vp8Video.findNearMvs(grid, mbW, mbX, mbY, curBias = false, _ => false)
-          val (bestX, bestY) = Vp8Video.clampMv(bestX0, bestY0, mbX, mbY, mbW, mbH)
-          val (nearestX, nearestY) = Vp8Video.clampMv(nearestX0, nearestY0, mbX, mbY, mbW, mbH)
-          val (nearX, nearY) = Vp8Video.clampMv(nearX0, nearY0, mbX, mbY, mbW, mbH)
-          val mp = Array(
-            Vp8Video.modeContexts(cnt(0))(0), Vp8Video.modeContexts(cnt(1))(1),
-            Vp8Video.modeContexts(cnt(2))(2), Vp8Video.modeContexts(cnt(3))(3))
-          val (smX, smY) = subMvsOf(mbX, mbY)
-          splitAt(mbX, mbY) match {
-            case Some((part, mvs)) =>
-              e0.tree(Vp8Video.mvRefTree, mp, 0, 4) // SPLIT
-              e0.tree(Vp8Video.splitPartTree, Vp8Video.splitPartProbs, 0, part)
-              val fill = Vp8Video.splitFills(part)
-              var k = 0
-              while (k < Vp8Video.splitCounts(part)) {
-                var fi = 0
-                while (fill(fi) != k) fi += 1
-                val sx = fi & 3; val sy = fi >> 2
-                val lX = if (sx == 0) leftMvX(sy) else smX(fi - 1)
-                val lY = if (sx == 0) leftMvY(sy) else smY(fi - 1)
-                val aX = if (sy == 0) aboveMvX(mbX * 4 + sx) else smX(fi - 4)
-                val aY = if (sy == 0) aboveMvY(mbX * 4 + sx) else smY(fi - 4)
-                val lez = lX == 0 && lY == 0
-                val aez = aX == 0 && aY == 0
-                val lea = lX == aX && lY == aY
-                val ctx =
-                  if (lea && lez) 4 else if (lea) 3
-                  else if (aez) 2 else if (lez) 1 else 0
-                val (vx, vy) = mvs(k)
-                val probs = Vp8Video.subMvRefProbs(ctx)
-                if (vx == lX && vy == lY)
-                  e0.tree(Vp8Video.subMvRefTree, probs, 0, 0) // LEFT
-                else if (vx == aX && vy == aY)
-                  e0.tree(Vp8Video.subMvRefTree, probs, 0, 1) // ABOVE
-                else if (vx == 0 && vy == 0)
-                  e0.tree(Vp8Video.subMvRefTree, probs, 0, 2) // ZERO
-                else {
-                  e0.tree(Vp8Video.subMvRefTree, probs, 0, 3) // NEW
-                  putMvComponent(e0, Vp8Video.mvDefaultProbs(0), vy - bestY)
-                  putMvComponent(e0, Vp8Video.mvDefaultProbs(1), vx - bestX)
-                }
-                k += 1
-              }
-              grid(mbY * mbW + mbX) = Vp8Video.MbInfo(mv.ref, smX(15), smY(15), split = true)
+          val intra = intraAt(mbX, mbY)
+          // intra MBs contribute zero MVs to the sub-MV contexts
+          val (smX, smY) =
+            if (intra.isDefined) (new Array[Int](16), new Array[Int](16))
+            else subMvsOf(mbX, mbY)
+          intra match {
+            case Some(yMode) =>
+              e0.put(128, 0) // is_inter = 0
+              e0.tree(Vp8Video.yModeTree, Vp8Video.yModeDefaultProbs, 0, yMode)
+              e0.tree(uvModeTree, Vp8Video.uvModeDefaultProbs, 0, 0) // chroma DC
+              grid(mbY * mbW + mbX) = Vp8Video.OutsideMb
             case None =>
-              val dx8 = smX(0); val dy8 = smY(0)
-              if (dx8 == 0 && dy8 == 0)
-                e0.tree(Vp8Video.mvRefTree, mp, 0, 0) // ZERO
-              else if (dx8 == nearestX && dy8 == nearestY)
-                e0.tree(Vp8Video.mvRefTree, mp, 0, 1) // NEAREST
-              else if (dx8 == nearX && dy8 == nearY)
-                e0.tree(Vp8Video.mvRefTree, mp, 0, 2) // NEAR
+              e0.put(128, 1) // is_inter
+              if (mv.ref == 0) e0.put(128, 0) // LAST
               else {
-                e0.tree(Vp8Video.mvRefTree, mp, 0, 3) // NEW
-                putMvComponent(e0, Vp8Video.mvDefaultProbs(0), dy8 - bestY)
-                putMvComponent(e0, Vp8Video.mvDefaultProbs(1), dx8 - bestX)
+                e0.put(128, 1)
+                e0.put(128, if (mv.ref == 1) 0 else 1) // GOLDEN / ALTREF
               }
-              grid(mbY * mbW + mbX) = Vp8Video.MbInfo(mv.ref, dx8, dy8, split = false)
+              val (bestX0, bestY0, nearestX0, nearestY0, nearX0, nearY0, cnt) =
+                Vp8Video.findNearMvs(grid, mbW, mbX, mbY, curBias = false, _ => false)
+              val (bestX, bestY) = Vp8Video.clampMv(bestX0, bestY0, mbX, mbY, mbW, mbH)
+              val (nearestX, nearestY) = Vp8Video.clampMv(nearestX0, nearestY0, mbX, mbY, mbW, mbH)
+              val (nearX, nearY) = Vp8Video.clampMv(nearX0, nearY0, mbX, mbY, mbW, mbH)
+              val mp = Array(
+                Vp8Video.modeContexts(cnt(0))(0), Vp8Video.modeContexts(cnt(1))(1),
+                Vp8Video.modeContexts(cnt(2))(2), Vp8Video.modeContexts(cnt(3))(3))
+              splitAt(mbX, mbY) match {
+                case Some((part, mvs)) =>
+                  e0.tree(Vp8Video.mvRefTree, mp, 0, 4) // SPLIT
+                  e0.tree(Vp8Video.splitPartTree, Vp8Video.splitPartProbs, 0, part)
+                  val fill = Vp8Video.splitFills(part)
+                  var k = 0
+                  while (k < Vp8Video.splitCounts(part)) {
+                    var fi = 0
+                    while (fill(fi) != k) fi += 1
+                    val sx = fi & 3; val sy = fi >> 2
+                    val lX = if (sx == 0) leftMvX(sy) else smX(fi - 1)
+                    val lY = if (sx == 0) leftMvY(sy) else smY(fi - 1)
+                    val aX = if (sy == 0) aboveMvX(mbX * 4 + sx) else smX(fi - 4)
+                    val aY = if (sy == 0) aboveMvY(mbX * 4 + sx) else smY(fi - 4)
+                    val lez = lX == 0 && lY == 0
+                    val aez = aX == 0 && aY == 0
+                    val lea = lX == aX && lY == aY
+                    val ctx =
+                      if (lea && lez) 4 else if (lea) 3
+                      else if (aez) 2 else if (lez) 1 else 0
+                    val (vx, vy) = mvs(k)
+                    val probs = Vp8Video.subMvRefProbs(ctx)
+                    if (vx == lX && vy == lY)
+                      e0.tree(Vp8Video.subMvRefTree, probs, 0, 0) // LEFT
+                    else if (vx == aX && vy == aY)
+                      e0.tree(Vp8Video.subMvRefTree, probs, 0, 1) // ABOVE
+                    else if (vx == 0 && vy == 0)
+                      e0.tree(Vp8Video.subMvRefTree, probs, 0, 2) // ZERO
+                    else {
+                      e0.tree(Vp8Video.subMvRefTree, probs, 0, 3) // NEW
+                      putMvComponent(e0, Vp8Video.mvDefaultProbs(0), vy - bestY)
+                      putMvComponent(e0, Vp8Video.mvDefaultProbs(1), vx - bestX)
+                    }
+                    k += 1
+                  }
+                  grid(mbY * mbW + mbX) = Vp8Video.MbInfo(mv.ref, smX(15), smY(15), split = true)
+                case None =>
+                  val dx8 = smX(0); val dy8 = smY(0)
+                  if (dx8 == 0 && dy8 == 0)
+                    e0.tree(Vp8Video.mvRefTree, mp, 0, 0) // ZERO
+                  else if (dx8 == nearestX && dy8 == nearestY)
+                    e0.tree(Vp8Video.mvRefTree, mp, 0, 1) // NEAREST
+                  else if (dx8 == nearX && dy8 == nearY)
+                    e0.tree(Vp8Video.mvRefTree, mp, 0, 2) // NEAR
+                  else {
+                    e0.tree(Vp8Video.mvRefTree, mp, 0, 3) // NEW
+                    putMvComponent(e0, Vp8Video.mvDefaultProbs(0), dy8 - bestY)
+                    putMvComponent(e0, Vp8Video.mvDefaultProbs(1), dx8 - bestX)
+                  }
+                  grid(mbY * mbW + mbX) = Vp8Video.MbInfo(mv.ref, dx8, dy8, split = false)
+              }
           }
           var sb2 = 0
           while (sb2 < 4) {

@@ -11,9 +11,10 @@ package graft.kernel
   *    FlateDecode) and the five per-row filters reconstructed per the
   *    PNG specification (None/Sub/Up/Average/Paeth).
   *
-  * Formats that genuinely require codec libraries (JPEG entropy coding,
-  * video codecs) stay behind the documented stub container in
-  * [[graft.ops.Multimodal]]; everything here is a real decode.
+  * JPEG ([[Jpeg]]), lossy WebP and VP8 video ([[Vp8]], [[Vp8Video]])
+  * decode in kernels of their own; only codec-library formats such as
+  * H.264 video stay behind the documented stub container in
+  * [[graft.ops.Multimodal]]. Everything here is a real decode.
   *
   * All functions throw on malformed input — callers isolate failures
   * per-row (C5), mirroring the reference's chunk-failure tolerance

@@ -27,6 +27,11 @@ package graft.kernel
   *    `Frame.filtered` reports whether the stream carried a nonzero
   *    filter level.
   *
+  * The per-frame pieces — [[tokenPartitions]], [[QuantHeader]] and the
+  * macroblock core [[Recon]] (bordered planes, intra predictors,
+  * residual tokens + inverse transforms, crop) — are shared with
+  * [[Vp8Video]]'s interframes, which add only motion compensation.
+  *
   * The whole path — unfiltered and filtered, segmented, multi-partition,
   * odd dims, q10…q90 — decodes byte-exactly against the system
   * libwebp's own output (MediaSpec: 17 streams from tools/vp8_differential.py,
@@ -167,76 +172,14 @@ object Vp8 {
     }
   }
 
-  // --------------------------------------------------------------- decode
-  /** Decode the payload of a WebP 'VP8 ' chunk (a raw VP8 keyframe). */
-  def decodeFrame(d: Array[Byte]): Frame = {
-    if (d.length < 10) throw new Vp8Error("truncated VP8 frame")
-    val tag = (d(0) & 0xff) | ((d(1) & 0xff) << 8) | ((d(2) & 0xff) << 16)
-    val keyFrame = (tag & 1) == 0
-    val part0Len = tag >>> 5
-    if (!keyFrame) throw new Vp8Error("not a keyframe (WebP stills are keyframes)")
-    if ((d(3) & 0xff) != 0x9d || (d(4) & 0xff) != 0x01 || (d(5) & 0xff) != 0x2a)
-      throw new Vp8Error("bad VP8 start code")
-    val width = ((d(6) & 0xff) | ((d(7) & 0xff) << 8)) & 0x3fff
-    val height = ((d(8) & 0xff) | ((d(9) & 0xff) << 8)) & 0x3fff
-    if (width == 0 || height == 0) throw new Vp8Error("zero dimension")
-    if (width.toLong * height > (1L << 26)) throw new Vp8Error("implausible dims")
-    val part0End = 10L + part0Len
-    if (part0End > d.length) throw new Vp8Error("truncated first partition")
-    val br = new Bool(d, 10, part0End.toInt)
-
-    br.bit(128) // color space (0 in conformant streams)
-    br.bit(128) // clamping type
-
-    // ---- segmentation header (9.3)
-    val segPerMb = new Array[Int](4)
-    val segLf = new Array[Int](4)
-    var segAbs = false
-    var segEnabled = false
-    var segUpdateMap = false
-    val segTreeProbs = Array(255, 255, 255)
-    if (br.bit(128) == 1) {
-      segEnabled = true
-      segUpdateMap = br.bit(128) == 1
-      val updateData = br.bit(128) == 1
-      if (updateData) {
-        segAbs = br.bit(128) == 1
-        var i = 0
-        while (i < 4) { segPerMb(i) = br.maybeSigned(7); i += 1 }
-        i = 0
-        while (i < 4) { segLf(i) = br.maybeSigned(6); i += 1 }
-      }
-      if (segUpdateMap) {
-        var i = 0
-        while (i < 3) {
-          segTreeProbs(i) = if (br.bit(128) == 1) br.literal(8) else 255
-          i += 1
-        }
-      }
-    }
-
-    // ---- loop filter header (9.4)
-    val simpleFilter = br.bit(128) == 1
-    val filterLevel = br.literal(6)
-    val sharpness = br.literal(3)
-    // ref/mode lf deltas persist across frames in video; a still decodes
-    // with all-zero initial values updated by this header
-    val refLfDeltas = new Array[Int](4)
-    val modeLfDeltas = new Array[Int](4)
-    var lfDeltaEnabled = false
-    if (br.bit(128) == 1) {
-      lfDeltaEnabled = true
-      if (br.bit(128) == 1) { // update
-        var i = 0
-        while (i < 4) { if (br.bit(128) == 1) refLfDeltas(i) = br.signed(6); i += 1 }
-        i = 0
-        while (i < 4) { if (br.bit(128) == 1) modeLfDeltas(i) = br.signed(6); i += 1 }
-      }
-    }
-
-    // ---- token partitions (9.5)
+  // ------------------------------------------------ shared frame pieces
+  /** Token partitions (RFC 9.5): the count from the first partition,
+    * then the 3-byte little-endian size table at `part0End`; the last
+    * partition runs to the end of the frame.
+    */
+  private[kernel] def tokenPartitions(d: Array[Byte], br: Bool, part0End: Int): Array[Bool] = {
     val nParts = 1 << br.literal(2)
-    val partsStart = part0End.toInt + 3 * (nParts - 1)
+    val partsStart = part0End + 3 * (nParts - 1)
     if (partsStart > d.length) throw new Vp8Error("truncated partition table")
     val parts = new Array[Bool](nParts)
     var acc = partsStart
@@ -245,7 +188,7 @@ object Vp8 {
       val len =
         if (p == nParts - 1) d.length - acc
         else {
-          val o = part0End.toInt + 3 * p
+          val o = part0End + 3 * p
           (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8) | ((d(o + 2) & 0xff) << 16)
         }
       if (len < 0 || acc + len > d.length) throw new Vp8Error("bad partition size")
@@ -253,58 +196,77 @@ object Vp8 {
       acc += len
       p += 1
     }
+    parts
+  }
 
-    // ---- quantizers (9.6 + 14.1)
-    val yacQi = br.literal(7)
-    val ydcDelta = br.maybeSigned(4)
-    val y2dcDelta = br.maybeSigned(4)
-    val y2acDelta = br.maybeSigned(4)
-    val uvdcDelta = br.maybeSigned(4)
-    val uvacDelta = br.maybeSigned(4)
-    val segQuants = Array.tabulate(4) { s =>
-      val base = if (segEnabled) { if (segAbs) segPerMb(s) else yacQi + segPerMb(s) } else yacQi
+  /** Quantizer indices (RFC 9.6): the base luma AC index and the five
+    * deltas, read in header order.
+    */
+  private[kernel] final class QuantHeader(br: Bool) {
+    val yacQi: Int = br.literal(7)
+    private val ydcDelta = br.maybeSigned(4)
+    private val y2dcDelta = br.maybeSigned(4)
+    private val y2acDelta = br.maybeSigned(4)
+    private val uvdcDelta = br.maybeSigned(4)
+    private val uvacDelta = br.maybeSigned(4)
+
+    /** Dequantization factors (14.1) at index `base`:
+      * (ydc, yac, y2dc, y2ac, uvdc, uvac).
+      */
+    def dequant(base: Int): Array[Int] = {
       val q = clampQ(base)
-      val ydc = dcQLookup(clampQ(q + ydcDelta))
-      val yac = acQLookup(q)
-      val y2dc = dcQLookup(clampQ(q + y2dcDelta)) * 2
-      val y2ac = math.max(8, acQLookup(clampQ(q + y2acDelta)) * 155 / 100)
-      val uvdc = math.min(132, dcQLookup(clampQ(q + uvdcDelta)))
-      val uvac = acQLookup(clampQ(q + uvacDelta))
-      Array(ydc, yac, y2dc, y2ac, uvdc, uvac)
+      Array(dcQLookup(clampQ(q + ydcDelta)), acQLookup(q),
+        dcQLookup(clampQ(q + y2dcDelta)) * 2,
+        math.max(8, acQLookup(clampQ(q + y2acDelta)) * 155 / 100),
+        math.min(132, dcQLookup(clampQ(q + uvdcDelta))),
+        acQLookup(clampQ(q + uvacDelta)))
     }
+  }
 
-    // ---- probability updates (9.8–9.10)
-    br.bit(128) // refresh entropy probs (meaningless for a still)
-    val probs = coeffProbs.clone()
+  /** Coefficient probability updates (RFC 9.9), applied to `probs`. */
+  private[kernel] def updateCoeffProbs(br: Bool, probs: Array[Int]): Unit = {
     var pi = 0
     while (pi < 4 * 8 * 3 * 11) {
       if (br.bit(coeffUpdateProbs(pi)) == 1) probs(pi) = br.literal(8)
       pi += 1
     }
-    val skipEnabled = br.bit(128) == 1
-    val probSkipFalse = if (skipEnabled) br.literal(8) else 0
+  }
 
-    // ---- frame geometry: planes with a 1-px prediction border at the
-    // top/left plus 4 px of above-right slack on Y
-    val mbW = (width + 15) >> 4
-    val mbH = (height + 15) >> 4
-    val yStride = mbW * 16 + 1 + 4
-    val cStride = mbW * 8 + 1
+  // ------------------------------------------------ macroblock reconstruction
+  /** One frame's reconstruction, shared by keyframes ([[decodeFrame]])
+    * and interframes ([[Vp8Video]]): Y/U/V planes with a 1-px prediction
+    * border (127 above, 129 left) plus 4 px of above-right slack on Y,
+    * the intra predictors (12.2/12.3), and the residual path —
+    * coefficient tokens over `probs` with their nonzero contexts,
+    * dequantization, Y2 inverse WHT and the inverse DCT add (13, 14).
+    * Inter prediction writes straight into `Y`/`U`/`V` at [[yOff]]/[[cOff]].
+    */
+  private[kernel] final class Recon(val width: Int, val height: Int, probs: Array[Int]) {
+    val mbW: Int = (width + 15) >> 4
+    val mbH: Int = (height + 15) >> 4
+    val yStride: Int = mbW * 16 + 1 + 4
+    val cStride: Int = mbW * 8 + 1
     val Y = new Array[Int]((mbH * 16 + 1) * yStride)
     val U = new Array[Int]((mbH * 8 + 1) * cStride)
     val V = new Array[Int]((mbH * 8 + 1) * cStride)
-    var x = 0
-    while (x < yStride) { Y(x) = 127; x += 1 } // above border (incl. corner + slack)
-    x = 0
-    while (x < cStride) { U(x) = 127; V(x) = 127; x += 1 }
-    var yy = 1
-    while (yy <= mbH * 16) { Y(yy * yStride) = 129; yy += 1 } // left border
-    yy = 1
-    while (yy <= mbH * 8) { U(yy * cStride) = 129; V(yy * cStride) = 129; yy += 1 }
+    locally {
+      var x = 0
+      while (x < yStride) { Y(x) = 127; x += 1 } // above border (incl. corner + slack)
+      x = 0
+      while (x < cStride) { U(x) = 127; V(x) = 127; x += 1 }
+      var yy = 1
+      while (yy <= mbH * 16) { Y(yy * yStride) = 129; yy += 1 } // left border
+      yy = 1
+      while (yy <= mbH * 8) { U(yy * cStride) = 129; V(yy * cStride) = 129; yy += 1 }
+    }
 
-    // ---- prediction helpers
-    def predDc(plane: Array[Int], bo: Int, stride: Int, size: Int,
-               hasAbove: Boolean, hasLeft: Boolean): Unit = {
+    /** Offset of MB (mbX, mbY)'s top-left luma / chroma sample. */
+    def yOff(mbX: Int, mbY: Int): Int = (mbY * 16 + 1) * yStride + mbX * 16 + 1
+    def cOff(mbX: Int, mbY: Int): Int = (mbY * 8 + 1) * cStride + mbX * 8 + 1
+
+    // ---- prediction
+    private def predDc(plane: Array[Int], bo: Int, stride: Int, size: Int,
+                       hasAbove: Boolean, hasLeft: Boolean): Unit = {
       var sum = 0; var cnt = 0
       if (hasAbove) { var i = 0; while (i < size) { sum += plane(bo - stride + i); i += 1 }; cnt += size }
       if (hasLeft) { var i = 0; while (i < size) { sum += plane(bo - 1 + i * stride); i += 1 }; cnt += size }
@@ -312,15 +274,15 @@ object Vp8 {
       var y0 = 0
       while (y0 < size) { var x0 = 0; while (x0 < size) { plane(bo + y0 * stride + x0) = dc; x0 += 1 }; y0 += 1 }
     }
-    def predV(plane: Array[Int], bo: Int, stride: Int, size: Int): Unit = {
+    private def predV(plane: Array[Int], bo: Int, stride: Int, size: Int): Unit = {
       var y0 = 0
       while (y0 < size) { var x0 = 0; while (x0 < size) { plane(bo + y0 * stride + x0) = plane(bo - stride + x0); x0 += 1 }; y0 += 1 }
     }
-    def predH(plane: Array[Int], bo: Int, stride: Int, size: Int): Unit = {
+    private def predH(plane: Array[Int], bo: Int, stride: Int, size: Int): Unit = {
       var y0 = 0
       while (y0 < size) { val l = plane(bo - 1 + y0 * stride); var x0 = 0; while (x0 < size) { plane(bo + y0 * stride + x0) = l; x0 += 1 }; y0 += 1 }
     }
-    def predTm(plane: Array[Int], bo: Int, stride: Int, size: Int): Unit = {
+    private def predTm(plane: Array[Int], bo: Int, stride: Int, size: Int): Unit = {
       val tl = plane(bo - stride - 1)
       var y0 = 0
       while (y0 < size) {
@@ -330,8 +292,8 @@ object Vp8 {
         y0 += 1
       }
     }
-    def predMode(plane: Array[Int], bo: Int, stride: Int, size: Int, mode: Int,
-                 hasAbove: Boolean, hasLeft: Boolean): Unit = mode match {
+    private def predMode(plane: Array[Int], bo: Int, stride: Int, size: Int, mode: Int,
+                         hasAbove: Boolean, hasLeft: Boolean): Unit = mode match {
       case 0 => predDc(plane, bo, stride, size, hasAbove, hasLeft)
       case 1 => predV(plane, bo, stride, size)
       case 2 => predH(plane, bo, stride, size)
@@ -339,12 +301,24 @@ object Vp8 {
       case m => throw new Vp8Error(s"bad 16x16/uv mode $m")
     }
 
+    /** Intra-predict MB (mbX, mbY): luma 16x16 with `yMode` 0..3 (DC V H
+      * TM; B_PRED = 4 predicts per subblock in [[residuals]]) and both
+      * chroma planes with `uvMode`. Frame edges read the borders, except
+      * that DC averages only the edges inside the frame.
+      */
+    def predictIntra(mbX: Int, mbY: Int, yMode: Int, uvMode: Int): Unit = {
+      val hasAbove = mbY > 0; val hasLeft = mbX > 0
+      if (yMode != 4) predMode(Y, yOff(mbX, mbY), yStride, 16, yMode, hasAbove, hasLeft)
+      predMode(U, cOff(mbX, mbY), cStride, 8, uvMode, hasAbove, hasLeft)
+      predMode(V, cOff(mbX, mbY), cStride, 8, uvMode, hasAbove, hasLeft)
+    }
+
     /** 4x4 B_PRED (RFC 12.3). `tr` supplies the 4 above-right samples for
       * right-column subblocks (they come from the MB's top edge, not from
       * the not-yet-decoded MB to the right).
       */
-    def predB(plane: Array[Int], bo: Int, stride: Int, mode: Int,
-              tr: Array[Int], useTr: Boolean): Unit = {
+    private def predB(plane: Array[Int], bo: Int, stride: Int, mode: Int,
+                      tr: Array[Int], useTr: Boolean): Unit = {
       val A = new Array[Int](8)
       var i = 0
       while (i < 4) { A(i) = plane(bo - stride + i); i += 1 }
@@ -421,16 +395,21 @@ object Vp8 {
       }
     }
 
-    // ---- coefficient machinery
-    val coeffs = new Array[Int](16)
-    val resid = new Array[Int](16)
-    val dcBuf = new Array[Int](16)
+    // ---- residuals
+    private val coeffs = new Array[Int](16)
+    private val resid = new Array[Int](16)
+    private val dcBuf = new Array[Int](16)
+    private val aboveNz = new Array[Int](mbW * 9) // 4 Y, 2 U, 2 V, 1 Y2
+    private val leftNz = new Array[Int](9)
+    private val yNz = new Array[Int](16)
+    private val cNz = new Array[Int](4)
+    private val topRight = new Array[Int](4)
 
     /** Read one 4x4 block's tokens into `coeffs` (zigzag undone,
       * dequantized); returns the nonzero flag feeding neighbor contexts.
       */
-    def readCoeffs(bd: Bool, typ: Int, firstCoeff: Int, ctx0: Int,
-                   dcq: Int, acq: Int): Int = {
+    private def readCoeffs(bd: Bool, typ: Int, firstCoeff: Int, ctx0: Int,
+                           dcq: Int, acq: Int): Int = {
       java.util.Arrays.fill(coeffs, 0)
       var n = firstCoeff
       var ctx = ctx0
@@ -467,7 +446,7 @@ object Vp8 {
       nz
     }
 
-    def addResidual(plane: Array[Int], bo: Int, stride: Int): Unit = {
+    private def addResidual(plane: Array[Int], bo: Int, stride: Int): Unit = {
       idct4x4(coeffs, resid)
       var y0 = 0
       while (y0 < 4) {
@@ -481,16 +460,204 @@ object Vp8 {
       }
     }
 
-    // ---- per-row/column context state
+    /** Decode MB (mbX, mbY)'s residual tokens from partition `bd` and add
+      * them onto its prediction; MBs arrive in raster order. `hasY2`: the
+      * luma DCs ride a Y2 block (every mode but B_PRED and SPLITMV).
+      * `bModes` (B_PRED only, else null): the 16 sub-modes, each
+      * subblock predicted from its reconstructed neighbors just before
+      * its residual. `segQ` is a [[QuantHeader.dequant]] row. Returns
+      * whether any block carried a nonzero coefficient.
+      */
+    def residuals(bd: Bool, mbX: Int, mbY: Int, skip: Boolean, hasY2: Boolean,
+                  segQ: Array[Int], bModes: Array[Int]): Boolean = {
+      if (mbX == 0) java.util.Arrays.fill(leftNz, 0) // a new MB row
+      val yo = yOff(mbX, mbY)
+      if (bModes != null) {
+        // above-right: replicate the last above sample at the frame's
+        // right edge (the slack columns otherwise hold stale data)
+        if (mbY > 0 && mbX == mbW - 1) {
+          var k = 0
+          while (k < 4) { Y(yo - yStride + 16 + k) = Y(yo - yStride + 15); k += 1 }
+        }
+        var k = 0
+        while (k < 4) { topRight(k) = Y(yo - yStride + 16 + k); k += 1 }
+      }
+
+      var anyNz = false
+      if (!skip && hasY2) {
+        val ctx = leftNz(8) + aboveNz(mbX * 9 + 8)
+        val y2Nz = readCoeffs(bd, 1, 0, ctx, segQ(2), segQ(3))
+        if (y2Nz != 0) anyNz = true
+        iwht4x4(coeffs, dcBuf)
+        leftNz(8) = y2Nz; aboveNz(mbX * 9 + 8) = y2Nz
+      } else if (hasY2) {
+        java.util.Arrays.fill(dcBuf, 0)
+        leftNz(8) = 0; aboveNz(mbX * 9 + 8) = 0
+      } // no Y2: its context is left as it was
+
+      // 16 Y blocks: predict (B_PRED) and/or add residuals in order
+      val typ = if (hasY2) 0 else 3
+      val first = if (hasY2) 1 else 0
+      var sb = 0
+      while (sb < 16) {
+        val sx = sb & 3; val sy = sb >> 2
+        val bo = yo + sy * 4 * yStride + sx * 4
+        if (bModes != null) predB(Y, bo, yStride, bModes(sb), topRight, useTr = sx == 3)
+        var nz = 0
+        if (!skip) {
+          val ctx = (if (sx == 0) leftNz(sy) else yNz(sb - 1)) +
+            (if (sy == 0) aboveNz(mbX * 9 + sx) else yNz(sb - 4))
+          nz = readCoeffs(bd, typ, first, ctx, segQ(0), segQ(1))
+          if (nz != 0) anyNz = true
+          if (hasY2) coeffs(0) = dcBuf(sb)
+          if (nz != 0 || (hasY2 && dcBuf(sb) != 0)) addResidual(Y, bo, yStride)
+        }
+        yNz(sb) = nz
+        if (sx == 3) leftNz(sy) = nz
+        if (sy == 3) aboveNz(mbX * 9 + sx) = nz
+        sb += 1
+      }
+
+      // chroma residuals (type 2), U then V
+      val co = cOff(mbX, mbY)
+      var pl = 0
+      while (pl < 2) {
+        val plane = if (pl == 0) U else V
+        val base = 4 + pl * 2
+        var cb = 0
+        while (cb < 4) {
+          val sx = cb & 1; val sy = cb >> 1
+          val bo = co + sy * 4 * cStride + sx * 4
+          var nz = 0
+          if (!skip) {
+            val ctx = (if (sx == 0) leftNz(base + sy) else cNz(cb - 1)) +
+              (if (sy == 0) aboveNz(mbX * 9 + base + sx) else cNz(cb - 2))
+            nz = readCoeffs(bd, 2, 0, ctx, segQ(4), segQ(5))
+            if (nz != 0) { anyNz = true; addResidual(plane, bo, cStride) }
+          }
+          cNz(cb) = nz
+          if (sx == 1) leftNz(base + sy) = nz
+          if (sy == 1) aboveNz(mbX * 9 + base + sx) = nz
+          cb += 1
+        }
+        pl += 1
+      }
+      anyNz
+    }
+
+    /** The `w`×`h` top-left corner of a bordered plane. */
+    private def crop(plane: Array[Int], stride: Int, w: Int, h: Int): Array[Int] = {
+      val out = new Array[Int](w * h)
+      var r = 0
+      while (r < h) { System.arraycopy(plane, (r + 1) * stride + 1, out, r * w, w); r += 1 }
+      out
+    }
+
+    /** The `width`×`height` output frame. */
+    def frame(filtered: Boolean): Frame = {
+      val cw = (width + 1) / 2; val ch = (height + 1) / 2
+      Frame(width, height, crop(Y, yStride, width, height),
+        crop(U, cStride, cw, ch), crop(V, cStride, cw, ch), filtered)
+    }
+
+    /** The MB-aligned planes without borders, padding pixels included:
+      * an interframe's reference for the frames after it.
+      */
+    def interior(): Vp8Video.RefFrame =
+      Vp8Video.RefFrame(width, height, crop(Y, yStride, mbW * 16, mbH * 16),
+        crop(U, cStride, mbW * 8, mbH * 8), crop(V, cStride, mbW * 8, mbH * 8))
+  }
+
+  // --------------------------------------------------------------- decode
+  /** Decode the payload of a WebP 'VP8 ' chunk (a raw VP8 keyframe). */
+  def decodeFrame(d: Array[Byte]): Frame = {
+    if (d.length < 10) throw new Vp8Error("truncated VP8 frame")
+    val tag = (d(0) & 0xff) | ((d(1) & 0xff) << 8) | ((d(2) & 0xff) << 16)
+    val keyFrame = (tag & 1) == 0
+    val part0Len = tag >>> 5
+    if (!keyFrame) throw new Vp8Error("not a keyframe (WebP stills are keyframes)")
+    if ((d(3) & 0xff) != 0x9d || (d(4) & 0xff) != 0x01 || (d(5) & 0xff) != 0x2a)
+      throw new Vp8Error("bad VP8 start code")
+    val width = ((d(6) & 0xff) | ((d(7) & 0xff) << 8)) & 0x3fff
+    val height = ((d(8) & 0xff) | ((d(9) & 0xff) << 8)) & 0x3fff
+    if (width == 0 || height == 0) throw new Vp8Error("zero dimension")
+    if (width.toLong * height > (1L << 26)) throw new Vp8Error("implausible dims")
+    val part0End = 10L + part0Len
+    if (part0End > d.length) throw new Vp8Error("truncated first partition")
+    val br = new Bool(d, 10, part0End.toInt)
+
+    br.bit(128) // color space (0 in conformant streams)
+    br.bit(128) // clamping type
+
+    // ---- segmentation header (9.3)
+    val segPerMb = new Array[Int](4)
+    val segLf = new Array[Int](4)
+    var segAbs = false
+    var segEnabled = false
+    var segUpdateMap = false
+    val segTreeProbs = Array(255, 255, 255)
+    if (br.bit(128) == 1) {
+      segEnabled = true
+      segUpdateMap = br.bit(128) == 1
+      val updateData = br.bit(128) == 1
+      if (updateData) {
+        segAbs = br.bit(128) == 1
+        var i = 0
+        while (i < 4) { segPerMb(i) = br.maybeSigned(7); i += 1 }
+        i = 0
+        while (i < 4) { segLf(i) = br.maybeSigned(6); i += 1 }
+      }
+      if (segUpdateMap) {
+        var i = 0
+        while (i < 3) {
+          segTreeProbs(i) = if (br.bit(128) == 1) br.literal(8) else 255
+          i += 1
+        }
+      }
+    }
+
+    // ---- loop filter header (9.4)
+    val simpleFilter = br.bit(128) == 1
+    val filterLevel = br.literal(6)
+    val sharpness = br.literal(3)
+    // ref/mode lf deltas persist across frames in video; a still decodes
+    // with all-zero initial values updated by this header
+    val refLfDeltas = new Array[Int](4)
+    val modeLfDeltas = new Array[Int](4)
+    var lfDeltaEnabled = false
+    if (br.bit(128) == 1) {
+      lfDeltaEnabled = true
+      if (br.bit(128) == 1) { // update
+        var i = 0
+        while (i < 4) { if (br.bit(128) == 1) refLfDeltas(i) = br.signed(6); i += 1 }
+        i = 0
+        while (i < 4) { if (br.bit(128) == 1) modeLfDeltas(i) = br.signed(6); i += 1 }
+      }
+    }
+
+    // ---- token partitions (9.5)
+    val parts = tokenPartitions(d, br, part0End.toInt)
+
+    // ---- quantizers (9.6 + 14.1)
+    val qh = new QuantHeader(br)
+    val segQuants = Array.tabulate(4) { s =>
+      qh.dequant(if (segEnabled) { if (segAbs) segPerMb(s) else qh.yacQi + segPerMb(s) } else qh.yacQi)
+    }
+
+    // ---- probability updates (9.8–9.10)
+    br.bit(128) // refresh entropy probs (meaningless for a still)
+    val probs = coeffProbs.clone()
+    updateCoeffProbs(br, probs)
+    val skipEnabled = br.bit(128) == 1
+    val probSkipFalse = if (skipEnabled) br.literal(8) else 0
+
+    val rc = new Recon(width, height, probs)
+    import rc.{mbW, mbH, Y, U, V, yStride, cStride}
+
+    // ---- per-row/column B_PRED sub-mode contexts
     val aboveBModes = new Array[Int](mbW * 4) // outside frame = B_DC = 0
-    val aboveNz = new Array[Int](mbW * 9) // 4 Y, 2 U, 2 V, 1 Y2
     val leftBModes = new Array[Int](4)
-    val leftNz = new Array[Int](9)
-    val topRight = new Array[Int](4)
     val subModes = new Array[Int](16)
-    val yNz = new Array[Int](16)
-    val cNz = new Array[Int](4)
-    val y2 = new Array[Int](16)
 
     // per-MB record for the loop-filter pass
     val mbSeg = new Array[Byte](mbW * mbH)
@@ -499,9 +666,8 @@ object Vp8 {
 
     var mbY = 0
     while (mbY < mbH) {
-      java.util.Arrays.fill(leftNz, 0)
       java.util.Arrays.fill(leftBModes, 0)
-      val bd = parts(mbY % nParts)
+      val bd = parts(mbY % parts.length)
       var mbX = 0
       while (mbX < mbW) {
         // ---- modes (partition 0, raster order)
@@ -511,7 +677,6 @@ object Vp8 {
             val b1 = if (b0 == 0) br.bit(segTreeProbs(1)) else br.bit(segTreeProbs(2))
             b0 * 2 + b1
           } else 0
-        val segQ = segQuants(segId)
         val skip = skipEnabled && br.bit(probSkipFalse) == 1
         val yMode = br.tree(kfYModeTree, kfYModeProbs)
         if (yMode == 4) { // B_PRED: 16 context-coded sub-modes
@@ -538,84 +703,9 @@ object Vp8 {
         }
 
         // ---- reconstruction
-        val yOff = (mbY * 16 + 1) * yStride + mbX * 16 + 1
-        val cOff = (mbY * 8 + 1) * cStride + mbX * 8 + 1
-        val hasAbove = mbY > 0
-        val hasLeft = mbX > 0
-        // above-right: replicate the last above sample at the frame's
-        // right edge (the slack columns otherwise hold stale data)
-        if (hasAbove && mbX == mbW - 1) {
-          var k = 0
-          while (k < 4) { Y(yOff - yStride + 16 + k) = Y(yOff - yStride + 15); k += 1 }
-        }
-        var k = 0
-        while (k < 4) { topRight(k) = Y(yOff - yStride + 16 + k); k += 1 }
-
-        val useY2 = yMode != 4
-        var anyNz = false
-        var y2Nz = 0
-        if (!skip && useY2) {
-          val ctx = leftNz(8) + aboveNz(mbX * 9 + 8)
-          y2Nz = readCoeffs(bd, 1, 0, ctx, segQ(2), segQ(3))
-          if (y2Nz != 0) anyNz = true
-          System.arraycopy(coeffs, 0, y2, 0, 16)
-          iwht4x4(y2, dcBuf)
-          leftNz(8) = y2Nz; aboveNz(mbX * 9 + 8) = y2Nz
-        } else if (useY2) {
-          java.util.Arrays.fill(dcBuf, 0)
-          leftNz(8) = 0; aboveNz(mbX * 9 + 8) = 0
-        }
-
-        if (useY2) predMode(Y, yOff, yStride, 16, yMode, hasAbove, hasLeft)
-
-        // 16 Y blocks: predict (B_PRED) and/or add residuals in order
-        val typ = if (useY2) 0 else 3
-        val first = if (useY2) 1 else 0
-        sb = 0
-        while (sb < 16) {
-          val sx = sb & 3; val sy = sb >> 2
-          val bo = yOff + sy * 4 * yStride + sx * 4
-          if (!useY2) predB(Y, bo, yStride, subModes(sb), topRight, useTr = sx == 3)
-          var nz = 0
-          if (!skip) {
-            val ctx = (if (sx == 0) leftNz(sy) else yNz(sb - 1)) +
-              (if (sy == 0) aboveNz(mbX * 9 + sx) else yNz(sb - 4))
-            nz = readCoeffs(bd, typ, first, ctx, segQ(0), segQ(1))
-            if (nz != 0) anyNz = true
-            if (useY2) coeffs(0) = dcBuf(sb)
-            if (nz != 0 || (useY2 && dcBuf(sb) != 0)) addResidual(Y, bo, yStride)
-          }
-          yNz(sb) = nz
-          if (sx == 3) leftNz(sy) = nz
-          if (sy == 3) aboveNz(mbX * 9 + sx) = nz
-          sb += 1
-        }
-
-        // chroma: predict both planes with uvMode, then residuals (type 2)
-        predMode(U, cOff, cStride, 8, uvMode, hasAbove, hasLeft)
-        predMode(V, cOff, cStride, 8, uvMode, hasAbove, hasLeft)
-        var pl = 0
-        while (pl < 2) {
-          val plane = if (pl == 0) U else V
-          val base = 4 + pl * 2
-          var cb = 0
-          while (cb < 4) {
-            val sx = cb & 1; val sy = cb >> 1
-            val bo = cOff + sy * 4 * cStride + sx * 4
-            var nz = 0
-            if (!skip) {
-              val ctx = (if (sx == 0) leftNz(base + sy) else cNz(cb - 1)) +
-                (if (sy == 0) aboveNz(mbX * 9 + base + sx) else cNz(cb - 2))
-              nz = readCoeffs(bd, 2, 0, ctx, segQ(4), segQ(5))
-              if (nz != 0) { anyNz = true; addResidual(plane, bo, cStride) }
-            }
-            cNz(cb) = nz
-            if (sx == 1) leftNz(base + sy) = nz
-            if (sy == 1) aboveNz(mbX * 9 + base + sx) = nz
-            cb += 1
-          }
-          pl += 1
-        }
+        rc.predictIntra(mbX, mbY, yMode, uvMode)
+        val anyNz = rc.residuals(bd, mbX, mbY, skip, hasY2 = yMode != 4,
+          segQuants(segId), if (yMode == 4) subModes else null)
         mbSeg(mbY * mbW + mbX) = segId.toByte
         mbIsB(mbY * mbW + mbX) = yMode == 4
         mbHasCoeffs(mbY * mbW + mbX) = anyNz
@@ -723,8 +813,8 @@ object Vp8 {
             val mbEdge = (level + 2) * 2 + interior
             val subEdge = level * 2 + interior
             val inner = mbIsB(mi) || mbHasCoeffs(mi)
-            val yOff = (fy * 16 + 1) * yStride + fx * 16 + 1
-            val cOffU = (fy * 8 + 1) * cStride + fx * 8 + 1
+            val yOff = rc.yOff(fx, fy)
+            val cOffU = rc.cOff(fx, fy)
             if (simpleFilter) {
               // simple filter: luma only, same edge selection
               if (fx > 0) { var r = 0; while (r < 16) { simpleSegment(Y, yOff + r * yStride - 4, 1, mbEdge); r += 1 } }
@@ -787,26 +877,6 @@ object Vp8 {
       }
     }
 
-    val outY = new Array[Int](width * height)
-    var oy = 0
-    while (oy < height) {
-      var ox = 0
-      while (ox < width) { outY(oy * width + ox) = Y((oy + 1) * yStride + ox + 1); ox += 1 }
-      oy += 1
-    }
-    val cw = (width + 1) / 2; val ch = (height + 1) / 2
-    val outU = new Array[Int](cw * ch)
-    val outV = new Array[Int](cw * ch)
-    oy = 0
-    while (oy < ch) {
-      var ox = 0
-      while (ox < cw) {
-        outU(oy * cw + ox) = U((oy + 1) * cStride + ox + 1)
-        outV(oy * cw + ox) = V((oy + 1) * cStride + ox + 1)
-        ox += 1
-      }
-      oy += 1
-    }
-    Frame(width, height, outY, outU, outV, filtered = filterLevel > 0)
+    rc.frame(filtered = filterLevel > 0)
   }
 }

@@ -15,19 +15,26 @@ package graft.kernel
   * count-derived tree probabilities (§16.3), motion-vector component
   * entropy decoding (§17.2, short tree + long bits), and
   * six-tap sub-pel motion compensation (§18.3) with edge-replicated
-  * out-of-frame addressing; residuals ride the same token machinery,
-  * quantizers and inverse transforms as keyframes (Y2 present for all
-  * whole-MB inter modes).
+  * out-of-frame addressing, written straight into the frame's planes.
+  *
+  * Everything else a macroblock needs is the keyframe decoder's own
+  * code: [[Vp8.tokenPartitions]], [[Vp8.QuantHeader]] and [[Vp8.Recon]]
+  * (bordered planes, the DC/V/H/TM intra predictors of intra MBs,
+  * coefficient tokens with their nonzero contexts, Y2 — present for
+  * every whole-MB mode — and the inverse transforms, the crop). So
+  * interframe residuals and intra MBs run the code MediaSpec checks
+  * byte-exactly against libwebp.
   *
   * Documented boundaries (loud `Vp8Error`, never silent garbage):
-  * SPLITMV macroblocks (per-subblock MVs) and interframes with a
-  * nonzero loop-filter level. Both sit outside the co-designed fixture
-  * envelope ([[graft.fixtures.MediaGen.vp8Sequence]] — pure-motion and
-  * AC-residual P-frames, filter level 0); no independent VP8 *video*
-  * decoder exists in this environment (libwebp handles stills only), so
-  * the validation story is round-trip + semantic property tests
-  * (decoded P-frame == pixel-translated reference), not a codec
-  * differential like the keyframe path's libwebp check.
+  * B_PRED intra MBs inside an interframe, cross-frame segmentation and
+  * interframes with a nonzero loop-filter level. All sit outside the
+  * co-designed fixture envelope ([[graft.fixtures.MediaGen.vp8Sequence]]
+  * — pure-motion, SPLITMV, AC-residual and intra-MB P-frames, filter
+  * level 0); no independent VP8 *video* decoder exists in this
+  * environment (libwebp handles stills only), so motion compensation,
+  * MV decoding and reference management are validated by round-trip +
+  * semantic property tests (decoded P-frame == pixel-translated
+  * reference; intra MB == its predictor over the decoded neighbors).
   */
 object Vp8Video {
   import Vp8Tables._
@@ -39,8 +46,6 @@ object Vp8Video {
   private[graft] val yModeTree = Array(-1, 2, 4, 6, -2, -3, -4, -5)
   private[graft] val yModeDefaultProbs = Array(112, 86, 140, 37)
   private[graft] val uvModeDefaultProbs = Array(162, 101, 204)
-  // fixed interframe B_PRED sub-mode probs (§11.5)
-  private[graft] val interBModeProbs = Array(120, 90, 79, 133, 87, 85, 80, 111, 151)
   // mv reference modes: 0=ZERO 1=NEAREST 2=NEAR 3=NEW 4=SPLIT (§16.3)
   private[graft] val mvRefTree = Array(-1, 2, -2, 4, -3, 6, -4, -5)
   // counts→probs table (libvpx modecont.c, stored pre-cast to u8 — the
@@ -94,7 +99,8 @@ object Vp8Video {
 
   // --------------------------------------------------- reference planes
   /** MB-aligned reference planes (no prediction borders; MC uses
-    * clamped addressing = edge replication for out-of-frame taps).
+    * clamped addressing = edge replication for out-of-frame taps). An
+    * interframe's is its [[Vp8.Recon.interior]].
     *
     * Padding-envelope note: a KEYFRAME reference is rebuilt from the
     * cropped output by edge replication ([[toRef]]), while an INTERFRAME
@@ -353,7 +359,7 @@ object Vp8Video {
           st.last = ref; st.golden = ref; st.altref = ref
           st.goldenBias = false; st.altrefBias = false
           kf
-        } else decodeInter(d, st, i)
+        } else decodeInter(d, st)
       if (shown) out += SeqFrame(f, keyFrame)
     }
     out.result()
@@ -364,8 +370,7 @@ object Vp8Video {
     decodeSequenceFrames(frames).map(_.frame)
 
   // ------------------------------------------------- interframe decode
-  private def decodeInter(d: Array[Byte], st: State, frameIdx: Int): Frame = {
-    import Vp8.{idct4x4, iwht4x4}
+  private def decodeInter(d: Array[Byte], st: State): Frame = {
     if (st.last == null) throw new Vp8Error("interframe before any keyframe")
     val tag = (d(0) & 0xff) | ((d(1) & 0xff) << 8) | ((d(2) & 0xff) << 16)
     val version = (tag >>> 1) & 7
@@ -373,9 +378,6 @@ object Vp8Video {
       throw new Vp8Error(s"interframe version $version (bilinear/no-filter " +
         "reconstruction variants) unsupported — six-tap version 0 only")
     val part0Len = tag >>> 5
-    val width = st.last.w; val height = st.last.h
-    val mbW = (width + 15) >> 4
-    val mbH = (height + 15) >> 4
     val part0End = 3L + part0Len
     if (part0End > d.length) throw new Vp8Error("truncated first partition")
     val br = new Bool(d, 3, part0End.toInt)
@@ -403,42 +405,10 @@ object Vp8Video {
     if (filterLevel > 0)
       throw new Vp8Error("interframe loop filter unsupported (fixture envelope is level 0)")
 
-    // ---- token partitions (9.5)
-    val nParts = 1 << br.literal(2)
-    val partsStart = part0End.toInt + 3 * (nParts - 1)
-    if (partsStart > d.length) throw new Vp8Error("truncated partition table")
-    val parts = new Array[Bool](nParts)
-    var acc = partsStart
-    var p = 0
-    while (p < nParts) {
-      val len =
-        if (p == nParts - 1) d.length - acc
-        else {
-          val o = part0End.toInt + 3 * p
-          (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8) | ((d(o + 2) & 0xff) << 16)
-        }
-      if (len < 0 || acc + len > d.length) throw new Vp8Error("bad partition size")
-      parts(p) = new Bool(d, acc, acc + len)
-      acc += len
-      p += 1
-    }
-
-    // ---- quantizers (9.6)
-    val yacQi = br.literal(7)
-    val ydcDelta = br.maybeSigned(4)
-    val y2dcDelta = br.maybeSigned(4)
-    val y2acDelta = br.maybeSigned(4)
-    val uvdcDelta = br.maybeSigned(4)
-    val uvacDelta = br.maybeSigned(4)
-    def clampQ(v: Int) = if (v < 0) 0 else if (v > 127) 127 else v
-    val quants = {
-      val q = clampQ(yacQi)
-      Array(dcQLookup(clampQ(q + ydcDelta)), acQLookup(q),
-        dcQLookup(clampQ(q + y2dcDelta)) * 2,
-        math.max(8, acQLookup(clampQ(q + y2acDelta)) * 155 / 100),
-        math.min(132, dcQLookup(clampQ(q + uvdcDelta))),
-        acQLookup(clampQ(q + uvacDelta)))
-    }
+    // ---- token partitions (9.5), quantizers (9.6): one segment
+    val parts = Vp8.tokenPartitions(d, br, part0End.toInt)
+    val qh = new Vp8.QuantHeader(br)
+    val segQ = qh.dequant(qh.yacQi)
 
     // ---- reference refresh plumbing (9.7)
     val refreshGolden = br.bit(128) == 1
@@ -456,12 +426,7 @@ object Vp8Video {
     val savedMv = if (!refreshEntropy) Array(st.mvP(0).clone(), st.mvP(1).clone()) else null
     val savedY = if (!refreshEntropy) st.yP.clone() else null
     val savedUv = if (!refreshEntropy) st.uvP.clone() else null
-    var pi = 0
-    while (pi < 4 * 8 * 3 * 11) {
-      if (br.bit(coeffUpdateProbs(pi)) == 1) st.coeffP(pi) = br.literal(8)
-      pi += 1
-    }
-    val probs = st.coeffP
+    Vp8.updateCoeffProbs(br, st.coeffP)
     val skipEnabled = br.bit(128) == 1
     val probSkipFalse = if (skipEnabled) br.literal(8) else 0
     val probIntra = br.literal(8)
@@ -488,14 +453,13 @@ object Vp8Video {
       c2 += 1
     }
 
-    // ---- output planes (MB-aligned, no borders: inter prediction reads
-    // REFERENCE planes; intra MBs in interframes read the current
-    // frame's reconstructed neighbors via the same arrays)
+    // ---- reconstruction: inter MBs motion-compensate from a REFERENCE
+    // into the planes, intra MBs predict from this frame's reconstructed
+    // neighbors in them; both then add their residuals
+    val rc = new Vp8.Recon(st.last.w, st.last.h, st.coeffP)
+    import rc.{mbW, mbH}
     val w16 = mbW * 16; val h16 = mbH * 16
     val cw = mbW * 8; val ch = mbH * 8
-    val Y = new Array[Int](w16 * h16)
-    val U = new Array[Int](cw * ch)
-    val V = new Array[Int](cw * ch)
 
     def biasOf(ref: Int): Boolean = ref match {
       case 1 => signBiasGolden
@@ -508,128 +472,11 @@ object Vp8Video {
       case _ => st.altref
     }
 
-    // ---- intra prediction on borderless planes (DC/V/H/TM — §12.2);
-    // frame-edge fallbacks match the keyframe decoder's 127/129 borders
-    def predIntra(plane: Array[Int], stride: Int, bx: Int, by: Int,
-                  size: Int, mode: Int, hasAbove: Boolean, hasLeft: Boolean): Unit = {
-      @inline def above(i: Int): Int =
-        if (hasAbove) plane((by - 1) * stride + bx + i) else 127
-      @inline def leftAt(i: Int): Int =
-        if (hasLeft) plane((by + i) * stride + bx - 1) else 129
-      @inline def aboveLeft: Int =
-        if (hasAbove && hasLeft) plane((by - 1) * stride + bx - 1)
-        else if (hasAbove) 129 else 127
-      mode match {
-        case 0 => // DC
-          var sum = 0; var cnt = 0
-          if (hasAbove) { var i = 0; while (i < size) { sum += above(i); i += 1 }; cnt += size }
-          if (hasLeft) { var i = 0; while (i < size) { sum += leftAt(i); i += 1 }; cnt += size }
-          val dc = if (cnt == 0) 128 else (sum + cnt / 2) / cnt
-          var y0 = 0
-          while (y0 < size) {
-            var x0 = 0
-            while (x0 < size) { plane((by + y0) * stride + bx + x0) = dc; x0 += 1 }
-            y0 += 1
-          }
-        case 1 => // V
-          var y0 = 0
-          while (y0 < size) {
-            var x0 = 0
-            while (x0 < size) { plane((by + y0) * stride + bx + x0) = above(x0); x0 += 1 }
-            y0 += 1
-          }
-        case 2 => // H
-          var y0 = 0
-          while (y0 < size) {
-            val l = leftAt(y0)
-            var x0 = 0
-            while (x0 < size) { plane((by + y0) * stride + bx + x0) = l; x0 += 1 }
-            y0 += 1
-          }
-        case _ => // TM
-          val al = aboveLeft
-          var y0 = 0
-          while (y0 < size) {
-            val l = leftAt(y0)
-            var x0 = 0
-            while (x0 < size) {
-              val v = l + above(x0) - al
-              plane((by + y0) * stride + bx + x0) =
-                if (v < 0) 0 else if (v > 255) 255 else v
-              x0 += 1
-            }
-            y0 += 1
-          }
-      }
-    }
-
-    // ---- coefficient machinery (same wire format as keyframes)
-    val coeffs = new Array[Int](16)
-    val resid = new Array[Int](16)
-    val dcBuf = new Array[Int](16)
-    def readCoeffs(bd: Bool, typ: Int, firstCoeff: Int, ctx0: Int,
-                   dcq: Int, acq: Int): Int = {
-      java.util.Arrays.fill(coeffs, 0)
-      var n = firstCoeff
-      var ctx = ctx0
-      var from = 0
-      var nz = 0
-      var done = false
-      while (!done && n < 16) {
-        val off = ((typ * 8 + bands(n)) * 3 + ctx) * 11
-        val tok = bd.tree(tokenTree, probs, off, from)
-        if (tok == 0) done = true
-        else if (tok == 1) { ctx = 0; from = 2; n += 1 }
-        else {
-          var v = 0
-          if (tok == 2) { v = 1; ctx = 1 }
-          else {
-            ctx = 2
-            if (tok <= 5) v = tok - 1
-            else {
-              val cat = tok - 6
-              val cp = cats(cat)
-              var extra = 0
-              var k = 0
-              while (k < cp.length) { extra = (extra << 1) | bd.bit(cp(k)); k += 1 }
-              v = catBase(cat) + extra
-            }
-          }
-          if (bd.bit(128) == 1) v = -v
-          coeffs(zigzag(n)) = v * (if (n == 0) dcq else acq)
-          nz = 1
-          from = 0
-          n += 1
-        }
-      }
-      nz
-    }
-    def addResidual(plane: Array[Int], bo: Int, stride: Int): Unit = {
-      idct4x4(coeffs, resid)
-      var y0 = 0
-      while (y0 < 4) {
-        var x0 = 0
-        while (x0 < 4) {
-          val o = bo + y0 * stride + x0
-          val v = plane(o) + resid(y0 * 4 + x0)
-          plane(o) = if (v < 0) 0 else if (v > 255) 255 else v
-          x0 += 1
-        }
-        y0 += 1
-      }
-    }
-
-    // ---- contexts + the mode/MV grid
-    val aboveNz = new Array[Int](mbW * 9)
-    val leftNz = new Array[Int](9)
-    val yNz = new Array[Int](16)
-    val cNz = new Array[Int](4)
-    val y2 = new Array[Int](16)
+    // the mode/MV grid, plus per-4x4 MV context rows for SPLITMV sub-mode
+    // decoding: the bottom row of each MB column (above) and the right
+    // column of the last MB (left); intra and out-of-frame neighbors
+    // contribute zero MVs
     val grid = Array.fill(mbW * mbH)(OutsideMb)
-    val mcBuf = new Array[Int](16 * 16)
-    // per-4x4 MV context rows for SPLITMV sub-mode decoding: the bottom
-    // row of each MB column (above) and the right column of the last MB
-    // (left); intra and out-of-frame neighbors contribute zero MVs
     val aboveMvX = new Array[Int](mbW * 4)
     val aboveMvY = new Array[Int](mbW * 4)
     val leftMvX = new Array[Int](4)
@@ -639,34 +486,25 @@ object Vp8Video {
 
     var mbY = 0
     while (mbY < mbH) {
-      java.util.Arrays.fill(leftNz, 0)
       java.util.Arrays.fill(leftMvX, 0)
       java.util.Arrays.fill(leftMvY, 0)
-      val bd = parts(mbY % nParts)
+      val bd = parts(mbY % parts.length)
       var mbX = 0
       while (mbX < mbW) {
-        val segQ = quants
         val skip = skipEnabled && br.bit(probSkipFalse) == 1
         val isInter = br.bit(probIntra) == 1
+        val yOff = rc.yOff(mbX, mbY); val cOff = rc.cOff(mbX, mbY)
 
-        var useY2 = true
+        var hasY2 = true
         var info = OutsideMb
-        val yBase = mbY * 16; val xBase = mbX * 16
         if (!isInter) {
           val yMode = br.tree(yModeTree, st.yP)
           if (yMode == 4)
             throw new Vp8Error("interframe B_PRED intra MB unsupported (fixture envelope)")
           val uvMode = br.tree(uvModeTree, st.uvP)
-          predIntra(Y, w16, xBase, yBase, 16, yMode, mbY > 0, mbX > 0)
-          predIntra(U, cw, mbX * 8, mbY * 8, 8, uvMode, mbY > 0, mbX > 0)
-          predIntra(V, cw, mbX * 8, mbY * 8, 8, uvMode, mbY > 0, mbX > 0)
-          info = MbInfo(-1, 0, 0, split = false)
-          var sb2 = 0
-          while (sb2 < 4) {
-            leftMvX(sb2) = 0; leftMvY(sb2) = 0
-            aboveMvX(mbX * 4 + sb2) = 0; aboveMvY(mbX * 4 + sb2) = 0
-            sb2 += 1
-          }
+          rc.predictIntra(mbX, mbY, yMode, uvMode)
+          java.util.Arrays.fill(smX, 0)
+          java.util.Arrays.fill(smY, 0)
         } else {
           val ref =
             if (br.bit(probLast) == 0) 0
@@ -723,14 +561,9 @@ object Vp8Video {
             while (b < 16) {
               val sx = b & 3; val sy = b >> 2
               mcBlock(rf.y, w16, h16,
-                xBase + sx * 4 + (smX(b) >> 3), yBase + sy * 4 + (smY(b) >> 3),
-                smX(b) & 7, smY(b) & 7, mcBuf, 0, 4, 4, 4)
-              var r = 0
-              while (r < 4) {
-                System.arraycopy(mcBuf, r * 4, Y,
-                  (yBase + sy * 4 + r) * w16 + xBase + sx * 4, 4)
-                r += 1
-              }
+                mbX * 16 + sx * 4 + (smX(b) >> 3), mbY * 16 + sy * 4 + (smY(b) >> 3),
+                smX(b) & 7, smY(b) & 7,
+                rc.Y, yOff + sy * 4 * rc.yStride + sx * 4, rc.yStride, 4, 4)
               b += 1
             }
             // chroma 4x4 blocks: average of the 4 covering luma sub-MVs,
@@ -752,25 +585,14 @@ object Vp8Video {
               }
               val cmx = (if (sumX >= 0) sumX + 4 else sumX - 4) / 8
               val cmy = (if (sumY >= 0) sumY + 4 else sumY - 4) / 8
-              var pl2 = 0
-              while (pl2 < 2) {
-                val plane = if (pl2 == 0) rf.u else rf.v
-                val outP = if (pl2 == 0) U else V
-                mcBlock(plane, cw, ch,
-                  mbX * 8 + csx * 4 + (cmx >> 3), mbY * 8 + csy * 4 + (cmy >> 3),
-                  cmx & 7, cmy & 7, mcBuf, 0, 4, 4, 4)
-                var r = 0
-                while (r < 4) {
-                  System.arraycopy(mcBuf, r * 4, outP,
-                    (mbY * 8 + csy * 4 + r) * cw + mbX * 8 + csx * 4, 4)
-                  r += 1
-                }
-                pl2 += 1
-              }
+              val px = mbX * 8 + csx * 4 + (cmx >> 3); val py = mbY * 8 + csy * 4 + (cmy >> 3)
+              val bo = cOff + csy * 4 * rc.cStride + csx * 4
+              mcBlock(rf.u, cw, ch, px, py, cmx & 7, cmy & 7, rc.U, bo, rc.cStride, 4, 4)
+              mcBlock(rf.v, cw, ch, px, py, cmx & 7, cmy & 7, rc.V, bo, rc.cStride, 4, 4)
               cb += 1
             }
             info = MbInfo(ref, smX(15), smY(15), split = true)
-            useY2 = false
+            hasY2 = false
           } else {
             val (mvX, mvY) = mode match {
               case 0 => (0, 0)
@@ -784,125 +606,37 @@ object Vp8Video {
             java.util.Arrays.fill(smX, mvX)
             java.util.Arrays.fill(smY, mvY)
             // luma: one 16x16 MC
-            mcBlock(rf.y, w16, h16, xBase + (mvX >> 3), yBase + (mvY >> 3),
-              mvX & 7, mvY & 7, mcBuf, 0, 16, 16, 16)
-            var r = 0
-            while (r < 16) {
-              System.arraycopy(mcBuf, r * 16, Y, (yBase + r) * w16 + xBase, 16)
-              r += 1
-            }
+            mcBlock(rf.y, w16, h16, mbX * 16 + (mvX >> 3), mbY * 16 + (mvY >> 3),
+              mvX & 7, mvY & 7, rc.Y, yOff, rc.yStride, 16, 16)
             // chroma: components halve exactly (MVs are even — read ×2;
             // identical to the §18.2 averaged form when all four agree)
             val cmx = mvX >> 1; val cmy = mvY >> 1
-            mcBlock(rf.u, cw, ch, mbX * 8 + (cmx >> 3), mbY * 8 + (cmy >> 3),
-              cmx & 7, cmy & 7, mcBuf, 0, 8, 8, 8)
-            r = 0
-            while (r < 8) {
-              System.arraycopy(mcBuf, r * 8, U, (mbY * 8 + r) * cw + mbX * 8, 8)
-              r += 1
-            }
-            mcBlock(rf.v, cw, ch, mbX * 8 + (cmx >> 3), mbY * 8 + (cmy >> 3),
-              cmx & 7, cmy & 7, mcBuf, 0, 8, 8, 8)
-            r = 0
-            while (r < 8) {
-              System.arraycopy(mcBuf, r * 8, V, (mbY * 8 + r) * cw + mbX * 8, 8)
-              r += 1
-            }
+            val px = mbX * 8 + (cmx >> 3); val py = mbY * 8 + (cmy >> 3)
+            mcBlock(rf.u, cw, ch, px, py, cmx & 7, cmy & 7, rc.U, cOff, rc.cStride, 8, 8)
+            mcBlock(rf.v, cw, ch, px, py, cmx & 7, cmy & 7, rc.V, cOff, rc.cStride, 8, 8)
             info = MbInfo(ref, mvX, mvY, split = false)
-            useY2 = true
-          }
-          // per-4x4 MV context rows for the NEXT MBs
-          var sb2 = 0
-          while (sb2 < 4) {
-            leftMvX(sb2) = smX(sb2 * 4 + 3); leftMvY(sb2) = smY(sb2 * 4 + 3)
-            aboveMvX(mbX * 4 + sb2) = smX(12 + sb2)
-            aboveMvY(mbX * 4 + sb2) = smY(12 + sb2)
-            sb2 += 1
           }
         }
-
-        // ---- residuals (token partition), identical context discipline
-        // (SPLITMV carries no Y2, like the keyframe B_PRED case — its
-        // Y2 neighbor context is left untouched)
-        var y2Nz = 0
-        if (!skip && useY2) {
-          val ctx = leftNz(8) + aboveNz(mbX * 9 + 8)
-          y2Nz = readCoeffs(bd, 1, 0, ctx, segQ(2), segQ(3))
-          System.arraycopy(coeffs, 0, y2, 0, 16)
-          iwht4x4(y2, dcBuf)
-          leftNz(8) = y2Nz; aboveNz(mbX * 9 + 8) = y2Nz
-        } else if (useY2) {
-          java.util.Arrays.fill(dcBuf, 0)
-          leftNz(8) = 0; aboveNz(mbX * 9 + 8) = 0
-        }
-        val typY = if (useY2) 0 else 3
-        val firstY = if (useY2) 1 else 0
+        // per-4x4 MV context rows for the NEXT MBs
         var sb = 0
-        while (sb < 16) {
-          val sx = sb & 3; val sy = sb >> 2
-          val bo = (yBase + sy * 4) * w16 + xBase + sx * 4
-          var nz = 0
-          if (!skip) {
-            val ctx = (if (sx == 0) leftNz(sy) else yNz(sb - 1)) +
-              (if (sy == 0) aboveNz(mbX * 9 + sx) else yNz(sb - 4))
-            nz = readCoeffs(bd, typY, firstY, ctx, segQ(0), segQ(1))
-            if (useY2) coeffs(0) = dcBuf(sb)
-            if (nz != 0 || (useY2 && dcBuf(sb) != 0)) addResidual(Y, bo, w16)
-          }
-          yNz(sb) = nz
-          if (sx == 3) leftNz(sy) = nz
-          if (sy == 3) aboveNz(mbX * 9 + sx) = nz
+        while (sb < 4) {
+          leftMvX(sb) = smX(sb * 4 + 3); leftMvY(sb) = smY(sb * 4 + 3)
+          aboveMvX(mbX * 4 + sb) = smX(12 + sb)
+          aboveMvY(mbX * 4 + sb) = smY(12 + sb)
           sb += 1
         }
-        var pl = 0
-        while (pl < 2) {
-          val plane = if (pl == 0) U else V
-          val base = 4 + pl * 2
-          var cb = 0
-          while (cb < 4) {
-            val sx = cb & 1; val sy = cb >> 1
-            val bo = (mbY * 8 + sy * 4) * cw + mbX * 8 + sx * 4
-            var nz = 0
-            if (!skip) {
-              val ctx = (if (sx == 0) leftNz(base + sy) else cNz(cb - 1)) +
-                (if (sy == 0) aboveNz(mbX * 9 + base + sx) else cNz(cb - 2))
-              nz = readCoeffs(bd, 2, 0, ctx, segQ(4), segQ(5))
-              if (nz != 0) addResidual(plane, bo, cw)
-            }
-            cNz(cb) = nz
-            if (sx == 1) leftNz(base + sy) = nz
-            if (sy == 1) aboveNz(mbX * 9 + base + sx) = nz
-            cb += 1
-          }
-          pl += 1
-        }
+
+        // ---- residuals: the keyframe path (SPLITMV carries no Y2)
+        rc.residuals(bd, mbX, mbY, skip, hasY2, segQ, bModes = null)
         grid(mbY * mbW + mbX) = info
         mbX += 1
       }
       mbY += 1
     }
 
-    // ---- crop + reference management
-    val fcw = (width + 1) / 2; val fch = (height + 1) / 2
-    val outY = new Array[Int](width * height)
-    var r = 0
-    while (r < height) {
-      System.arraycopy(Y, r * w16, outY, r * width, width)
-      r += 1
-    }
-    val outU = new Array[Int](fcw * fch)
-    val outV = new Array[Int](fcw * fch)
-    r = 0
-    while (r < fch) {
-      System.arraycopy(U, r * cw, outU, r * fcw, fcw)
-      System.arraycopy(V, r * cw, outV, r * fcw, fcw)
-      r += 1
-    }
-    val frame = Frame(width, height, outY, outU, outV, filtered = false)
-    val recon = RefFrame(width, height,
-      java.util.Arrays.copyOf(Y, Y.length),
-      java.util.Arrays.copyOf(U, U.length),
-      java.util.Arrays.copyOf(V, V.length))
+    // ---- output + reference management
+    val frame = rc.frame(filtered = false)
+    val recon = rc.interior()
 
     // §9.7 order: copies read the PRE-update buffers
     val prevLast = st.last; val prevGolden = st.golden; val prevAlt = st.altref

@@ -146,13 +146,13 @@ object Extraction {
     val unique = hashed.select($"content_hash", $"payload")
       .dropDuplicates("content_hash")
 
-    val toCompute: DataFrame = cache match {
-      case Some(c) =>
-        val live = asOf match {
-          case Some(t) => c.where($"committed_ts" + expr("INTERVAL 24 HOURS") > lit(t))
-          case None    => c
-        }
-        unique.join(live.select($"content_hash"), Seq("content_hash"), "left_anti")
+    // the cache entries still inside the 24 h TTL
+    val live: Option[DataFrame] = cache.map { c =>
+      asOf.fold(c)(t => c.where($"committed_ts" + expr("INTERVAL 24 HOURS") > lit(t)))
+    }
+
+    val toCompute: DataFrame = live match {
+      case Some(l) => unique.join(l.select($"content_hash"), Seq("content_hash"), "left_anti")
       case None => unique.toDF()
     }
 
@@ -161,14 +161,10 @@ object Extraction {
       .mapPartitions(_.map { case (h, p) => extractOne(h, p) })
       .toDF()
 
-    val results = cache match {
-      case Some(c) =>
-        val live = asOf match {
-          case Some(t) => c.where($"committed_ts" + expr("INTERVAL 24 HOURS") > lit(t))
-          case None    => c
-        }
+    val results = live match {
+      case Some(l) =>
         val cachedHits = unique.select($"content_hash")
-          .join(live, Seq("content_hash"), "inner")
+          .join(l, Seq("content_hash"), "inner")
           .select($"content_hash", $"result.text".as("text"),
             $"result.pages".as("pages"), $"result.labels".as("labels"),
             $"result.language".as("language"), lit(true).as("ok"), lit("").as("error"))

@@ -218,6 +218,10 @@ object StreamingRun {
         shingleK, numHashes, numBands, threshold)
       val sigsPath = new org.apache.hadoop.fs.Path(s"$indexDir/sigs")
       val fs = sigsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // a replayed batch appended its own signatures before its commit
+      // was lost: drop them, or every survivor matches itself (the append
+      // below rewrites this partition anyway)
+      fs.delete(new org.apache.hadoop.fs.Path(sigsPath, s"batch_id=$batchId"), true)
       val hasIndex = fs.exists(sigsPath) && fs.listStatus(sigsPath)
         .exists(st => st.isDirectory || st.getPath.getName.endsWith(".parquet"))
       val survivors =

@@ -331,8 +331,10 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       assert(out.select($"batch_id", $"url").distinct().count() === out.count())
       n
     }
-    uncommitNewest(ckptDir)
-    replay()
+    val replayed = uncommitNewest(ckptDir)
+    val replayedRows = spark.read.parquet(outDir).where($"batch_id" === replayed).count()
+    assert(replay() === replayedRows,
+      "a replayed batch must count its survivors, not match them against its own signatures")
     val last = uncommitNewest(ckptDir)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$idxDir/sigs/batch_id=$last"))
     val lastRows = spark.read.parquet(outDir).where($"batch_id" === last).count()

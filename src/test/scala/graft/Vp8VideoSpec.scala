@@ -218,6 +218,48 @@ class Vp8VideoSpec extends AnyFunSuite {
     assert(again(1).y.toSeq === decoded(1).y.toSeq)
   }
 
+  test("intra MBs inside an interframe: DC/V/H/TM predict from decoded neighbors") {
+    val w = 96; val h = 64 // 6x4 MBs, MB-aligned: every neighbor is in the crop
+    // all four modes, at the top row and left column (the 127 above /
+    // 129 left edge values) and inside the frame, some next to each other
+    val modes = Map((0, 0) -> 3, (1, 0) -> 1, (2, 0) -> 0, (0, 1) -> 2,
+      (2, 1) -> 0, (5, 1) -> 3, (0, 2) -> 3, (1, 2) -> 1, (2, 2) -> 2, (4, 3) -> 2)
+    val frames = MediaGen.vp8Sequence(textured(w, h, 40), w, h,
+      Seq(Vp8Move(16, 8, intraOf = Some((mbX, mbY) => modes.get((mbX, mbY))))))
+    val decoded = Vp8Video.decodeSequence(frames)
+    val f = decoded(1)
+    def px(x: Int, y: Int): Int = f.y(y * w + x)
+    for (((mbX, mbY), mode) <- modes) {
+      val x0 = mbX * 16; val y0 = mbY * 16
+      def above(i: Int) = if (mbY > 0) px(x0 + i, y0 - 1) else 127
+      def left(j: Int) = if (mbX > 0) px(x0 - 1, y0 + j) else 129
+      val corner = if (mbY == 0) 127 else if (mbX == 0) 129 else px(x0 - 1, y0 - 1)
+      val edges = (if (mbY > 0) (0 until 16).map(above) else Nil) ++
+        (if (mbX > 0) (0 until 16).map(left) else Nil)
+      val dc = if (edges.isEmpty) 128 else (edges.sum + edges.length / 2) / edges.length
+      for (j <- 0 until 16; i <- 0 until 16) {
+        val expect = mode match {
+          case 0 => dc
+          case 1 => above(i)
+          case 2 => left(j)
+          case _ => math.max(0, math.min(255, left(j) + above(i) - corner))
+        }
+        assert(px(x0 + i, y0 + j) === expect, s"mode $mode MB ($mbX,$mbY) pixel ($i,$j)")
+      }
+    }
+    assert(f.u.forall(_ == 128) && f.v.forall(_ == 128), "chroma DC of a flat plane stays 128")
+    // every inter MB, including those whose neighbors are intra, is the
+    // translated reference
+    val ref = Vp8Video.toRef(decoded(0))
+    val w16 = ((w + 15) >> 4) * 16; val h16 = ((h + 15) >> 4) * 16
+    var bad = 0
+    for (y <- 0 until h; x <- 0 until w; if !modes.contains((x / 16, y / 16))) {
+      val sx = math.min(w16 - 1, x + 2); val sy = math.min(h16 - 1, y + 1)
+      if (px(x, y) != ref.y(sy * w16 + sx)) bad += 1
+    }
+    assert(bad === 0, s"$bad inter pixels diverged from the translation")
+  }
+
   test("hidden frames (show_frame=0) update references but emit no output") {
     val w = 48; val h = 32
     val frames = MediaGen.vp8Sequence(textured(w, h, 10), w, h,
