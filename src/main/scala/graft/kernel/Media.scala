@@ -7,9 +7,9 @@ package graft.kernel
   *  - BMP: uncompressed BI_RGB, 8/24/32 bpp (plain header + pixel rows);
   *  - WAV: RIFF/WAVE PCM, 8/16-bit (chunked header + raw samples);
   *  - PNG: 8-bit greyscale/RGB/RGBA, non-interlaced — zlib streams via
-  *    JDK `Inflater` (the same primitive the PDF kernel uses for
-  *    FlateDecode) and the five per-row filters reconstructed per the
-  *    PNG specification (None/Sub/Up/Average/Paeth).
+  *    [[Compress.inflate]] (the capped decoder PDF FlateDecode uses too)
+  *    and the five per-row filters of the PNG specification, undone by
+  *    [[unfilterPng]] (which the PDF predictors share).
   *
   * JPEG ([[Jpeg]]), lossy WebP and VP8 video ([[Vp8]], [[Vp8Video]])
   * decode in kernels of their own; only codec-library formats such as
@@ -777,10 +777,41 @@ object Media {
     out
   }
 
-  private def paeth(a: Int, b: Int, c: Int): Int = {
-    val pp = a + b - c
-    val pa = math.abs(pp - a); val pb = math.abs(pp - b); val pc = math.abs(pp - c)
-    if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
+  /** Undo the PNG row filters (None/Sub/Up/Average/Paeth) of `rows`
+    * rows at `raw(off)`, each a filter-type byte + `stride` bytes with
+    * `bpp` (≥ 1) bytes per pixel → the `rows * stride` unfiltered bytes.
+    */
+  private[kernel] def unfilterPng(raw: Array[Byte], off: Int, rows: Int, stride: Int,
+                                  bpp: Int): Array[Byte] = {
+    val img = new Array[Byte](stride * rows)
+    var y = 0
+    while (y < rows) {
+      val f = raw(off + y * (1 + stride)) & 0xff
+      val src = off + y * (1 + stride) + 1
+      val dst = y * stride
+      var x = 0
+      while (x < stride) {
+        val cur = raw(src + x) & 0xff
+        val a = if (x >= bpp) img(dst + x - bpp) & 0xff else 0
+        val b = if (y > 0) img(dst - stride + x) & 0xff else 0
+        val c = if (y > 0 && x >= bpp) img(dst - stride + x - bpp) & 0xff else 0
+        val v = f match {
+          case 0 => cur
+          case 1 => cur + a
+          case 2 => cur + b
+          case 3 => cur + (a + b) / 2
+          case 4 =>
+            val pp = a + b - c
+            val pa = math.abs(pp - a); val pb = math.abs(pp - b); val pc = math.abs(pp - c)
+            cur + (if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c)
+          case other => throw new IllegalArgumentException(s"filter $other invalid")
+        }
+        img(dst + x) = v.toByte
+        x += 1
+      }
+      y += 1
+    }
+    img
   }
 
   /** Adam7 pass geometry: (xStart, yStart, xStep, yStep) per the PNG
@@ -792,7 +823,7 @@ object Media {
 
   /** PNG (8/16-bit depth, colour types 0/2/3/6, sequential or Adam7
     * interlaced) → per-pixel 0–255 luminance. IDAT chunks are
-    * concatenated, inflated with the JDK `Inflater`, and each row of each
+    * concatenated, inflated with [[Compress.inflate]], and each row of each
     * pass reconstructed from its filter byte exactly per the spec
     * (None/Sub/Up/Average/Paeth); indexed-colour images resolve through
     * their PLTE table; 16-bit samples keep their high byte (the spec's
@@ -852,22 +883,10 @@ object Media {
       if (pw == 0 || ph == 0) 0L else ph.toLong * (1 + pw.toLong * bpp)
     }.sum
     require(rawLen <= Int.MaxValue, "raw image too large")
-    val raw = new Array[Byte](rawLen.toInt)
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    var got = 0
-    while (got < raw.length && !inf.finished()) {
-      val k = inf.inflate(raw, got, raw.length - got)
-      // inflate()==0 with finished()==false covers BOTH truncation
-      // (needsInput) and an FDICT preset-dictionary stream
-      // (needsDictionary) — either way no progress will ever be made, so
-      // fail the row instead of spinning forever (C5: garbage must fail,
-      // never hang)
-      require(k > 0 || inf.finished(), "truncated or dictionary-requiring IDAT stream")
-      got += k
-    }
-    inf.end()
-    require(got == raw.length, s"IDAT inflated to $got, expected ${raw.length}")
+    // sized by what the IDAT stream yields, not by what IHDR claims
+    val idatBytes = idat.toByteArray
+    val raw = Compress.inflate(idatBytes, 0, idatBytes.length, raw = false, rawLen.toInt)
+    require(raw.length == rawLen, s"IDAT inflated to ${raw.length}, expected $rawLen")
 
     val nPal = if (palette == null) 0 else palette.length / 3
     def lumaAt(img: Array[Byte], o: Int): Int =
@@ -887,31 +906,7 @@ object Media {
       val (pw, ph) = passDims(pass)
       if (pw > 0 && ph > 0) {
         val stride = pw * bpp
-        val img = new Array[Byte](stride * ph)
-        var y = 0
-        while (y < ph) {
-          val f = raw(rawOff + y * (1 + stride)) & 0xff
-          val src = rawOff + y * (1 + stride) + 1
-          val dst = y * stride
-          var x = 0
-          while (x < stride) {
-            val cur = raw(src + x) & 0xff
-            val a = if (x >= bpp) img(dst + x - bpp) & 0xff else 0
-            val b = if (y > 0) img(dst - stride + x) & 0xff else 0
-            val c = if (y > 0 && x >= bpp) img(dst - stride + x - bpp) & 0xff else 0
-            val v = f match {
-              case 0 => cur
-              case 1 => cur + a
-              case 2 => cur + b
-              case 3 => cur + (a + b) / 2
-              case 4 => cur + paeth(a, b, c)
-              case other => throw new IllegalArgumentException(s"filter $other invalid")
-            }
-            img(dst + x) = (v & 0xff).toByte
-            x += 1
-          }
-          y += 1
-        }
+        val img = unfilterPng(raw, rawOff, ph, stride, bpp)
         rawOff += ph * (1 + stride)
         // scatter the pass's pixels onto the canvas (16-bit: high byte)
         var py = 0

@@ -2,7 +2,6 @@ package graft.kernel
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.ISO_8859_1
-import java.util.zip.Inflater
 
 /** Hand-built PDF layout parser + page chunker.
   *
@@ -202,62 +201,15 @@ object Pdf {
     }
   }
 
-  def inflate(data: Array[Byte]): Array[Byte] = {
-    val inf = new Inflater()
-    inf.setInput(data)
-    val out = new ByteArrayOutputStream(data.length * 4 + 64)
-    val buf = new Array[Byte](8192)
-    while (!inf.finished()) {
-      val k = inf.inflate(buf)
-      // zero bytes with the stream unfinished means no progress is ever
-      // possible (truncated input or an FDICT preset-dictionary stream) —
-      // fail the chunk rather than spin or silently emit partial output
-      if (k == 0 && !inf.finished())
-        throw new ParseError("truncated or dictionary-requiring flate stream")
-      out.write(buf, 0, k)
-    }
-    inf.end()
-    out.toByteArray
-  }
-
   // ----------------------------------------------- stream filter decoding
-  /** Undo PNG row predictors (DecodeParms `/Predictor` 10–15): each row
-    * is a filter-type byte + `columns*bpp` filtered bytes — the exact PNG
-    * row filters; real-world 1.5 xref streams are near-universally
-    * Predictor 12 (Up).
+  /** FlateDecode under [[Compress.MaxDecodedBytes]]: a truncated,
+    * dictionary-requiring or oversized stream is a [[ParseError]].
     */
-  private def unPredictPng(data: Array[Byte], columns: Int, bpp: Int): Array[Byte] = {
-    val rowLen = columns * bpp
-    if (rowLen <= 0) throw new ParseError("bad predictor columns")
-    val nRows = data.length / (rowLen + 1)
-    val out = new Array[Byte](nRows * rowLen)
-    var r = 0
-    while (r < nRows) {
-      val ft = data(r * (rowLen + 1)) & 0xff
-      val src = r * (rowLen + 1) + 1
-      val dst = r * rowLen
-      var i = 0
-      while (i < rowLen) {
-        val raw = data(src + i) & 0xff
-        val left = if (i >= bpp) out(dst + i - bpp) & 0xff else 0
-        val up = if (r > 0) out(dst - rowLen + i) & 0xff else 0
-        val ul = if (r > 0 && i >= bpp) out(dst - rowLen + i - bpp) & 0xff else 0
-        val v = ft match {
-          case 0 => raw
-          case 1 => raw + left
-          case 2 => raw + up
-          case 3 => raw + ((left + up) >> 1)
-          case 4 =>
-            val p = left + up - ul
-            val pa = math.abs(p - left); val pb = math.abs(p - up); val pc = math.abs(p - ul)
-            raw + (if (pa <= pb && pa <= pc) left else if (pb <= pc) up else ul)
-          case t => throw new ParseError(s"bad predictor row filter $t")
-        }
-        out(dst + i) = v.toByte
-        i += 1
-      }
-      r += 1
-    }
+  def inflate(data: Array[Byte]): Array[Byte] = {
+    val max = Compress.MaxDecodedBytes
+    val out = try Compress.inflate(data, 0, data.length, raw = false, max + 1)
+      catch { case e: IllegalArgumentException => throw new ParseError(e.getMessage) }
+    if (out.length > max) throw new ParseError(s"flate stream decodes past $max bytes")
     out
   }
 
@@ -313,7 +265,8 @@ object Pdf {
   }
 
   /** RunLengthDecode (§7.4.5): length byte 0–127 = copy n+1 literals,
-    * 129–255 = repeat next byte 257−n times, 128 = EOD.
+    * 129–255 = repeat next byte 257−n times, 128 = EOD. Output past
+    * [[Compress.MaxDecodedBytes]] fails the stream.
     */
   def rleDecode(data: Array[Byte]): Array[Byte] = {
     val out = new ByteArrayOutputStream(data.length * 2 + 16)
@@ -333,6 +286,9 @@ object Pdf {
         var k = 0
         while (k < 257 - n) { out.write(b); k += 1 }
       }
+      // each 2-byte repeat writes 128 bytes: 1 MiB on the wire is 64 MiB
+      if (out.size() > Compress.MaxDecodedBytes)
+        throw new ParseError(s"RLE stream decodes past ${Compress.MaxDecodedBytes} bytes")
     }
     out.toByteArray
   }
@@ -427,7 +383,13 @@ object Pdf {
           val cols = numOf(doc, parms.getOrElse("Columns", PNum(1)), 1)
           val colors = numOf(doc, parms.getOrElse("Colors", PNum(1)), 1)
           val bpc = numOf(doc, parms.getOrElse("BitsPerComponent", PNum(8)), 8)
-          unPredictPng(data, cols, math.max(1, colors * bpc / 8))
+          // PNG row filters (each row: a filter-type byte + `columns*bpp`
+          // bytes); real-world 1.5 xref streams are near-universally 12 (Up)
+          val bpp = math.max(1, colors * bpc / 8)
+          val rowLen = cols * bpp
+          if (rowLen <= 0) throw new ParseError("bad predictor columns")
+          try Media.unfilterPng(data, 0, data.length / (rowLen + 1), rowLen, bpp)
+          catch { case e: IllegalArgumentException => throw new ParseError(e.getMessage) }
         case p => throw new ParseError(s"unsupported predictor $p")
       }
     if (filters.isEmpty)

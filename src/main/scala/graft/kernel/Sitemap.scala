@@ -24,20 +24,7 @@ object Sitemap {
     if (p.length >= 2 && (p(0) & 0xff) == 0x1f && (p(1) & 0xff) == 0x8b) {
       val in = new java.util.zip.GZIPInputStream(
         new java.io.ByteArrayInputStream(p), 8192)
-      try {
-        val out = new java.io.ByteArrayOutputStream(p.length * 4)
-        val buf = new Array[Byte](8192)
-        var total = 0L
-        var n = in.read(buf)
-        while (n > 0) {
-          total += n
-          // decompression-bomb guard, same posture as the WARC source
-          require(total <= (64L << 20), "sitemap exceeds 64 MiB decompressed")
-          out.write(buf, 0, n)
-          n = in.read(buf)
-        }
-        out.toByteArray
-      } finally in.close()
+      try Compress.drain(in, Compress.MaxDecodedBytes) finally in.close()
     } else p
 
   /** Decode the five XML built-in entities plus numeric refs. */

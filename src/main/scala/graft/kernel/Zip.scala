@@ -4,7 +4,7 @@ package graft.kernel
   * payloads in a web crawl. Central-directory driven (the authoritative
   * index per the ZIP spec): scan the End-Of-Central-Directory record
   * from the tail, walk the central directory, cross-check each local
-  * header, inflate (raw DEFLATE via the JDK `Inflater(nowrap)`) or copy
+  * header, inflate (raw DEFLATE via [[Compress.inflate]]) or copy
   * STORED data. ZIP64, encryption and other compression methods are
   * rejected explicitly.
   *
@@ -65,7 +65,7 @@ object Zip {
       require(off + 46 + nameLen + extraLen + commentLen <= eocd,
         "central-directory entry out of bounds")
       val name = new String(p, o + 46, nameLen, java.nio.charset.StandardCharsets.UTF_8)
-      require(usize <= (64L << 20), s"implausible entry size $usize")
+      require(usize <= Compress.MaxDecodedBytes, s"implausible entry size $usize")
       out += Entry(name, method, csize, usize, localOff)
       off += 46 + nameLen + extraLen + commentLen
       e += 1
@@ -90,24 +90,13 @@ object Zip {
         require(entry.compressedSize == entry.uncompressedSize, "stored size mismatch")
         java.util.Arrays.copyOfRange(p, start, start + clen)
       case 8 => // DEFLATE (raw)
-        val inf = new java.util.zip.Inflater(true)
-        try {
-          inf.setInput(p, start, clen)
-          val out = new Array[Byte](entry.uncompressedSize.toInt)
-          var got = 0
-          while (got < out.length && !inf.finished()) {
-            val k = inf.inflate(out, got, out.length - got)
-            // no-progress covers truncation AND preset-dictionary streams
-            require(k > 0 || inf.finished(), "truncated or invalid deflate stream")
-            got += k
-          }
-          require(got == out.length, s"entry inflated to $got, expected ${out.length}")
-          // a stream still mid-flight here inflates PAST the declared
-          // size — silent truncation would hide corrupt metadata
-          require(inf.finished() || inf.inflate(new Array[Byte](1)) == 0 && inf.finished(),
-            "entry inflates past its declared size")
-          out
-        } finally inf.end() // native zlib memory, freed on every path
+        // one byte past the declared size: a stream still mid-flight there
+        // inflates PAST it, and silent truncation would hide corrupt metadata
+        val usize = entry.uncompressedSize.toInt
+        val out = Compress.inflate(p, start, clen, raw = true, usize + 1)
+        require(out.length <= usize, "entry inflates past its declared size")
+        require(out.length == usize, s"entry inflated to ${out.length}, expected $usize")
+        out
       case m => throw new IllegalArgumentException(s"compression method $m unsupported")
     }
   }

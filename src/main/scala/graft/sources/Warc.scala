@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, min, struct}
+import graft.kernel.Compress
 
 /** WARC (ISO 28500) source — the container real Common-Crawl-style
   * corpora actually arrive in, so a user can point the engine at crawl
@@ -87,10 +88,13 @@ object Warc {
     (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
       ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
 
+  /** A zstd-compressed dictionary frame, decoded under
+    * [[Compress.MaxDecodedBytes]].
+    */
   private def zstdDecompressAll(bytes: Array[Byte]): Array[Byte] = {
     val in = new com.github.luben.zstd.ZstdInputStream(
       new java.io.ByteArrayInputStream(bytes))
-    try in.readAllBytes() finally in.close()
+    try Compress.drain(in, Compress.MaxDecodedBytes) finally in.close()
   }
 
   /** The archive's shared dictionary, if its head is a skippable frame
@@ -386,22 +390,6 @@ object Warc {
     out.toByteArray
   }
 
-  /** Drain a decoding stream with the [[MaxRecordBytes]] bomb guard —
-    * a 1 KB gzip member claiming gigabytes fails the decode (→ raw
-    * fallback) instead of ballooning the heap.
-    */
-  private def readCapped(in: java.io.InputStream): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(64 * 1024)
-    val buf = new Array[Byte](64 * 1024)
-    var k = in.read(buf)
-    while (k >= 0) {
-      out.write(buf, 0, k)
-      if (out.size() > MaxRecordBytes) throw new WarcError("decoded body exceeds cap")
-      k = in.read(buf)
-    }
-    out.toByteArray
-  }
-
   /** Undo `Content-Encoding` codings (RFC 9110 §8.4: listed in the
     * order applied, so decoded right-to-left). `deflate` means
     * zlib-wrapped per spec, but a long-standing server bug ships raw
@@ -415,20 +403,17 @@ object Warc {
         case "gzip" | "x-gzip" =>
           val in = new java.util.zip.GZIPInputStream(
             new java.io.ByteArrayInputStream(acc), 64 * 1024)
-          try readCapped(in) finally in.close()
+          try Compress.drain(in, MaxRecordBytes) finally in.close()
         case "deflate" =>
           val zlib = acc.length >= 2 && (acc(0) & 0x0f) == 8 &&
             ((((acc(0) & 0xff) << 8) | (acc(1) & 0xff)) % 31 == 0)
-          val inf = new java.util.zip.Inflater(!zlib)
-          try {
-            val in = new java.util.zip.InflaterInputStream(
-              new java.io.ByteArrayInputStream(acc), inf, 64 * 1024)
-            try readCapped(in) finally in.close()
-          } finally inf.end()
+          val out = Compress.inflate(acc, 0, acc.length, raw = !zlib, MaxRecordBytes.toInt + 1)
+          if (out.length > MaxRecordBytes) throw new WarcError("decoded body exceeds cap")
+          out
         case "zstd" =>
           val in = new com.github.luben.zstd.ZstdInputStream(
             new java.io.ByteArrayInputStream(acc))
-          try readCapped(in) finally in.close()
+          try Compress.drain(in, MaxRecordBytes) finally in.close()
         case "identity" | "" => acc
         case other => throw new WarcError(s"unsupported content-encoding '$other'")
       }

@@ -1066,6 +1066,38 @@ class MediaSpec extends AnyFunSuite {
 
     // same FDICT stream through the PDF FlateDecode path
     intercept[Exception](graft.kernel.Pdf.inflate(Array[Byte](0x78, 0x20, 1, 2, 3)))
+
+    // a PNG whose IHDR claims 8192x8192 RGBA16 over a one-byte IDAT: the
+    // decoder must size its buffers by what the stream yields, not by
+    // the claimed 512 MiB
+    val claim = {
+      def chunk(typ: String, body: Array[Byte]): Array[Byte] =
+        java.nio.ByteBuffer.allocate(4).putInt(body.length).array() ++
+          typ.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1) ++ body ++ new Array[Byte](4)
+      val ihdr = java.nio.ByteBuffer.allocate(13).putInt(8192).putInt(8192)
+        .put(16.toByte).put(6.toByte).put(0.toByte).put(0.toByte).put(0.toByte).array()
+      val d = new java.util.zip.Deflater()
+      d.setInput(Array[Byte](0)); d.finish()
+      val z = new Array[Byte](64)
+      val zn = d.deflate(z); d.end()
+      goodPng.take(8) ++ chunk("IHDR", ihdr) ++ chunk("IDAT", z.take(zn)) ++
+        chunk("IEND", Array.emptyByteArray)
+    }
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val before = mx.getThreadAllocatedBytes(Thread.currentThread.getId)
+    intercept[Exception](Media.decodePng(claim))
+    val allocated = mx.getThreadAllocatedBytes(Thread.currentThread.getId) - before
+    assert(allocated < (16L << 20), s"claimed PNG allocated $allocated bytes")
+
+    // a PDF content stream inflating to 64 MiB + 1 (~64 KB on the wire)
+    // fails its row instead of decoding
+    val pdfBomb = graft.kernel.PdfWriter.buildRaw(Seq(new Array[Byte]((64 << 20) + 1)),
+      compress = true, Seq((612.0, 792.0)))
+    assert(pdfBomb.length < (1 << 20), "bomb fixture must be small on the wire")
+    val row = graft.pipeline.Extraction.extractDoc(graft.pipeline.RawDoc("bomb.pdf", pdfBomb))
+    assert(row.source_type === "pdf")
+    assert(!row.ok, "an over-cap flate stream must fail its row")
   }
 
   test("audio thumbnail survives >34M samples (index math must not wrap Int)") {

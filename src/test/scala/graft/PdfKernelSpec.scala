@@ -261,6 +261,27 @@ class PdfKernelSpec extends AnyFunSuite {
     intercept[Pdf.ParseError](Pdf.ahxDecode("4G>".getBytes(ISO_8859_1)))
     intercept[Pdf.ParseError](Pdf.a85Decode("~>".getBytes(ISO_8859_1)))
     intercept[Pdf.ParseError](Pdf.lzwDecode(Array.fill[Byte](40)(-1)))
+    // RLE bomb: each `0x81 b` pair repeats b 128 times, so 1 MiB of pairs
+    // decodes past the 64 MiB cap
+    val rleBomb = Array.tabulate[Byte](2 * ((1 << 19) + 1))(i => if (i % 2 == 0) 0x81.toByte else 0)
+    intercept[Pdf.ParseError](Pdf.rleDecode(rleBomb))
+  }
+
+  test("filters: FlateDecode /Predictor 15 undoes every PNG row filter") {
+    import graft.fixtures.MediaGen
+    import Pdf.{PDict, PName, PNum, PStream}
+    val (w, h) = (7, 11) // 11 rows cycle None/Sub/Up/Average/Paeth twice over
+    val r = new scala.util.Random(15)
+    val img = Array.fill[Byte](w * h * 3)(r.nextInt(256).toByte)
+    val png = MediaGen.png(img, w, h, 3)
+    // the one IDAT chunk: its zlib stream is the filtered rows
+    val at = (8 until png.length - 3).find(i => new String(png, i, 4, ISO_8859_1) == "IDAT").get
+    val len = java.nio.ByteBuffer.wrap(png, at - 4, 4).getInt
+    val idat = java.util.Arrays.copyOfRange(png, at + 4, at + 4 + len)
+    val parms = PDict(Map("Predictor" -> PNum(15), "Columns" -> PNum(w), "Colors" -> PNum(3)))
+    val st = PStream(PDict(Map("Filter" -> PName("FlateDecode"), "DecodeParms" -> parms)), idat)
+    val doc = Pdf.PdfDoc(Map.empty, PDict(Map.empty))
+    assert(Pdf.decodeStream(doc, st).toSeq === img.toSeq)
   }
 
   test("filtered pdfs: every filter and a chained [ASCII85 Flate] extract identically") {

@@ -238,6 +238,14 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
     val spans = Warc.zstdFrameOffsets(dictedC)
     val stripped = dictedC.drop(spans.head._1.toInt)
     intercept[Exception](Warc.parse(stripped))
+    // a dictionary frame holding a zstd frame of 65 MiB of zeros decodes
+    // past the 64 MiB cap: refused, not loaded
+    val zeros = com.github.luben.zstd.Zstd.compress(new Array[Byte](65 << 20), 3)
+    val n = zeros.length
+    val head = Array(0x5d, 0x2a, 0x4d, 0x18, n & 0xff, (n >> 8) & 0xff, (n >> 16) & 0xff,
+      (n >> 24) & 0xff).map(_.toByte) // skippable frame, LE 0x184D2A5D + size
+    val e = intercept[Exception](Warc.parse(head ++ zeros ++ plain))
+    assert(e.getMessage.contains(s"exceeds ${64 << 20} bytes"), e.getMessage)
   }
 
   test("zstdFrameOffsets: spans tile the record region exactly; corruption refused") {
@@ -450,5 +458,15 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
     val bombGot = Warc.parseClear(bombRec)
     assert(bombGot.length === 1)
     assert(bombGot(0).body.toSeq === zeros.toSeq, "bomb must fall back to wire bytes")
+    // a `deflate` body whose zlib header asks for a preset dictionary
+    // (FDICT) cannot decode: the wire bytes are kept, not an empty body
+    val fdict = Array[Byte](0x78, 0x20, 1, 2, 3, 4, 5, 6)
+    val fdBlock = ("HTTP/1.1 200 OK\r\nContent-Encoding: deflate\r\n\r\n")
+      .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1) ++ fdict
+    val fdRec = (s"WARC/1.1\r\nWARC-Type: response\r\n" +
+      s"WARC-Target-URI: https://fdict.example/\r\n" +
+      s"WARC-Date: 2024-01-01T00:00:00Z\r\nContent-Length: ${fdBlock.length}\r\n\r\n")
+      .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1) ++ fdBlock ++ "\r\n\r\n".getBytes
+    assert(Warc.parseClear(fdRec).map(_.body.toSeq) === Seq(fdict.toSeq))
   }
 }
