@@ -705,48 +705,95 @@ object Pdf {
     out.result()
   }
 
-  /** Fonts visible to a page's content stream: the page's own
-    * /Resources /Font entries (falling back to inherited resources per
-    * §7.8.3 — resources REPLACE, they never merge). Only fonts that
-    * change text decoding are kept: Type0 (2-byte codes) and anything
-    * with a /ToUnicode CMap; plain unmapped fonts stay on the default
-    * Latin-1 path.
+  /** A node's own `/Resources` sub-dictionary `kind` (`/Font`,
+    * `/XObject`), if it declares one. Resources are inheritable
+    * (§7.7.3.4): a page-tree walk keeps its ancestors' entry when a node
+    * declares none, and a declared one REPLACES it, never merges.
+    */
+  private def ownResource(doc: PdfDoc, d: PDict, kind: String): Option[PDict] =
+    doc.resolve(d.m.getOrElse("Resources", PNull)) match {
+      case rd: PDict => doc.resolve(rd.m.getOrElse(kind, PNull)) match {
+        case sub: PDict => Some(sub)
+        case _          => None
+      }
+      case _ => None
+    }
+
+  /** Fonts visible to a page's content stream: the node's own
+    * /Resources /Font entries, else the inherited ones
+    * ([[ownResource]]). Only fonts that change text decoding are kept:
+    * Type0 (2-byte codes) and anything with a /ToUnicode CMap; plain
+    * unmapped fonts stay on the default Latin-1 path.
     */
   private def fontsOf(doc: PdfDoc, d: PDict,
                       inherited: Map[String, FontInfo]): Map[String, FontInfo] =
-    doc.resolve(d.m.getOrElse("Resources", PNull)) match {
-      case rd: PDict =>
-        doc.resolve(rd.m.getOrElse("Font", PNull)) match {
-          case fd: PDict =>
-            fd.m.flatMap { case (name, fo) =>
-              doc.resolve(fo) match {
-                case f: PDict =>
-                  val twoByte =
-                    doc.resolve(f.m.getOrElse("Subtype", PNull)) == PName("Type0")
-                  val tu = doc.resolve(f.m.getOrElse("ToUnicode", PNull)) match {
-                    case st: PStream =>
-                      try {
-                        val m = parseCMap(decodeStream(doc, st))
-                        if (m.isEmpty) None else Some(m)
-                      } catch { case _: ParseError => None }
-                    case _ => None
-                  }
-                  if (!twoByte && tu.isEmpty) None
-                  else Some(name -> FontInfo(twoByte, tu))
+    ownResource(doc, d, "Font") match {
+      case Some(fd) =>
+        fd.m.flatMap { case (name, fo) =>
+          doc.resolve(fo) match {
+            case f: PDict =>
+              val twoByte =
+                doc.resolve(f.m.getOrElse("Subtype", PNull)) == PName("Type0")
+              val tu = doc.resolve(f.m.getOrElse("ToUnicode", PNull)) match {
+                case st: PStream =>
+                  try {
+                    val m = parseCMap(decodeStream(doc, st))
+                    if (m.isEmpty) None else Some(m)
+                  } catch { case _: ParseError => None }
                 case _ => None
               }
-            }
-          case _ => inherited
+              if (!twoByte && tu.isEmpty) None
+              else Some(name -> FontInfo(twoByte, tu))
+            case _ => None
+          }
         }
-      case _ => inherited
+      case None => inherited
     }
 
-  /** Walk the page tree in Kids order, inheriting MediaBox; returns the
-    * decoded (de-flated) content bytes per page.
+  /** The page-tree walk under [[pages]], [[pageLinks]] and [[pageImages]]:
+    * from the catalog's `/Pages` in Kids order, `inherit` folds every
+    * node's dict into the state its kids see (starting from `root`), and
+    * `visit` gets each `/Page` leaf with its folded state.
+    *
+    * Cycle/depth/budget guards (same posture as [[outlines]]): a crafted
+    * or corrupt Pages tree with a cyclic or deeply nested Kids chain
+    * must terminate the walk, not throw StackOverflowError past the C5
+    * per-row isolation (ADVICE r05). Visited PRef ids are walked once;
+    * depth is bounded (real page trees are < ~64 deep — Acrobat itself
+    * balances to ~50); the node budget caps inline-dict bombs.
+    */
+  private def eachPage[S](doc: PdfDoc, root: S)(inherit: (PDict, S) => S)(
+      visit: (PDict, S) => Unit): Unit = {
+    val catalog = doc.dictOf(doc.trailer.m.getOrElse("Root", PNull))
+    val seenRefs = scala.collection.mutable.Set.empty[Int]
+    var nodeBudget = 1000000
+    def walk(o: PObj, inherited: S, depth: Int): Unit = {
+      val refId = o match { case PRef(n) => n; case _ => -1 }
+      if (depth > 256 || nodeBudget <= 0 || (refId >= 0 && !seenRefs.add(refId)))
+        return
+      nodeBudget -= 1
+      doc.resolve(o) match {
+        case d: PDict =>
+          val s = inherit(d, inherited)
+          doc.resolve(d.m.getOrElse("Type", PNull)) match {
+            case PName("Pages") =>
+              doc.resolve(d.m.getOrElse("Kids", PNull)) match {
+                case PArr(kids) => kids.foreach(walk(_, s, depth + 1))
+                case _          =>
+              }
+            case PName("Page") => visit(d, s)
+            case _ =>
+          }
+        case _ =>
+      }
+    }
+    walk(catalog.m.getOrElse("Pages", PNull), root, 0)
+  }
+
+  /** Walk the page tree in Kids order, inheriting MediaBox and fonts;
+    * returns the decoded (de-flated) content bytes per page.
     */
   def pages(doc: PdfDoc): Vector[PdfPage] = {
-    val root = doc.dictOf(doc.trailer.m.getOrElse("Root", PNull))
-    val pagesRoot = root.m.getOrElse("Pages", PNull)
     val out = Vector.newBuilder[PdfPage]
 
     def mediaBox(d: PDict, inherited: Option[(Double, Double)]): Option[(Double, Double)] =
@@ -772,39 +819,12 @@ object Pdf {
       case _ => Array.emptyByteArray
     }
 
-    // Cycle/depth/budget guards (same posture as [[outlines]]): a crafted
-    // or corrupt Pages tree with a cyclic or deeply nested Kids chain
-    // must terminate the walk, not throw StackOverflowError past the C5
-    // per-row isolation (ADVICE r05). Visited PRef ids are walked once;
-    // depth is bounded (real page trees are < ~64 deep — Acrobat itself
-    // balances to ~50); the node budget caps inline-dict bombs.
-    val seenRefs = scala.collection.mutable.Set.empty[Int]
-    var nodeBudget = 1000000
-    def walk(o: PObj, inherited: Option[(Double, Double)],
-             inhFonts: Map[String, FontInfo], depth: Int): Unit = {
-      val refId = o match { case PRef(n) => n; case _ => -1 }
-      if (depth > 256 || nodeBudget <= 0 || (refId >= 0 && !seenRefs.add(refId)))
-        return
-      nodeBudget -= 1
-      doc.resolve(o) match {
-        case d: PDict =>
-          val mb = mediaBox(d, inherited)
-          val fonts = fontsOf(doc, d, inhFonts)
-          doc.resolve(d.m.getOrElse("Type", PNull)) match {
-            case PName("Pages") =>
-              doc.resolve(d.m.getOrElse("Kids", PNull)) match {
-                case PArr(kids) => kids.foreach(walk(_, mb, fonts, depth + 1))
-                case _          =>
-              }
-            case PName("Page") =>
-              val (w, h) = mb.getOrElse((612.0, 792.0))
-              out += PdfPage(contentBytes(d.m.getOrElse("Contents", PNull)), w, h, fonts)
-            case _ =>
-          }
-        case _ =>
-      }
+    eachPage(doc, (Option.empty[(Double, Double)], Map.empty[String, FontInfo])) {
+      case (d, (mb, fonts)) => (mediaBox(d, mb), fontsOf(doc, d, fonts))
+    } { case (d, (mb, fonts)) =>
+      val (w, h) = mb.getOrElse((612.0, 792.0))
+      out += PdfPage(contentBytes(d.m.getOrElse("Contents", PNull)), w, h, fonts)
     }
-    walk(pagesRoot, None, Map.empty, 0)
     out.result()
   }
 
@@ -863,54 +883,32 @@ object Pdf {
     */
   def pageLinks(doc: PdfDoc): Vector[(Int, String)] = {
     val out = Vector.newBuilder[(Int, String)]
-    val root = doc.dictOf(doc.trailer.m.getOrElse("Root", PNull))
     var pageIdx = 0
-    // cycle/depth/budget guard — same contract as [[pages]] (ADVICE r05)
-    val seenRefs = scala.collection.mutable.Set.empty[Int]
-    var nodeBudget = 1000000
-    def walk(o: PObj, depth: Int = 0): Unit = {
-      val refId = o match { case PRef(n) => n; case _ => -1 }
-      if (depth > 256 || nodeBudget <= 0 || (refId >= 0 && !seenRefs.add(refId)))
-        return
-      nodeBudget -= 1
-      doc.resolve(o) match {
-      case d: PDict =>
-        doc.resolve(d.m.getOrElse("Type", PNull)) match {
-          case PName("Pages") =>
-            doc.resolve(d.m.getOrElse("Kids", PNull)) match {
-              case PArr(kids) => kids.foreach(walk(_, depth + 1))
-              case _          =>
-            }
-          case PName("Page") =>
-            doc.resolve(d.m.getOrElse("Annots", PNull)) match {
-              case PArr(annots) => annots.foreach { ao =>
-                doc.resolve(ao) match {
-                  case ad: PDict
-                    if doc.resolve(ad.m.getOrElse("Subtype", PNull)) == PName("Link") =>
-                    doc.resolve(ad.m.getOrElse("A", PNull)) match {
-                      case act: PDict
-                        if doc.resolve(act.m.getOrElse("S", PNull)) == PName("URI") =>
-                        doc.resolve(act.m.getOrElse("URI", PNull)) match {
-                          case PStr(b) =>
-                            val uri = new String(b,
-                              java.nio.charset.StandardCharsets.ISO_8859_1).trim
-                            if (uri.nonEmpty) out += ((pageIdx, uri))
-                          case _ =>
-                        }
-                      case _ =>
-                    }
-                  case _ =>
-                }
+    eachPage(doc, ())((_, _) => ()) { (d, _) =>
+      doc.resolve(d.m.getOrElse("Annots", PNull)) match {
+        case PArr(annots) => annots.foreach { ao =>
+          doc.resolve(ao) match {
+            case ad: PDict
+              if doc.resolve(ad.m.getOrElse("Subtype", PNull)) == PName("Link") =>
+              doc.resolve(ad.m.getOrElse("A", PNull)) match {
+                case act: PDict
+                  if doc.resolve(act.m.getOrElse("S", PNull)) == PName("URI") =>
+                  doc.resolve(act.m.getOrElse("URI", PNull)) match {
+                    case PStr(b) =>
+                      val uri = new String(b,
+                        java.nio.charset.StandardCharsets.ISO_8859_1).trim
+                      if (uri.nonEmpty) out += ((pageIdx, uri))
+                    case _ =>
+                  }
+                case _ =>
               }
-              case _ =>
-            }
-            pageIdx += 1
-          case _ =>
+            case _ =>
+          }
         }
-      case _ =>
+        case _ =>
       }
+      pageIdx += 1
     }
-    walk(root.m.getOrElse("Pages", PNull))
     out.result()
   }
 
@@ -939,49 +937,21 @@ object Pdf {
     */
   def pageImages(doc: PdfDoc): Vector[PdfImage] = {
     val out = Vector.newBuilder[PdfImage]
-    val root = doc.dictOf(doc.trailer.m.getOrElse("Root", PNull))
     var pageIdx = 0
-    // cycle/depth/budget guard — same contract as [[pages]] (ADVICE r05)
-    val seenRefs = scala.collection.mutable.Set.empty[Int]
-    var nodeBudget = 1000000
-    def walk(o: PObj, depth: Int = 0): Unit = {
-      val refId = o match { case PRef(n) => n; case _ => -1 }
-      if (depth > 256 || nodeBudget <= 0 || (refId >= 0 && !seenRefs.add(refId)))
-        return
-      nodeBudget -= 1
-      doc.resolve(o) match {
-      case d: PDict =>
-        doc.resolve(d.m.getOrElse("Type", PNull)) match {
-          case PName("Pages") =>
-            doc.resolve(d.m.getOrElse("Kids", PNull)) match {
-              case PArr(kids) => kids.foreach(walk(_, depth + 1))
-              case _          =>
-            }
-          case PName("Page") =>
-            doc.resolve(d.m.getOrElse("Resources", PNull)) match {
-              case rd: PDict =>
-                doc.resolve(rd.m.getOrElse("XObject", PNull)) match {
-                  case xd: PDict =>
-                    xd.m.toVector.sortBy(_._1).foreach { case (name, xo) =>
-                      doc.resolve(xo) match {
-                        case st: PStream
-                          if doc.resolve(st.dict.m.getOrElse("Subtype", PNull)) ==
-                            PName("Image") =>
-                          out += imageOf(doc, st, pageIdx, name)
-                        case _ =>
-                      }
-                    }
-                  case _ =>
-                }
-              case _ =>
-            }
-            pageIdx += 1
+    // the nearest /XObject dict, inherited like fonts ([[ownResource]])
+    eachPage(doc, Map.empty[String, PObj]) { (d, inherited) =>
+      ownResource(doc, d, "XObject").fold(inherited)(_.m)
+    } { (_, xobjects) =>
+      xobjects.toVector.sortBy(_._1).foreach { case (name, xo) =>
+        doc.resolve(xo) match {
+          case st: PStream
+            if doc.resolve(st.dict.m.getOrElse("Subtype", PNull)) == PName("Image") =>
+            out += imageOf(doc, st, pageIdx, name)
           case _ =>
         }
-      case _ =>
       }
+      pageIdx += 1
     }
-    walk(root.m.getOrElse("Pages", PNull))
     out.result()
   }
 
@@ -1154,15 +1124,10 @@ object Pdf {
     if (ps.isEmpty) Vector(pdf)
     else ps.grouped(MaxPagesPerChunk).map { grp =>
       // font-mapped pages re-serialize WITH their Type0/ToUnicode font
-      // objects so a chunk stays a self-contained extraction unit (the
-      // chunk-bytes cache key still sees deterministic bytes); the plain
-      // path keeps the historical byte-exact layout
-      if (grp.forall(_.fonts.isEmpty))
-        PdfWriter.buildRaw(grp.map(_.content), compress = false,
-          grp.map(p => (p.width, p.height)))
-      else
-        PdfWriter.buildRawFonts(grp.map(_.content), compress = false,
-          grp.map(p => (p.width, p.height)), grp.map(_.fonts))
+      // objects so a chunk stays a self-contained extraction unit; pages
+      // without mapped fonts write the plain layout
+      PdfWriter.buildRaw(grp.map(_.content), compress = false,
+        grp.map(p => (p.width, p.height)), grp.map(_.fonts))
     }.toVector
   }
 

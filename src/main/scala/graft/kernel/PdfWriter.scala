@@ -1,7 +1,7 @@
 package graft.kernel
 
 import java.io.ByteArrayOutputStream
-import java.nio.charset.StandardCharsets.ISO_8859_1
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_16BE}
 import java.util.zip.Deflater
 
 /** Minimal, fully deterministic PDF writer.
@@ -14,6 +14,19 @@ import java.util.zip.Deflater
   * path, `/root/reference/app/api/routes.py:25-26`), and (b) by the
   * chunker in [[Pdf.chunkBytes]] to re-serialize ≤10-page sub-PDFs
   * (mirroring `/root/reference/app/services/pdf_splitter.py:46-129`).
+  *
+  * One [[Emitter]] writes every file: the `%PDF-x.y` header, each object
+  * at a recorded offset, and the classic xref table and trailer. Two
+  * layouts sit on it:
+  *  - classic (PDF 1.4, [[classic]]): catalog 1, page tree 2, page
+  *    3 + 2i with its content stream 4 + 2i, then the builder's own
+  *    objects, an xref table and a `trailer`. Every builder but the 1.5
+  *    pair writes it: [[build]], [[buildRaw]] (plain or font-mapped),
+  *    [[buildType0]], [[buildWithLinks]], [[buildWithOutlines]],
+  *    [[buildWithImages]], [[buildWithFilters]], [[buildEncrypted]];
+  *  - 1.5 ([[build15]], [[buildRaw15]]): content streams, one `/ObjStm`
+  *    holding every dictionary, and a `/Type /XRef` stream instead of the
+  *    table and trailer.
   */
 object PdfWriter {
 
@@ -31,13 +44,23 @@ object PdfWriter {
     sb.toString
   }
 
+  /** Escape only `\`, `(` and `)`; unlike [[esc]], CR and LF pass through
+    * raw. The link URIs and ASCII outline titles are written this way.
+    */
+  private def escDelims(s: String): String =
+    s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
+
   /** Content stream for one page: one Td+Tj per line, top-down. */
-  def pageContent(lines: Seq[String]): Array[Byte] = {
+  def pageContent(lines: Seq[String]): Array[Byte] =
+    textContent(lines)(l => "(" + esc(l) + ")")
+
+  /** [[pageContent]] with each line's show-string operand from `show`. */
+  private def textContent(lines: Seq[String])(show: String => String): Array[Byte] = {
     val sb = new StringBuilder
     sb.append("BT\n/F1 12 Tf\n72 720 Td\n")
     lines.zipWithIndex.foreach { case (l, i) =>
       if (i > 0) sb.append("0 -14 Td\n")
-      sb.append('(').append(esc(l)).append(") Tj\n")
+      sb.append(show(l)).append(" Tj\n")
     }
     sb.append("ET")
     sb.toString.getBytes(ISO_8859_1)
@@ -53,6 +76,103 @@ object PdfWriter {
     out.toByteArray
   }
 
+  private def fmtNum(d: Double): String =
+    if (d == d.floor && !d.isInfinite) d.toLong.toString else d.toString
+
+  private def hexStr(b: Array[Byte]): String =
+    "<" + b.map(x => f"${x & 0xff}%02X").mkString + ">"
+
+  /** `raw` encoded through a `/Filter` chain given in decode order (so
+    * encoding applies it reversed), with the dictionary entry naming the
+    * chain; no filters leave `raw` as it is with no entry.
+    */
+  private def filtered(raw: Array[Byte], filters: Seq[String]): (Array[Byte], String) =
+    (filters.reverse.foldLeft(raw)((acc, f) => encodeFilter(f, acc)), filters match {
+      case Seq()  => ""
+      case Seq(f) => s" /Filter /$f"
+      case fs     => s" /Filter [ ${fs.map("/" + _).mkString(" ")} ]"
+    })
+
+  private def flate(compress: Boolean): Seq[String] =
+    if (compress) Seq("FlateDecode") else Nil
+
+  private val Helvetica = "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+
+  private def f1(fontObj: Int): String = s"/Font << /F1 $fontObj 0 R >>"
+
+  private def pageTree(kids: Seq[Int]): String =
+    s"<< /Type /Pages /Kids [ ${kids.map(k => s"$k 0 R").mkString(" ")} ] /Count ${kids.size} >>"
+
+  private def pageDict(parent: Int, box: (Double, Double), resources: String,
+                       contents: Int, annots: String = ""): String =
+    s"<< /Type /Page /Parent $parent 0 R /MediaBox [ 0 0 ${fmtNum(box._1)} ${fmtNum(box._2)} ] " +
+      s"/Resources << $resources >>$annots /Contents $contents 0 R >>"
+
+  /** The output of one file: its header, then objects written at
+    * recorded offsets (`offsets(num)`; 0 for a number never written).
+    */
+  private final class Emitter(version: String, size: Int) {
+    private val out = new ByteArrayOutputStream(4096)
+    val offsets = new Array[Long](size)
+    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
+    w(s"%PDF-$version\n%âãÏÓ\n")
+
+    def pos: Long = out.size()
+    def bytes: Array[Byte] = out.toByteArray
+
+    def obj(num: Int, dict: String): Unit = {
+      offsets(num) = out.size()
+      w(s"$num 0 obj\n$dict\nendobj\n")
+    }
+
+    /** A stream object whose dictionary is built from the body length. */
+    def stream(num: Int, body: Array[Byte])(dict: Int => String): Unit = {
+      offsets(num) = out.size()
+      w(s"$num 0 obj\n${dict(body.length)}\nstream\n")
+      out.write(body)
+      w("\nendstream\nendobj\n")
+    }
+
+    /** The xref table over objects `0 until size` and the trailer;
+      * `trailer` adds entries after `/Root`.
+      */
+    def xrefTable(trailer: String): Array[Byte] = {
+      val at = out.size()
+      w(s"xref\n0 $size\n0000000000 65535 f \n")
+      (1 until size).foreach(i => w(f"${offsets(i)}%010d 00000 n \n"))
+      w(s"trailer\n<< /Size $size /Root 1 0 R$trailer >>\nstartxref\n$at\n%%EOF\n")
+      bytes
+    }
+  }
+
+  /** One page of the classic layout: MediaBox, the body of its
+    * `/Resources` dict, its content stream already encoded with the
+    * `/Filter` entry naming the encoding, and entries written between
+    * `/Resources` and `/Contents`.
+    */
+  private final case class Page(box: (Double, Double), resources: String,
+                                content: (Array[Byte], String), annots: String = "")
+
+  /** The classic layout of `total` objects: catalog (1; `catalog` adds
+    * entries), page tree (2), each page (3 + 2i) with its content stream
+    * (4 + 2i). `rest` then writes the builder's other objects in file
+    * order, and the xref table and trailer (`trailer` adds entries) end
+    * the file.
+    */
+  private def classic(pages: Seq[Page], total: Int, catalog: String = "",
+                      trailer: String = "")(rest: Emitter => Unit): Array[Byte] = {
+    val e = new Emitter("1.4", total)
+    e.obj(1, s"<< /Type /Catalog /Pages 2 0 R$catalog >>")
+    e.obj(2, pageTree(pages.indices.map(3 + 2 * _)))
+    pages.zipWithIndex.foreach { case (p, i) =>
+      e.obj(3 + 2 * i, pageDict(2, p.box, p.resources, 4 + 2 * i, p.annots))
+      val (body, filter) = p.content
+      e.stream(4 + 2 * i, body)(len => s"<< /Length $len$filter >>")
+    }
+    rest(e)
+    e.xrefTable(trailer)
+  }
+
   /** Build a PDF whose page i shows `pages(i)` as lines of text.
     * @param mediaBox (width, height) per page, defaults to US-Letter.
     */
@@ -62,52 +182,46 @@ object PdfWriter {
     buildRaw(pages.map(pageContent), compress, Seq.fill(pages.size)(mediaBox))
   }
 
-  /** Build from already-rendered content streams (used by the chunker). */
+  /** Build from already-rendered content streams (the chunker's path).
+    * `pageFonts(i)` are page i's font resources under the names its
+    * content stream uses (missing maps are empty): each distinct
+    * [[Pdf.FontInfo]] becomes a font object (Type0 for 2-byte fonts) with
+    * its /ToUnicode CMap stream, so a font-mapped chunk stays a
+    * self-contained extraction unit. Helvetica is `/F1` on every page
+    * that maps no `F1` itself; with no font maps that is the whole
+    * resource dict.
+    */
   def buildRaw(contents: Seq[Array[Byte]], compress: Boolean,
-               boxes: Seq[(Double, Double)]): Array[Byte] = {
+               boxes: Seq[(Double, Double)],
+               pageFonts: Seq[Map[String, Pdf.FontInfo]] = Nil): Array[Byte] = {
     val n = contents.size
-    val out = new ByteArrayOutputStream(4096)
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    val offsets = new Array[Long](n * 2 + 4) // 1-indexed object offsets
-
-    def fmtNum(d: Double): String =
-      if (d == d.floor && !d.isInfinite) d.toLong.toString else d.toString
-
-    w("%PDF-1.4\n%âãÏÓ\n")
-    // obj 1: Catalog
-    offsets(1) = out.size(); w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    // obj 2: Pages
-    offsets(2) = out.size()
-    val kids = (0 until n).map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    w(s"2 0 obj\n<< /Type /Pages /Kids [ $kids ] /Count $n >>\nendobj\n")
-    val fontObj = 3 + 2 * n
-    // page + content objects
-    (0 until n).foreach { i =>
-      val pageObj = 3 + 2 * i
-      val contObj = pageObj + 1
-      val (mw, mh) = boxes(i)
-      offsets(pageObj) = out.size()
-      w(s"$pageObj 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 ${fmtNum(mw)} ${fmtNum(mh)} ] " +
-        s"/Resources << /Font << /F1 $fontObj 0 R >> >> /Contents $contObj 0 R >>\nendobj\n")
-      offsets(contObj) = out.size()
-      val raw = contents(i)
-      val body = if (compress) deflate(raw) else raw
-      val filter = if (compress) " /Filter /FlateDecode" else ""
-      w(s"$contObj 0 obj\n<< /Length ${body.length}$filter >>\nstream\n")
-      out.write(body)
-      w("\nendstream\nendobj\n")
+    val fonts = pageFonts.padTo(n, Map.empty[String, Pdf.FontInfo])
+    val helv = 3 + 2 * n
+    // distinct FontInfos in first-appearance order → (fontObj, cmapObj)
+    val distinct = scala.collection.mutable.LinkedHashMap.empty[Pdf.FontInfo, (Int, Int)]
+    fonts.foreach(_.values.foreach { fi =>
+      if (!distinct.contains(fi)) {
+        val base = helv + 1 + 2 * distinct.size
+        distinct(fi) = (base, base + 1)
+      }
+    })
+    val pages = (0 until n).map { i =>
+      val entries = fonts(i).toSeq.sortBy(_._1)
+        .map { case (name, fi) => s"/$name ${distinct(fi)._1} 0 R" } ++
+        (if (fonts(i).contains("F1")) Nil else Seq(s"/F1 $helv 0 R"))
+      Page(boxes(i), s"/Font << ${entries.mkString(" ")} >>",
+        filtered(contents(i), flate(compress)))
     }
-    // font object
-    offsets(fontObj) = out.size()
-    w(s"$fontObj 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\nendobj\n")
-    // xref
-    val xrefPos = out.size()
-    val total = fontObj + 1
-    w(s"xref\n0 $total\n")
-    w("0000000000 65535 f \n")
-    (1 until total).foreach { i => w(f"${offsets(i)}%010d 00000 n \n") }
-    w(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
-    out.toByteArray
+    classic(pages, helv + 1 + 2 * distinct.size) { e =>
+      e.obj(helv, Helvetica)
+      distinct.foreach { case (fi, (fontObj, cmapObj)) =>
+        val subtype = if (fi.twoByte) "Type0" else "Type1"
+        val tu = fi.toUnicode.map(_ => s" /ToUnicode $cmapObj 0 R").getOrElse("")
+        e.obj(fontObj, s"<< /Type /Font /Subtype /$subtype /BaseFont /Graft$tu >>")
+        fi.toUnicode.foreach(m =>
+          e.stream(cmapObj, cmapBytes(fi.twoByte, m))(len => s"<< /Length $len >>"))
+      }
+    }
   }
 
   /** [[build]] plus URI link annotations: page i carries `links(i)` as
@@ -118,62 +232,27 @@ object PdfWriter {
   def buildWithLinks(pages: Seq[Seq[String]], links: Seq[Seq[String]],
                      compress: Boolean): Array[Byte] = {
     require(pages.nonEmpty && pages.size == links.size)
-    val n = pages.size
-    val out = new ByteArrayOutputStream(4096)
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    def esc(u: String): String =
-      u.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
-    val firstAnnObj = 3 + 2 * n
-    val annObjOf: Seq[Seq[Int]] = {
-      var next = firstAnnObj
-      links.map(ls => ls.map { _ => val o = next; next = o + 1; o })
-    }
-    val gotoObj = firstAnnObj + links.map(_.size).sum // internal annot on page 0
+    // page i's annotations are objects annAt(i) until annAt(i + 1)
+    val annAt = links.scanLeft(3 + 2 * pages.size)(_ + _.size)
+    val gotoObj = annAt.last // internal annot on page 0
     val fontObj = gotoObj + 1
-    val total = fontObj + 1
-    val offsets = new Array[Long](total)
-    w("%PDF-1.4\n%âãÏÓ\n")
-    offsets(1) = out.size(); w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    offsets(2) = out.size()
-    val kids = (0 until n).map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    w(s"2 0 obj\n<< /Type /Pages /Kids [ $kids ] /Count $n >>\nendobj\n")
-    (0 until n).foreach { i =>
-      val pageObj = 3 + 2 * i
-      val contObj = pageObj + 1
-      offsets(pageObj) = out.size()
-      val annRefs = annObjOf(i).map(o => s"$o 0 R") ++
-        (if (i == 0) Seq(s"$gotoObj 0 R") else Nil)
-      val annots =
-        if (annRefs.nonEmpty) s" /Annots [ ${annRefs.mkString(" ")} ]" else ""
-      w(s"$pageObj 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
-        s"/Resources << /Font << /F1 $fontObj 0 R >> >>$annots /Contents $contObj 0 R >>\nendobj\n")
-      offsets(contObj) = out.size()
-      val raw = pageContent(pages(i))
-      val body = if (compress) deflate(raw) else raw
-      val filter = if (compress) " /Filter /FlateDecode" else ""
-      w(s"$contObj 0 obj\n<< /Length ${body.length}$filter >>\nstream\n")
-      out.write(body)
-      w("\nendstream\nendobj\n")
+    val ps = pages.indices.map { i =>
+      val refs = (annAt(i) until annAt(i + 1)) ++ (if (i == 0) Seq(gotoObj) else Nil)
+      val annots = if (refs.nonEmpty) s" /Annots [ ${refs.map(o => s"$o 0 R").mkString(" ")} ]" else ""
+      Page((612.0, 792.0), f1(fontObj), filtered(pageContent(pages(i)), flate(compress)), annots)
     }
-    (0 until n).foreach { i =>
-      links(i).zip(annObjOf(i)).zipWithIndex.foreach { case ((uri, obj), k) =>
-        offsets(obj) = out.size()
-        w(s"$obj 0 obj\n<< /Type /Annot /Subtype /Link " +
-          s"/Rect [ 50 ${700 - 20 * k} 300 ${715 - 20 * k} ] " +
-          s"/A << /S /URI /URI (${esc(uri)}) >> >>\nendobj\n")
+    classic(ps, fontObj + 1) { e =>
+      links.indices.foreach { i =>
+        links(i).zipWithIndex.foreach { case (uri, k) =>
+          e.obj(annAt(i) + k, s"<< /Type /Annot /Subtype /Link " +
+            s"/Rect [ 50 ${700 - 20 * k} 300 ${715 - 20 * k} ] " +
+            s"/A << /S /URI /URI (${escDelims(uri)}) >> >>")
+        }
       }
+      e.obj(gotoObj, "<< /Type /Annot /Subtype /Link /Rect [ 50 50 100 60 ] " +
+        "/A << /S /GoTo /D [ 3 0 R /Fit ] >> >>")
+      e.obj(fontObj, Helvetica)
     }
-    offsets(gotoObj) = out.size()
-    w(s"$gotoObj 0 obj\n<< /Type /Annot /Subtype /Link /Rect [ 50 50 100 60 ] " +
-      s"/A << /S /GoTo /D [ 3 0 R /Fit ] >> >>\nendobj\n")
-    offsets(fontObj) = out.size()
-    w(s"$fontObj 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\nendobj\n")
-    val xrefPos = out.size()
-    w(s"xref\n0 $total\n")
-    w("0000000000 65535 f \n")
-    (1 until total).foreach { i => w(f"${offsets(i)}%010d 00000 n \n") }
-    w(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
-    out.toByteArray
   }
 
   /** [[build]] plus an `/Outlines` bookmark tree from a flat
@@ -187,15 +266,10 @@ object PdfWriter {
                         compress: Boolean): Array[Byte] = {
     require(pages.nonEmpty)
     outline.headOption.foreach { case (d, _) => require(d == 0, "first item depth 0") }
-    val n = pages.size
     val k = outline.length
-    val out = new ByteArrayOutputStream(4096)
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    val fontObj = 3 + 2 * n
+    val fontObj = 3 + 2 * pages.size
     val rootObj = fontObj + 1
-    val itemObj = (0 until k).map(i => rootObj + 1 + i)
-    val total = rootObj + 1 + k
-    val offsets = new Array[Long](total)
+    def itemObj(i: Int): Int = rootObj + 1 + i
     // tree relations from the flat list
     val depth = outline.map(_._1).toArray
     val parent = Array.fill(k)(-1)
@@ -209,62 +283,26 @@ object PdfWriter {
       stack.push(i)
     }
     def kidsOf(p: Int): Seq[Int] = (0 until k).filter(parent(_) == p)
+    def firstLast(ch: Seq[Int]): String =
+      if (ch.isEmpty) "" else s" /First ${itemObj(ch.head)} 0 R /Last ${itemObj(ch.last)} 0 R"
     def titleStr(t: String): String =
-      if (t.forall(c => c >= 0x20 && c < 0x7f))
-        "(" + t.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)") + ")"
-      else {
-        val b = Array[Byte](0xfe.toByte, 0xff.toByte) ++
-          t.getBytes(java.nio.charset.StandardCharsets.UTF_16BE)
-        hexStr(b)
+      if (t.forall(c => c >= 0x20 && c < 0x7f)) "(" + escDelims(t) + ")"
+      else hexStr(Array[Byte](0xfe.toByte, 0xff.toByte) ++ t.getBytes(UTF_16BE))
+    val ps = pages.map(p =>
+      Page((612.0, 792.0), f1(fontObj), filtered(pageContent(p), flate(compress))))
+    classic(ps, rootObj + 1 + k, catalog = s" /Outlines $rootObj 0 R") { e =>
+      e.obj(fontObj, Helvetica)
+      e.obj(rootObj, s"<< /Type /Outlines /Count $k${firstLast(kidsOf(-1))} >>")
+      (0 until k).foreach { i =>
+        val sibs = kidsOf(parent(i))
+        val at = sibs.indexOf(i)
+        val prev = if (at > 0) s" /Prev ${itemObj(sibs(at - 1))} 0 R" else ""
+        val next = if (at < sibs.length - 1) s" /Next ${itemObj(sibs(at + 1))} 0 R" else ""
+        val par = if (parent(i) < 0) rootObj else itemObj(parent(i))
+        e.obj(itemObj(i), s"<< /Title ${titleStr(outline(i)._2)} " +
+          s"/Parent $par 0 R$prev$next${firstLast(kidsOf(i))} >>")
       }
-    w("%PDF-1.4\n%âãÏÓ\n")
-    offsets(1) = out.size()
-    w(s"1 0 obj\n<< /Type /Catalog /Pages 2 0 R /Outlines $rootObj 0 R >>\nendobj\n")
-    offsets(2) = out.size()
-    val kids = (0 until n).map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    w(s"2 0 obj\n<< /Type /Pages /Kids [ $kids ] /Count $n >>\nendobj\n")
-    (0 until n).foreach { i =>
-      val pageObj = 3 + 2 * i
-      val contObj = pageObj + 1
-      offsets(pageObj) = out.size()
-      w(s"$pageObj 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
-        s"/Resources << /Font << /F1 $fontObj 0 R >> >> /Contents $contObj 0 R >>\nendobj\n")
-      offsets(contObj) = out.size()
-      val raw = pageContent(pages(i))
-      val body = if (compress) deflate(raw) else raw
-      val filter = if (compress) " /Filter /FlateDecode" else ""
-      w(s"$contObj 0 obj\n<< /Length ${body.length}$filter >>\nstream\n")
-      out.write(body)
-      w("\nendstream\nendobj\n")
     }
-    offsets(fontObj) = out.size()
-    w(s"$fontObj 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\nendobj\n")
-    offsets(rootObj) = out.size()
-    val tops = kidsOf(-1)
-    val rootKids =
-      if (tops.isEmpty) ""
-      else s" /First ${itemObj(tops.head)} 0 R /Last ${itemObj(tops.last)} 0 R"
-    w(s"$rootObj 0 obj\n<< /Type /Outlines /Count $k$rootKids >>\nendobj\n")
-    (0 until k).foreach { i =>
-      offsets(itemObj(i)) = out.size()
-      val sibs = kidsOf(parent(i))
-      val at = sibs.indexOf(i)
-      val prev = if (at > 0) s" /Prev ${itemObj(sibs(at - 1))} 0 R" else ""
-      val next = if (at < sibs.length - 1) s" /Next ${itemObj(sibs(at + 1))} 0 R" else ""
-      val ch = kidsOf(i)
-      val fl =
-        if (ch.isEmpty) ""
-        else s" /First ${itemObj(ch.head)} 0 R /Last ${itemObj(ch.last)} 0 R"
-      val par = if (parent(i) < 0) rootObj else itemObj(parent(i))
-      w(s"${itemObj(i)} 0 obj\n<< /Title ${titleStr(outline(i)._2)} " +
-        s"/Parent $par 0 R$prev$next$fl >>\nendobj\n")
-    }
-    val xrefPos = out.size()
-    w(s"xref\n0 $total\n")
-    w("0000000000 65535 f \n")
-    (1 until total).foreach { i => w(f"${offsets(i)}%010d 00000 n \n") }
-    w(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
-    out.toByteArray
   }
 
   /** One embedded image for [[buildWithImages]]: `codec` ∈
@@ -285,79 +323,43 @@ object PdfWriter {
                       images: Seq[Seq[ImageSpec]],
                       compress: Boolean): Array[Byte] = {
     require(pages.nonEmpty && pages.size == images.size)
-    val n = pages.size
-    val out = new ByteArrayOutputStream(4096)
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    val imgCounts = images.map(_.size)
-    val firstImgObj = 3 + 2 * n // images come after page+content pairs
-    val imgObjOf: Seq[Seq[Int]] = {
-      var next = firstImgObj
-      images.map(specs => specs.map { _ => val o = next; next = o + 1; o })
-    }
-    val fontObj = firstImgObj + imgCounts.sum
-    val total = fontObj + 1
-    val offsets = new Array[Long](total)
-
-    w("%PDF-1.4\n%âãÏÓ\n")
-    offsets(1) = out.size(); w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    offsets(2) = out.size()
-    val kids = (0 until n).map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    w(s"2 0 obj\n<< /Type /Pages /Kids [ $kids ] /Count $n >>\nendobj\n")
-    (0 until n).foreach { i =>
-      val pageObj = 3 + 2 * i
-      val contObj = pageObj + 1
-      offsets(pageObj) = out.size()
-      val xobjRefs = images(i).zip(imgObjOf(i))
-        .map { case (s, o) => s"/${s.name} $o 0 R" }.mkString(" ")
-      val xobj = if (images(i).nonEmpty) s" /XObject << $xobjRefs >>" else ""
-      w(s"$pageObj 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
-        s"/Resources << /Font << /F1 $fontObj 0 R >>$xobj >> /Contents $contObj 0 R >>\nendobj\n")
-      offsets(contObj) = out.size()
+    // page i's images are objects imgAt(i) until imgAt(i + 1)
+    val imgAt = images.scanLeft(3 + 2 * pages.size)(_ + _.size)
+    val fontObj = imgAt.last
+    val ps = pages.indices.map { i =>
+      val refs = images(i).zipWithIndex.map { case (s, k) => s"/${s.name} ${imgAt(i) + k} 0 R" }
+      val xobj = if (refs.nonEmpty) s" /XObject << ${refs.mkString(" ")} >>" else ""
       val draw = images(i).map(s =>
         s"q ${s.width} 0 0 ${s.height} 50 50 cm /${s.name} Do Q\n").mkString
-      val raw = pageContent(pages(i)) ++ draw.getBytes(ISO_8859_1)
-      val body = if (compress) deflate(raw) else raw
-      val filter = if (compress) " /Filter /FlateDecode" else ""
-      w(s"$contObj 0 obj\n<< /Length ${body.length}$filter >>\nstream\n")
-      out.write(body)
-      w("\nendstream\nendobj\n")
+      Page((612.0, 792.0), f1(fontObj) + xobj,
+        filtered(pageContent(pages(i)) ++ draw.getBytes(ISO_8859_1), flate(compress)))
     }
-    (0 until n).foreach { i =>
-      images(i).zip(imgObjOf(i)).foreach { case (s, obj) =>
-        offsets(obj) = out.size()
-        val (body, entries) = s.codec match {
-          case "g4" =>
-            require(s.data.length == s.width * s.height, s"g4 pixels for ${s.name}")
-            (Ccitt.encodeG4(s.data, s.width, s.height),
-              s"/BitsPerComponent 1 /ColorSpace /DeviceGray /Filter /CCITTFaxDecode " +
-                s"/DecodeParms << /K -1 /Columns ${s.width} /Rows ${s.height} >>")
-          case "jpeg" =>
-            (s.data,
-              "/BitsPerComponent 8 /ColorSpace /DeviceGray /Filter /DCTDecode")
-          case "gray" =>
-            require(s.data.length == s.width * s.height, s"gray pixels for ${s.name}")
-            (deflate(s.data),
-              "/BitsPerComponent 8 /ColorSpace /DeviceGray /Filter /FlateDecode")
-          case other => throw new IllegalArgumentException(s"unknown codec '$other'")
+    classic(ps, fontObj + 1) { e =>
+      images.indices.foreach { i =>
+        images(i).zipWithIndex.foreach { case (s, k) =>
+          val (body, entries) = s.codec match {
+            case "g4" =>
+              require(s.data.length == s.width * s.height, s"g4 pixels for ${s.name}")
+              (Ccitt.encodeG4(s.data, s.width, s.height),
+                s"/BitsPerComponent 1 /ColorSpace /DeviceGray /Filter /CCITTFaxDecode " +
+                  s"/DecodeParms << /K -1 /Columns ${s.width} /Rows ${s.height} >>")
+            case "jpeg" =>
+              (s.data,
+                "/BitsPerComponent 8 /ColorSpace /DeviceGray /Filter /DCTDecode")
+            case "gray" =>
+              require(s.data.length == s.width * s.height, s"gray pixels for ${s.name}")
+              (deflate(s.data),
+                "/BitsPerComponent 8 /ColorSpace /DeviceGray /Filter /FlateDecode")
+            case other => throw new IllegalArgumentException(s"unknown codec '$other'")
+          }
+          e.stream(imgAt(i) + k, body)(len => s"<< /Type /XObject /Subtype /Image " +
+            s"/Width ${s.width} /Height ${s.height} $entries /Length $len >>")
         }
-        w(s"$obj 0 obj\n<< /Type /XObject /Subtype /Image /Width ${s.width} " +
-          s"/Height ${s.height} $entries /Length ${body.length} >>\nstream\n")
-        out.write(body)
-        w("\nendstream\nendobj\n")
       }
+      e.obj(fontObj, Helvetica)
     }
-    offsets(fontObj) = out.size()
-    w(s"$fontObj 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\nendobj\n")
-    val xrefPos = out.size()
-    w(s"xref\n0 $total\n")
-    w("0000000000 65535 f \n")
-    (1 until total).foreach { i => w(f"${offsets(i)}%010d 00000 n \n") }
-    w(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
-    out.toByteArray
   }
 
-  private def hexStr(b: Array[Byte]): String =
-    "<" + b.map(x => f"${x & 0xff}%02X").mkString + ">"
 
   // ---------------------------------------- filter encoders (fixtures)
   /** PDF LZW encoder (TIFF variant, EarlyChange=1) — width schedule
@@ -486,44 +488,9 @@ object PdfWriter {
   def buildWithFilters(pages: Seq[Seq[String]], filters: Seq[String],
                        mediaBox: (Double, Double) = (612.0, 792.0)): Array[Byte] = {
     require(pages.nonEmpty && filters.nonEmpty)
-    val n = pages.size
-    val contents = pages.map(pageContent)
-    val out = new ByteArrayOutputStream(4096)
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    def fmtNum(d: Double): String =
-      if (d == d.floor && !d.isInfinite) d.toLong.toString else d.toString
-    val offsets = new Array[Long](n * 2 + 4)
-    val filterEntry =
-      if (filters.size == 1) s" /Filter /${filters.head}"
-      else s" /Filter [ ${filters.map("/" + _).mkString(" ")} ]"
-    w("%PDF-1.4\n%âãÏÓ\n")
-    offsets(1) = out.size(); w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    offsets(2) = out.size()
-    val kids = (0 until n).map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    w(s"2 0 obj\n<< /Type /Pages /Kids [ $kids ] /Count $n >>\nendobj\n")
-    val fontObj = 3 + 2 * n
-    (0 until n).foreach { i =>
-      val pageObj = 3 + 2 * i
-      val contObj = pageObj + 1
-      val (mw, mh) = mediaBox
-      offsets(pageObj) = out.size()
-      w(s"$pageObj 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 ${fmtNum(mw)} ${fmtNum(mh)} ] " +
-        s"/Resources << /Font << /F1 $fontObj 0 R >> >> /Contents $contObj 0 R >>\nendobj\n")
-      offsets(contObj) = out.size()
-      val body = filters.reverse.foldLeft(contents(i))((acc, f) => encodeFilter(f, acc))
-      w(s"$contObj 0 obj\n<< /Length ${body.length}$filterEntry >>\nstream\n")
-      out.write(body)
-      w("\nendstream\nendobj\n")
-    }
-    offsets(fontObj) = out.size()
-    w(s"$fontObj 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\nendobj\n")
-    val xrefPos = out.size()
-    val total = fontObj + 1
-    w(s"xref\n0 $total\n")
-    w("0000000000 65535 f \n")
-    (1 until total).foreach { i => w(f"${offsets(i)}%010d 00000 n \n") }
-    w(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
-    out.toByteArray
+    val fontObj = 3 + 2 * pages.size
+    classic(pages.map(p => Page(mediaBox, f1(fontObj), filtered(pageContent(p), filters))),
+      fontObj + 1)(_.obj(fontObj, Helvetica))
   }
 
   /** Encrypted build (standard security handler): same page/text
@@ -542,19 +509,10 @@ object PdfWriter {
                      mediaBox: (Double, Double) = (612.0, 792.0),
                      r6: Boolean = false): Array[Byte] = {
     require(pages.nonEmpty, "pdf needs at least one page")
-    val contents = pages.map(pageContent)
-    val boxes = Seq.fill(pages.size)(mediaBox)
-    val n = contents.size
-    val out = new ByteArrayOutputStream(4096)
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    def fmtNum(d: Double): String =
-      if (d == d.floor && !d.isInfinite) d.toLong.toString else d.toString
-
+    val n = pages.size
     val fontObj = 3 + 2 * n
     val infoObj = fontObj + 1
     val encObj = fontObj + 2
-    val total = encObj + 1
-    val offsets = new Array[Long](total)
 
     // deterministic key material
     val r = if (r6) 6 else if (aes) 4 else 3
@@ -586,57 +544,34 @@ object PdfWriter {
           Array.empty[Byte], Array.empty[Byte], Array.empty[Byte])
       }
 
-    w("%PDF-1.4\n%âãÏÓ\n")
-    offsets(1) = out.size(); w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    offsets(2) = out.size()
-    val kids = (0 until n).map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    w(s"2 0 obj\n<< /Type /Pages /Kids [ $kids ] /Count $n >>\nendobj\n")
-    (0 until n).foreach { i =>
-      val pageObj = 3 + 2 * i
-      val contObj = pageObj + 1
-      val (mw, mh) = boxes(i)
-      offsets(pageObj) = out.size()
-      w(s"$pageObj 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 ${fmtNum(mw)} ${fmtNum(mh)} ] " +
-        s"/Resources << /Font << /F1 $fontObj 0 R >> >> /Contents $contObj 0 R >>\nendobj\n")
-      offsets(contObj) = out.size()
-      val filtered = if (compress) deflate(contents(i)) else contents(i)
-      val body = PdfCrypt.encryptBytes(enc, contObj, 0, filtered)
-      val filter = if (compress) " /Filter /FlateDecode" else ""
-      w(s"$contObj 0 obj\n<< /Length ${body.length}$filter >>\nstream\n")
-      out.write(body)
-      w("\nendstream\nendobj\n")
+    val ps = pages.zipWithIndex.map { case (p, i) =>
+      val (body, filter) = filtered(pageContent(p), flate(compress))
+      Page(mediaBox, f1(fontObj), (PdfCrypt.encryptBytes(enc, 4 + 2 * i, 0, body), filter))
     }
-    offsets(fontObj) = out.size()
-    w(s"$fontObj 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\nendobj\n")
-    // Info dict: an encrypted STRING outside any stream
-    offsets(infoObj) = out.size()
-    val title = PdfCrypt.encryptBytes(enc, infoObj, 0,
-      s"Fixture Title $n".getBytes(ISO_8859_1))
-    w(s"$infoObj 0 obj\n<< /Title ${hexStr(title)} >>\nendobj\n")
-    // Encrypt dict: its own strings are NOT encrypted (§7.6.2)
-    offsets(encObj) = out.size()
-    if (r6)
-      w(s"$encObj 0 obj\n<< /Filter /Standard /V 5 /R 6 /Length 256 " +
-        s"/CF << /StdCF << /CFM /AESV3 /Length 32 >> >> /StmF /StdCF /StrF /StdCF " +
-        s"/P $perm /O ${hexStr(oEntry)} /U ${hexStr(uEntry)} " +
-        s"/OE ${hexStr(oeEntry)} /UE ${hexStr(ueEntry)} " +
-        s"/Perms ${hexStr(permsEntry)} >>\nendobj\n")
-    else {
-      val cf =
-        if (aes) " /CF << /StdCF << /CFM /AESV2 /Length 16 >> >> /StmF /StdCF /StrF /StdCF"
-        else ""
-      val v = if (aes) 4 else 2
-      w(s"$encObj 0 obj\n<< /Filter /Standard /V $v /R $r /Length 128 " +
-        s"/P $perm /O ${hexStr(oEntry)} /U ${hexStr(uEntry)}$cf >>\nendobj\n")
+    classic(ps, encObj + 1, trailer = s" /Info $infoObj 0 R /Encrypt $encObj 0 R " +
+      s"/ID [ ${hexStr(id0)} ${hexStr(id0)} ]") { e =>
+      e.obj(fontObj, Helvetica)
+      // Info dict: an encrypted STRING outside any stream
+      val title = PdfCrypt.encryptBytes(enc, infoObj, 0,
+        s"Fixture Title $n".getBytes(ISO_8859_1))
+      e.obj(infoObj, s"<< /Title ${hexStr(title)} >>")
+      // Encrypt dict: its own strings are NOT encrypted (§7.6.2)
+      e.obj(encObj,
+        if (r6)
+          s"<< /Filter /Standard /V 5 /R 6 /Length 256 " +
+            s"/CF << /StdCF << /CFM /AESV3 /Length 32 >> >> /StmF /StdCF /StrF /StdCF " +
+            s"/P $perm /O ${hexStr(oEntry)} /U ${hexStr(uEntry)} " +
+            s"/OE ${hexStr(oeEntry)} /UE ${hexStr(ueEntry)} " +
+            s"/Perms ${hexStr(permsEntry)} >>"
+        else {
+          val cf =
+            if (aes) " /CF << /StdCF << /CFM /AESV2 /Length 16 >> >> /StmF /StdCF /StrF /StdCF"
+            else ""
+          val v = if (aes) 4 else 2
+          s"<< /Filter /Standard /V $v /R $r /Length 128 " +
+            s"/P $perm /O ${hexStr(oEntry)} /U ${hexStr(uEntry)}$cf >>"
+        })
     }
-    val xrefPos = out.size()
-    w(s"xref\n0 $total\n")
-    w("0000000000 65535 f \n")
-    (1 until total).foreach { i => w(f"${offsets(i)}%010d 00000 n \n") }
-    w(s"trailer\n<< /Size $total /Root 1 0 R /Info $infoObj 0 R " +
-      s"/Encrypt $encObj 0 R /ID [ ${hexStr(id0)} ${hexStr(id0)} ] >>\n" +
-      s"startxref\n$xrefPos\n%%EOF\n")
-    out.toByteArray
   }
 
   /** Serialize a ToUnicode map as an Adobe CMap (§9.10.3): sorted
@@ -667,81 +602,6 @@ object PdfWriter {
     sb.toString.getBytes(ISO_8859_1)
   }
 
-  /** [[buildRaw]] with per-page font resources: each distinct
-    * [[Pdf.FontInfo]] becomes a font object (Type0 for 2-byte fonts)
-    * with its /ToUnicode CMap stream, and page dicts reference the SAME
-    * names the content streams use — the chunker's re-serialization path
-    * for font-mapped documents, keeping every chunk a self-contained
-    * extraction unit.
-    */
-  def buildRawFonts(contents: Seq[Array[Byte]], compress: Boolean,
-                    boxes: Seq[(Double, Double)],
-                    pageFonts: Seq[Map[String, Pdf.FontInfo]]): Array[Byte] = {
-    val n = contents.size
-    val out = new ByteArrayOutputStream(4096)
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    def fmtNum(d: Double): String =
-      if (d == d.floor && !d.isInfinite) d.toLong.toString else d.toString
-
-    val helv = 3 + 2 * n
-    // distinct FontInfos in first-appearance order → (fontObj, cmapObj)
-    val distinct = scala.collection.mutable.LinkedHashMap.empty[Pdf.FontInfo, (Int, Int)]
-    pageFonts.foreach(_.values.foreach { fi =>
-      if (!distinct.contains(fi)) {
-        val base = helv + 1 + 2 * distinct.size
-        distinct(fi) = (base, base + 1)
-      }
-    })
-    val total = helv + 1 + 2 * distinct.size
-    val offsets = new Array[Long](total)
-
-    w("%PDF-1.4\n%âãÏÓ\n")
-    offsets(1) = out.size(); w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    offsets(2) = out.size()
-    val kids = (0 until n).map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    w(s"2 0 obj\n<< /Type /Pages /Kids [ $kids ] /Count $n >>\nendobj\n")
-    (0 until n).foreach { i =>
-      val pageObj = 3 + 2 * i
-      val contObj = pageObj + 1
-      val (mw, mh) = boxes(i)
-      val fonts = pageFonts(i)
-      val entries = fonts.toSeq.sortBy(_._1)
-        .map { case (name, fi) => s"/$name ${distinct(fi)._1} 0 R" } ++
-        (if (fonts.contains("F1")) Nil else Seq(s"/F1 $helv 0 R"))
-      offsets(pageObj) = out.size()
-      w(s"$pageObj 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 ${fmtNum(mw)} ${fmtNum(mh)} ] " +
-        s"/Resources << /Font << ${entries.mkString(" ")} >> >> /Contents $contObj 0 R >>\nendobj\n")
-      offsets(contObj) = out.size()
-      val raw = contents(i)
-      val body = if (compress) deflate(raw) else raw
-      val filter = if (compress) " /Filter /FlateDecode" else ""
-      w(s"$contObj 0 obj\n<< /Length ${body.length}$filter >>\nstream\n")
-      out.write(body)
-      w("\nendstream\nendobj\n")
-    }
-    offsets(helv) = out.size()
-    w(s"$helv 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\nendobj\n")
-    distinct.foreach { case (fi, (fontObj, cmapObj)) =>
-      val subtype = if (fi.twoByte) "Type0" else "Type1"
-      val tu = fi.toUnicode.map(_ => s" /ToUnicode $cmapObj 0 R").getOrElse("")
-      offsets(fontObj) = out.size()
-      w(s"$fontObj 0 obj\n<< /Type /Font /Subtype /$subtype /BaseFont /Graft$tu >>\nendobj\n")
-      fi.toUnicode.foreach { m =>
-        val body = cmapBytes(fi.twoByte, m)
-        offsets(cmapObj) = out.size()
-        w(s"$cmapObj 0 obj\n<< /Length ${body.length} >>\nstream\n")
-        out.write(body)
-        w("\nendstream\nendobj\n")
-      }
-    }
-    val xrefPos = out.size()
-    w(s"xref\n0 $total\n")
-    w("0000000000 65535 f \n")
-    (1 until total).foreach { i => w(f"${offsets(i)}%010d 00000 n \n") }
-    w(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
-    out.toByteArray
-  }
-
   /** Type0/CID fixture: text shown as TWO-BYTE codes through a
     * generated /ToUnicode CMap (codes assigned per distinct char, offset
     * 0x0100 so no code equals its Unicode value) — the embedded-subset
@@ -755,19 +615,8 @@ object PdfWriter {
     val enc: Map[Char, Int] = chars.zipWithIndex.map { case (c, i) => c -> (0x0100 + i) }.toMap
     val toUni: Map[Int, String] = enc.map { case (c, code) => code -> c.toString }
     val fi = Pdf.FontInfo(twoByte = true, toUnicode = Some(toUni))
-    def hexShow(s: String): String =
-      "<" + s.map(c => f"${enc(c)}%04X").mkString + ">"
-    val contents = pages.map { lines =>
-      val sb = new StringBuilder
-      sb.append("BT\n/F1 12 Tf\n72 720 Td\n")
-      lines.zipWithIndex.foreach { case (l, i) =>
-        if (i > 0) sb.append("0 -14 Td\n")
-        sb.append(hexShow(l)).append(" Tj\n")
-      }
-      sb.append("ET")
-      sb.toString.getBytes(ISO_8859_1)
-    }
-    buildRawFonts(contents, compress, Seq.fill(pages.size)(mediaBox),
+    val contents = pages.map(textContent(_)(l => "<" + l.map(c => f"${enc(c)}%04X").mkString + ">"))
+    buildRaw(contents, compress, Seq.fill(pages.size)(mediaBox),
       Seq.fill(pages.size)(Map("F1" -> fi)))
   }
 
@@ -790,55 +639,34 @@ object PdfWriter {
   def buildRaw15(contents: Seq[Array[Byte]], compress: Boolean,
                  boxes: Seq[(Double, Double)]): Array[Byte] = {
     val n = contents.size
-    val out = new ByteArrayOutputStream(4096)
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    def fmtNum(d: Double): String =
-      if (d == d.floor && !d.isInfinite) d.toLong.toString else d.toString
     // numbering: 1..n content streams (streams may not live in an
     // ObjStm), n+1 the ObjStm, n+2 catalog, n+3 pages, n+4..2n+3 page
     // dicts, 2n+4 font (all compressed), 2n+5 the xref stream
     val objStm = n + 1; val catalog = n + 2; val pagesObj = n + 3
     def pageObj(i: Int) = n + 4 + i
     val fontObj = 2 * n + 4; val xrefObj = 2 * n + 5
-    val offsets = new Array[Long](xrefObj + 1)
+    val e = new Emitter("1.5", xrefObj + 1)
 
-    w("%PDF-1.5\n%âãÏÓ\n")
-    (0 until n).foreach { i =>
-      offsets(i + 1) = out.size()
-      val raw = contents(i)
-      val body = if (compress) deflate(raw) else raw
-      val filter = if (compress) " /Filter /FlateDecode" else ""
-      w(s"${i + 1} 0 obj\n<< /Length ${body.length}$filter >>\nstream\n")
-      out.write(body)
-      w("\nendstream\nendobj\n")
+    contents.zipWithIndex.foreach { case (raw, i) =>
+      val (body, filter) = filtered(raw, flate(compress))
+      e.stream(i + 1, body)(len => s"<< /Length $len$filter >>")
     }
     // the compressed object stream: header = N (objnum, offset) pairs,
     // offsets relative to /First
     val inner: Seq[(Int, String)] = Seq(
       catalog -> s"<< /Type /Catalog /Pages $pagesObj 0 R >>",
-      pagesObj -> (s"<< /Type /Pages /Kids [ " +
-        (0 until n).map(i => s"${pageObj(i)} 0 R").mkString(" ") +
-        s" ] /Count $n >>")) ++
-      (0 until n).map { i =>
-        val (mw, mh) = boxes(i)
-        pageObj(i) -> (s"<< /Type /Page /Parent $pagesObj 0 R " +
-          s"/MediaBox [ 0 0 ${fmtNum(mw)} ${fmtNum(mh)} ] " +
-          s"/Resources << /Font << /F1 $fontObj 0 R >> >> /Contents ${i + 1} 0 R >>")
-      } :+ (fontObj -> "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
+      pagesObj -> pageTree((0 until n).map(pageObj))) ++
+      (0 until n).map(i => pageObj(i) -> pageDict(pagesObj, boxes(i), f1(fontObj), i + 1)) :+
+      (fontObj -> Helvetica)
     val bodySb = new StringBuilder
     val innerOffs = inner.map { case (_, src) =>
       val o = bodySb.length; bodySb.append(src).append('\n'); o
     }
     val hdr = inner.zip(innerOffs)
       .map { case ((num, _), o) => s"$num $o" }.mkString(" ") + "\n"
-    val stmBody = deflate((hdr + bodySb).getBytes(ISO_8859_1))
-    offsets(objStm) = out.size()
-    w(s"$objStm 0 obj\n<< /Type /ObjStm /N ${inner.size} /First ${hdr.length} " +
-      s"/Filter /FlateDecode /Length ${stmBody.length} >>\nstream\n")
-    out.write(stmBody)
-    w("\nendstream\nendobj\n")
+    e.stream(objStm, deflate((hdr + bodySb).getBytes(ISO_8859_1)))(len =>
+      s"<< /Type /ObjStm /N ${inner.size} /First ${hdr.length} /Filter /FlateDecode /Length $len >>")
     // xref stream: W [1 4 2] rows for objects 0..xrefObj, Up-predicted
-    offsets(xrefObj) = out.size()
     val rowLen = 7
     val rows = new Array[Byte]((xrefObj + 1) * rowLen)
     def setRow(i: Int, typ: Int, f2: Long, f3: Int): Unit = {
@@ -852,9 +680,10 @@ object PdfWriter {
       rows(p + 6) = (f3 & 0xff).toByte
     }
     setRow(0, 0, 0, 65535)
-    (1 to objStm).foreach(i => setRow(i, 1, offsets(i), 0))
+    (1 to objStm).foreach(i => setRow(i, 1, e.offsets(i), 0))
     inner.zipWithIndex.foreach { case ((num, _), k) => setRow(num, 2, objStm, k) }
-    setRow(xrefObj, 1, offsets(xrefObj), 0)
+    val xrefAt = e.pos
+    setRow(xrefObj, 1, xrefAt, 0)
     // Predictor 12: every row Up-filtered (type byte 2, delta vs row above)
     val pred = new Array[Byte]((xrefObj + 1) * (rowLen + 1))
     (0 to xrefObj).foreach { r =>
@@ -864,13 +693,11 @@ object PdfWriter {
         pred(r * (rowLen + 1) + 1 + c) = (rows(r * rowLen + c) - above).toByte
       }
     }
-    val xBody = deflate(pred)
-    w(s"$xrefObj 0 obj\n<< /Type /XRef /Size ${xrefObj + 1} /Root $catalog 0 R " +
-      s"/W [ 1 4 2 ] /Filter /FlateDecode " +
-      s"/DecodeParms << /Predictor 12 /Columns $rowLen >> " +
-      s"/Length ${xBody.length} >>\nstream\n")
-    out.write(xBody)
-    w(s"\nendstream\nendobj\nstartxref\n${offsets(xrefObj)}\n%%EOF\n")
-    out.toByteArray
+    e.stream(xrefObj, deflate(pred))(len =>
+      s"<< /Type /XRef /Size ${xrefObj + 1} /Root $catalog 0 R " +
+        s"/W [ 1 4 2 ] /Filter /FlateDecode " +
+        s"/DecodeParms << /Predictor 12 /Columns $rowLen >> /Length $len >>")
+    e.w(s"startxref\n$xrefAt\n%%EOF\n")
+    e.bytes
   }
 }

@@ -483,6 +483,17 @@ class PdfKernelSpec extends AnyFunSuite {
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
     val e = intercept[Pdf.ParseError](Pdf.pageImages(Pdf.parseDoc(patched)))
     assert(e.getMessage.contains("G4"), e.getMessage)
+    // /Resources is inheritable (§7.7.3.4): an /XObject dict on the
+    // parent /Pages node reaches a leaf page that declares none
+    val one = new String(PdfWriter.buildWithImages(Seq(Seq("inherited")),
+      Seq(Seq(PdfWriter.ImageSpec("Strip", 64, 9, "gray", grayPx))), compress = false), ISO_8859_1)
+    val xobj = "/XObject << /Strip 5 0 R >>"
+    assert(one.contains(s" $xobj >> /Contents"), "fixture must carry the page's XObject dict")
+    val inherited = one.replace(s" $xobj", "")
+      .replace("/Kids [ 3 0 R ] /Count 1", s"/Kids [ 3 0 R ] /Count 1 /Resources << $xobj >>")
+    val got = Pdf.pageImages(Pdf.parseDoc(inherited.getBytes(ISO_8859_1)))
+    assert(got.map(i => (i.pageIdx, i.name, i.codec)) === Vector((0, "Strip", "gray")))
+    assert(got.head.data.toSeq === grayPx.toSeq)
   }
 
   test("outlines: bookmark tree flattens in reading order; UTF-16 titles; cycles safe") {
@@ -546,6 +557,8 @@ class PdfKernelSpec extends AnyFunSuite {
     sb.append(s"trailer\n<< /Size ${n + 2} /Root 1 0 R >>\nstartxref\n$xrefAt\n%%EOF\n")
     val deep = Pdf.parseDoc(sb.toString.getBytes(ISO_8859_1))
     assert(Pdf.pages(deep) === Vector(), "deep chain terminates via depth bound")
+    assert(Pdf.pageLinks(deep) === Vector())
+    assert(Pdf.pageImages(deep) === Vector())
   }
 
   test("pageLinks: URI annotations extract per page; GoTo and junk skipped") {
@@ -643,5 +656,84 @@ class PdfKernelSpec extends AnyFunSuite {
     val e2 = intercept[Pdf.ParseError](Pdf.parseDoc(corrupted))
     assert(e2.getMessage.contains("Perms integrity"),
       s"corrupt UE must fail the Perms check, got: ${e2.getMessage}")
+  }
+
+  test("builder bytes are pinned: seeded calls to every public builder hash to fixed digests") {
+    import graft.kernel.PdfWriter.ImageSpec
+    def sha(b: Array[Byte]): Array[Byte] =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b)
+    // one digest per builder: SHA-256 over the concatenated per-call digests
+    val calls = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Array[Byte]]]
+    def pin(name: String, bytes: Array[Byte]): Unit =
+      calls(name) = calls.getOrElse(name, Vector.empty) :+ sha(bytes)
+    val alphabet = "abcXYZ 019.,()\\\n\ré"
+    for (round <- 0 until 24) {
+      val rnd = new scala.util.Random(round)
+      val compress = round % 2 == 0
+      def str(max: Int): String =
+        Seq.fill(1 + rnd.nextInt(max))(alphabet(rnd.nextInt(alphabet.length))).mkString
+      val n = 1 + rnd.nextInt(if (round % 6 == 5) 14 else 4)
+      val pages = Seq.fill(n)(Seq.fill(1 + rnd.nextInt(3))(str(20)))
+      val box = Seq((612.0, 792.0), (595.5, 842.25), (100.0, 200.75))(round % 3)
+      val boxes = Seq.fill(n)(Seq((612.0, 792.0), (300.5, 400.0))(rnd.nextInt(2)))
+      val contents = pages.map(PdfWriter.pageContent)
+      def font(): Pdf.FontInfo = Pdf.FontInfo(rnd.nextBoolean(),
+        if (rnd.nextInt(3) == 0) None
+        else Some(Seq.fill(1 + rnd.nextInt(5))(rnd.nextInt(0x20000) -> str(3)).toMap))
+      val fonts = Seq.fill(n)(Seq.fill(rnd.nextInt(3))(
+        Seq("F1", "F2", "G7")(rnd.nextInt(3)) -> font()).toMap)
+      pin("build", PdfWriter.build(pages, compress, box))
+      pin("build15", PdfWriter.build15(pages, compress, box))
+      pin("buildRaw", PdfWriter.buildRaw(contents, compress, boxes))
+      pin("buildRaw15", PdfWriter.buildRaw15(contents, compress, boxes))
+      pin("buildRaw fonts", PdfWriter.buildRaw(contents, compress, boxes, fonts))
+      val noFonts = PdfWriter.buildRaw(contents, compress, boxes, Seq.fill(n)(Map.empty))
+      assert(noFonts.toSeq === PdfWriter.buildRaw(contents, compress, boxes).toSeq,
+        "empty font maps must write buildRaw's bytes")
+      pin("buildType0", PdfWriter.buildType0(pages, compress, box))
+      pin("buildWithLinks", PdfWriter.buildWithLinks(pages,
+        Seq.fill(n)(Seq.fill(rnd.nextInt(3))("https://h.example/" + str(12))), compress))
+      val outline = (0 until rnd.nextInt(6)).foldLeft(Vector.empty[(Int, String)]) { (acc, _) =>
+        val d = if (acc.isEmpty) 0 else rnd.nextInt(acc.last._1 + 2)
+        acc :+ (d -> (if (rnd.nextBoolean()) "T " + str(10).filter(c => c >= 0x20 && c < 0x7f)
+                      else "Sección " + str(6)))
+      }
+      pin("buildWithOutlines", PdfWriter.buildWithOutlines(pages, outline, compress))
+      val images = Seq.fill(n)(Seq.tabulate(rnd.nextInt(3)) { k =>
+        val (w, h) = (8 + rnd.nextInt(24), 4 + rnd.nextInt(12))
+        Seq("g4", "gray", "jpeg")(rnd.nextInt(3)) match {
+          case "g4"   => ImageSpec(s"G$k", w, h, "g4", Array.fill(w * h)(rnd.nextInt(2).toByte))
+          case "gray" => ImageSpec(s"Y$k", w, h, "gray", Array.fill(w * h)(rnd.nextInt(256).toByte))
+          case _      => ImageSpec(s"J$k", w, h, "jpeg",
+            graft.fixtures.MediaGen.jpeg(Array.fill(w * h)(rnd.nextInt(256)), w, h))
+        }
+      })
+      pin("buildWithImages", PdfWriter.buildWithImages(pages, images, compress))
+      val filters = Seq.fill(1 + rnd.nextInt(3))(Seq("FlateDecode", "LZWDecode",
+        "RunLengthDecode", "ASCIIHexDecode", "ASCII85Decode")(rnd.nextInt(5)))
+      pin("buildWithFilters", PdfWriter.buildWithFilters(pages, filters, box))
+      for (cipher <- Seq("rc4", "aesv2", "r6"); userPw <- Seq("", "user"))
+        pin("buildEncrypted", PdfWriter.buildEncrypted(pages, compress,
+          aes = cipher == "aesv2", userPw = userPw, mediaBox = box, r6 = cipher == "r6"))
+      pin("chunkBytes", Pdf.chunkBytes(PdfWriter.buildType0(pages, compress, box)).reduce(_ ++ _))
+      pin("chunkBytes", Pdf.chunkBytes(PdfWriter.build15(pages, compress, box)).reduce(_ ++ _))
+    }
+    val got = calls.map { case (k, v) => k -> sha(v.reduce(_ ++ _)).map("%02x".format(_)).mkString }
+    // computed at the commit before the writer shared one emitter
+    val pinned = Map(
+      "build" -> "a27bae063b9a49a0e3abb0a87a23e7fb4dd93013f676534296c8f3c431e1d79b",
+      "build15" -> "fd318b92b7d176ff81d4185342561174db097769df0f39fb3250f8ec09b3690f",
+      "buildRaw" -> "5e5f75274deec5cfa2bff0582aea13a179fe1f7550fbc1b8de3ff81edd038c78",
+      "buildRaw15" -> "1a7e7dddc08b3f61c0285589c119483a5b54dcc0468473a4fb38c4c7fc272293",
+      "buildRaw fonts" -> "65943c43fe5307fbe177e8ff3632c92e3d0d56d5bd9f58648d65b1536317cd71",
+      "buildType0" -> "e90bbb799cf6b3235ed91f9f9700a43505d9667de95030b4dbe293a527188faf",
+      "buildWithLinks" -> "29ac632d84e8c9d5f1af195ff254cc43a9808df6458451e7c42f8dc4ecdb9c77",
+      "buildWithOutlines" -> "d522f2c647bec54c0dbf91c7f2e356275b4a9ad70e602ebc7e1f6c0607068be6",
+      "buildWithImages" -> "0936476432ffabf8968fafcd3952172a50ab47b608a583edf4a1c3bc086a3225",
+      "buildWithFilters" -> "2ad41e75c455913c654066bd4dc1afc632ab4638bf4e729761295e4e4761e85e",
+      "buildEncrypted" -> "d78522ef73120a097c362c1bf226da56f23d198152ba91b23110db440f773392",
+      "chunkBytes" -> "01fe70bee6e90e0aa954dae4980e585b4d07a7522658e400d6ffa24b521bd3ca")
+    got.foreach { case (k, h) => assert(h === pinned.getOrElse(k, ""), s"$k bytes drifted") }
+    assert(got.keySet === pinned.keySet)
   }
 }
